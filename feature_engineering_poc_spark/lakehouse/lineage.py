@@ -1,7 +1,8 @@
 """Checkpointed per-partition lineage log — resumable maintenance jobs.
 
 Every maintenance job (compaction, clustering, merge) logs one JSON
-record per completed work unit (a table partition, or a file group)
+record per completed work unit (a table partition, a file group, or a
+MERGE rewrite batch)
 to ``metadata/lineage/<job_id>.jsonl``. Records carry file-level
 metrics (files rewritten, bytes compacted, rows merged) AND the new
 manifest entries the unit produced, so a resumed job can skip the unit

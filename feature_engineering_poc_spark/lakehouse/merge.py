@@ -14,54 +14,40 @@ Semantics (SQL MERGE): source rows carry an optional ``_op`` column in
   ``duplicate_policy="last"`` dedupe via salted two-phase aggregation
   (skew.py) keyed on a ``_seq`` ordering column when present.
 
-Scale shape:
+Scale shape — ONE rewrite path: batches packed under the broadcast cap.
+The cap is the build-side memory budget (as in CAMEL's broadcast
+budget); it bounds both the planning rows the driver holds and every
+batch's broadcast.
 
-1. PRUNE (metadata): manifest min/max doc_id overlap vs the source key
-   range → candidate files. No data read.
-2. PROBE (one column-pruned job): read ONLY doc_id + input_file_name
-   from candidates, inner-join source keys → the exact touched-file
-   set + the matched-keys DataFrame (stays distributed; only the
-   distinct file list is collected, as in Iceberg driver planning).
-3. REWRITE per partition unit (resumable, lineage-checkpointed): read
-   touched files, LEFT join the unit's OWN slice of the effective
-   source on doc_id (the probe join assigns every matched key to the
-   partition unit whose files hold it, so each unit broadcasts ONLY
-   its rows — per-unit volume is bounded by that unit's matched rows
-   at ANY total source size; AQE skew-join covers the shuffle
-   fallback for a unit whose slice exceeds the heap-aware cap —
-   key-level skew was already defused by the salted dedupe), apply
-   update/delete, stream straight to sorted parquet — ZERO shuffle on
-   the broadcast path (coalesce + in-task sort; no persist, no range
-   sampling, no exchange — the join output crosses the memory bus
-   exactly once).
+1. PROFILE. One observed no-op pass over the prepared source (it also
+   fills the source's cache) gives the key range, the row and upsert
+   counts and the doc_ids' total bytes. Manifest min/max doc_id overlap
+   with the key range gives the candidate files (no data read).
+2. PROBE. A column-pruned scan of the candidates (doc_id + file path)
+   joins the source keys. If the planning collect fits the cap
+   (``_driver_bytes``), ONE collect brings back every source key and
+   every match as (doc_id, size estimate, op flags, file id); the
+   counts, the duplicate check and the null-``source`` insert check
+   then run on the driver. A larger source is planned distributed: a
+   countDistinct duplicate check, the probe join persisted once and
+   grouped per touched file in one collect. Either way every touched
+   file gets its exact matched bytes, and no write starts before the
+   checks pass.
+3. REWRITE. Touched files are packed first-fit-decreasing by matched
+   bytes into batches under the cap (plans/binpack). A batch is one
+   broadcast join of its files against its own slice of the source plus
+   one ``partitionBy`` write (``source`` is immutable under update, so
+   a row's own column routes it back to its partition). Files whose
+   matched rows alone exceed the cap share one shuffle-join batch.
+   Not-matched upserts are unioned into batch 0's write, with a fan-out
+   sized from the exact insert volume. Batches are deterministic for a
+   given parent snapshot and source, and each one is a lineage unit, so
+   a rerun under the same job_id skips the batches that finished.
+4. COMMIT: manifest − rewritten files + batch outputs, one atomic
+   snapshot swap. Old snapshots are untouched (snapshot isolation).
 
-   Why per-unit KEY assignment and not a min/max doc_id range filter:
-   the table layout hash-distributes doc_ids across a partition's
-   files (generator.write_token_table repartitions round-robin), so
-   every file's [min_doc_id, max_doc_id] envelope spans nearly the
-   whole key range and a range filter would keep ~everything. The
-   probe join already knows the exact file (hence unit) of every
-   matched key; carrying that through bounds each unit's join side
-   exactly, independent of physical layout.
-4. INSERT unit: source anti-join matched keys → ONE partitionBy write.
-5. COMMIT: manifest − touched files + rewritten + inserted; atomic
-   snapshot swap. Old snapshots untouched (snapshot isolation).
-
-Serial driver cost (the Amdahl S term that caps scaling efficiency) is
-exactly THREE blocking aggregations before the rewrite fan-out:
-
-- one combined agg over the persisted source (key range + row count +
-  duplicate detection — previously four separate jobs);
-- one grouped collect over the persisted probe join (touched-file set
-  AND per-op matched counts in the same result — previously two);
-- one tiny grouped agg over the persisted EFFECTIVE source (matched
-  rows only, delete payloads dropped, tagged with their rewrite unit)
-  whose materialization replaces a full-source shuffle join in every
-  rewrite unit and yields an exact PER-UNIT broadcast-size estimate.
-
-The insert path is a single ``partitionBy`` write whose row count comes
-from the parquet footers the manifest needs anyway (previously a
-count job + a distinct-partitions job + one write per partition).
+The summary records the seconds of each phase (``phases``), the number
+of batches and how many of them were shuffle joins.
 """
 
 from __future__ import annotations
@@ -69,24 +55,40 @@ from __future__ import annotations
 import logging
 import os
 import time
-from collections import defaultdict
+import zlib
 from concurrent.futures import ThreadPoolExecutor
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.binpack import pack_bins
 from .lineage import LineageLog
 from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
 from .skew import salted_latest_by_key
 from .stats import file_stats_rows
 
-# Target bytes per insert-path output task; sizes the insert write's
-# fan-out from the source volume estimate (overridable for tests /
-# unusual deployments).
+# Target bytes per insert-path output task; sizes the insert fan-out
+# from the exact insert volume (overridable for tests / unusual
+# deployments).
 INSERT_TARGET_BYTES = int(
     os.environ.get("FEPOC_MERGE_INSERT_TARGET", str(128 * 1024 * 1024))
 )
+
+# Size estimate of a source row: 4 bytes per token plus ROW_BYTES.
+ROW_BYTES = 64
+
+# Fixed-width bytes of one collected planning row besides its doc_id:
+# the doc_id's offset and the size estimate (4 each), the file id (8)
+# and three flags with their validity bits (see _driver_bytes).
+DRIVER_ROW_BYTES = 20
+
+
+def _upsert() -> F.Column:
+    return F.col("_op") == "upsert"
 
 
 class DuplicateSourceKeys(ValueError):
@@ -94,22 +96,6 @@ class DuplicateSourceKeys(ValueError):
 
 
 logger = logging.getLogger(__name__)
-_TIMING = os.environ.get("FEPOC_MERGE_TIMING") == "1"
-
-
-class _Phase:
-    """Env-gated phase timer (FEPOC_MERGE_TIMING=1) for Amdahl hunting."""
-
-    def __init__(self, name: str):
-        self.name = name
-
-    def __enter__(self):
-        self.t0 = time.time()
-        return self
-
-    def __exit__(self, *exc):
-        if _TIMING:
-            print(f"MERGE_PHASE {self.name} {time.time() - self.t0:.2f}s", flush=True)
 
 
 def _parse_size(s: str) -> int:
@@ -130,10 +116,10 @@ def _parse_size(s: str) -> int:
 
 
 def _broadcast_cap(spark: SparkSession) -> int:
-    """Per-rewrite-unit broadcast cap, derived from the LIVE JVM heap.
+    """Per-batch broadcast cap, derived from the LIVE JVM heap.
 
     ``FEPOC_MERGE_BROADCAST_CAP`` overrides. Otherwise: heap/16 — up to
-    8 rewrite units broadcast concurrently (ThreadPoolExecutor below),
+    8 rewrite batches broadcast concurrently (ThreadPoolExecutor below),
     and the in-heap hash relation costs ~2× the raw estimate, so worst
     case ≈ heap/2 of broadcast residency. Clamped to 80% of
     ``spark.driver.maxResultSize`` when one is set (broadcast relations
@@ -166,9 +152,9 @@ def _prepare_source(
 ) -> DataFrame:
     """Normalise source columns; dedupe under policy="last".
 
-    Under policy="error" the duplicate CHECK is deferred to the caller's
-    combined profile aggregation (count vs count_distinct) so it shares
-    a job with the key-range/size probe instead of running its own.
+    Under policy="error" the duplicate CHECK is deferred to planning
+    (driver-side on the collected keys, or one countDistinct job when
+    the merge plans distributed).
     """
     cols = set(source_df.columns)
     if "_op" not in cols:
@@ -188,9 +174,7 @@ def _prepare_source(
 def _apply_merge(target_df: DataFrame, src_side) -> DataFrame:
     """LEFT-join the (aliased s_*) source side onto target rows and
     apply MERGE semantics: deletes drop, upserts replace tokens/n_tok,
-    unmatched rows pass through. Shared by the per-unit and the
-    whole-source-broadcast rewrite paths — the join shape is identical,
-    only the source side's extent differs."""
+    unmatched rows pass through."""
     joined = target_df.alias("t").join(
         src_side, F.col("t.doc_id") == F.col("s_doc_id"), "left"
     )
@@ -209,64 +193,276 @@ def _apply_merge(target_df: DataFrame, src_side) -> DataFrame:
     )
 
 
-def _rewrite_all_broadcast(spark, src, pending, out_root, log) -> None:
-    """Small-source rewrite: ALL pending units in ONE Spark job.
+def _duplicate_keys(example) -> DuplicateSourceKeys:
+    return DuplicateSourceKeys(
+        f"source has duplicate doc_id (e.g. {example}); "
+        "pass duplicate_policy='last' to dedupe"
+    )
 
-    The whole prepared source (< one broadcast cap by the caller's
-    estimate) is broadcast once; every touched file across every
-    partition unit streams through the same left join, deletes drop,
-    and ``partitionBy`` routes each surviving row back to its partition
-    dir (`source` is immutable under update, so the row's own column IS
-    its partition). One footer-stats pass covers all outputs; lineage
-    then records the same per-partition units the per-unit path would,
-    so resume/commit assembly are shape-identical.
+
+def _null_source_inserts() -> ValueError:
+    # a null `source` would be written under the dynamic-partition
+    # marker directory and read back as the literal marker string,
+    # silently diverging from the row's actual (null) column
+    return ValueError(
+        "merge source contains rows with null `source` "
+        "(partition column); inserts must carry a partition value"
+    )
+
+
+class _DriverPlan:
+    """Planning from ONE collect of the source keys and their matches.
+
+    The collected rows are the prepared source's keys (``_f = -1``) plus
+    one row per probe match (``_f`` = the matched file's id, see
+    ``_file_ids``): doc_id, the row's size estimate, the op flags, the
+    null-``source`` flag. Paths never travel per row, so the collect
+    costs ``_driver_bytes`` at most (every key matches at most one file,
+    as doc_ids are unique in the table).
     """
-    files_all = [f for _, fs in pending for f in fs]
-    target_all = spark.read.schema(TOKEN_SCHEMA).parquet(*files_all)
-    src_side = F.broadcast(
-        src.select(
+
+    def __init__(self, spark, src, probe_scan, file_ids):
+        self.spark, self.src = spark, src
+        keys = src.select(
+            "doc_id",
+            _est_bytes_col().cast("int").alias("_bytes"),
+            F.col("_op").eqNullSafe("upsert").alias("_up"),
+            F.col("_op").eqNullSafe("delete").alias("_del"),
+            (F.col("_op").eqNullSafe("upsert") & F.col("source").isNull()).alias("_null"),
+        )
+        rows = keys.withColumn("_f", F.lit(-1).cast("long"))
+        if probe_scan is not None:
+            hits = probe_scan.join(F.broadcast(keys), "doc_id").withColumn("_f", F.crc32("file_path"))
+            rows = rows.unionByName(hits.select(*rows.columns))
+        t = _collect_arrow(rows)
+        f = t["_f"].to_numpy()
+        keys_t, hits_t = t.filter(pa.array(f < 0)), t.filter(pa.array(f >= 0))
+        self.keys, self.hit_ids, self.hit_files = keys_t, hits_t["doc_id"], f[f >= 0]
+        self.file_ids = file_ids
+        matched = pc.is_in(keys_t["doc_id"], value_set=self.hit_ids).to_numpy(zero_copy_only=False)
+        up, dl, null = (keys_t[c].to_numpy(zero_copy_only=False) for c in ("_up", "_del", "_null"))
+        inserts = up & ~matched
+        if (inserts & null).any():
+            raise _null_source_inserts()
+        self.insert_keys = keys_t["doc_id"].filter(pa.array(inserts))
+        self.updated = int((up & matched).sum())
+        self.deleted = int((dl & matched).sum())
+        self.inserted = int(inserts.sum())
+        self.insert_bytes = int(keys_t["_bytes"].to_numpy()[inserts].sum())
+        ids, at = np.unique(self.hit_files, return_inverse=True)
+        per_file = np.bincount(at, weights=hits_t["_bytes"].to_numpy(), minlength=len(ids))
+        path_of = {i: p for p, i in file_ids.items()}
+        self.file_bytes = {path_of[i]: int(b) for i, b in zip(ids.tolist(), per_file)}
+
+    def duplicate(self):
+        """A doc_id that occurs more than once in the source, or None."""
+        counts = pc.value_counts(self.keys["doc_id"])
+        dup = counts.filter(pc.greater(counts.field("counts"), 1))
+        return dup[0]["values"].as_py() if len(dup) else None
+
+    def source_slice(self, i: int, files: list[str]):
+        """(source rows keyed in ``files``, insert rows or None).
+
+        Both come out of ONE join against a driver-built key table, so
+        batch 0's write, which fuses them, broadcasts that table once:
+        insert keys carry ``_k = 'insert'`` and are selected by
+        ``concat_ws(':', _k, _op) = 'insert:upsert'``. That predicate
+        spans both join sides, so it cannot be pushed into the key
+        table; a plain ``_k = 'insert'`` filter would be, which gives
+        two different key tables and one more broadcast job per merge
+        (the default-cap job budget in tests/test_merge.py fails then).
+        """
+        ids = [self.file_ids[_norm(p)] for p in files]
+        keys = pc.unique(self.hit_ids.filter(pa.array(np.isin(self.hit_files, ids))))
+        ins = self.insert_keys if i == 0 else self.insert_keys.slice(0, 0)
+        key_df = self.spark.createDataFrame(pa.table({
+            "doc_id": pa.concat_arrays([keys, ins.combine_chunks()]).cast(pa.string()),
+            "_k": pa.array([None] * len(keys) + ["insert"] * len(ins), pa.string()),
+        }))
+        joined = self.src.join(F.broadcast(key_df), "doc_id")
+        inserts = joined.where(F.concat_ws(":", "_k", "_op") == "insert:upsert")
+        # insert keys ride in the rewrite side without payload (they
+        # match no target row)
+        side = joined.withColumn("_op", F.when(F.col("_k").isNull(), F.col("_op")))
+        return side, inserts if len(ins) else None
+
+    def close(self) -> None:
+        """Nothing persisted."""
+
+
+class _DistributedPlan:
+    """Planning for a source above the driver budget, shaped like the
+    per-partition plan it replaced: the probe join is persisted once and
+    grouped per touched file in one collect; after packing, the matched
+    source rows are tagged with their batch and persisted once, so each
+    batch takes its slice by a cache-local filter and the inserts
+    anti-join the persisted matches."""
+
+    def __init__(self, spark, src, prof, probe_scan, max_touched_files):
+        self.spark, self.src = spark, src
+        self.eff_src = None
+        totals = dict.fromkeys(("n_up", "n_del", "up_bytes", "n_null"), 0)
+        src_keys = src.select(
+            "doc_id", "_op", _est_bytes_col().alias("_bytes"),
+            (_upsert() & F.col("source").isNull()).cast("long").alias("_null"),
+        )
+        if probe_scan is None:
+            self.matched = spark.createDataFrame([], "doc_id string, file_path string, "
+                                                 "_op string, _bytes long, _null long")
+        else:
+            self.matched = probe_scan.join(src_keys, "doc_id")
+        self.matched = self.matched.persist()
+        per_file = self.matched.groupBy("file_path").agg(
+            F.sum(_upsert().cast("long")).alias("n_up"),
+            F.sum((F.col("_op") == "delete").cast("long")).alias("n_del"),
+            F.sum("_bytes").alias("bytes"),
+            F.sum(F.when(_upsert(), F.col("_bytes"))).alias("up_bytes"),
+            F.sum("_null").alias("n_null"),
+        )
+        # at most cap+1 file rows ever reach the driver; over the cap the
+        # caller rewrites every candidate, so only the totals are needed
+        # (one more aggregation, rare path)
+        rows = per_file.limit(max_touched_files + 1).collect()
+        if len(rows) > max_touched_files:
+            self.file_bytes = None
+            rows = per_file.agg(*[F.sum(c).alias(c) for c in totals]).collect()
+        else:
+            self.file_bytes = {r.file_path: int(r.bytes) for r in rows}
+        for r in rows:
+            for c in totals:
+                totals[c] += int(r[c] or 0)
+        if prof["n_null"] > totals["n_null"]:
+            self.close()
+            raise _null_source_inserts()
+        self.updated, self.deleted = totals["n_up"], totals["n_del"]
+        self.inserted = int(prof["n_up"] - totals["n_up"])
+        self.insert_bytes = int((prof["up_bytes"] or 0) - totals["up_bytes"])
+
+    def source_slice(self, i: int, files: list[str]):
+        """(source rows keyed in ``files``, insert rows or None); needs
+        ``assign_batches`` first."""
+        side = self.eff_src.where(F.col("_batch") == i)
+        inserts = None
+        if i == 0 and self.inserted:
+            inserts = self.src.where(_upsert()).join(
+                self.matched.select("doc_id"), "doc_id", "left_anti")
+        return side, inserts
+
+    def assign_batches(self, batches) -> None:
+        """Tag every matched source row with its batch and persist the
+        tagged rows once (delete rows shed their payload). The
+        ``distinct`` guards against a key probed in more than one file
+        of a malformed table."""
+        file_batch = self.spark.createDataFrame(
+            [(_norm(f), i) for i, (files, _) in enumerate(batches) for f in files],
+            "file_path string, _batch int",
+        )
+        tags = self.matched.join(F.broadcast(file_batch), "file_path").select("doc_id", "_batch")
+        self.eff_src = (
+            self.src.join(tags.distinct(), "doc_id")
+            .select(
+                "doc_id",
+                F.when(_upsert(), F.col("tokens")).alias("tokens"),
+                F.when(_upsert(), F.col("n_tok")).alias("n_tok"),
+                "_op", "_batch",
+            )
+            .persist()
+        )
+
+    def close(self) -> None:
+        self.matched.unpersist()
+        if self.eff_src is not None:
+            self.eff_src.unpersist()
+
+
+def _est_bytes_col() -> F.Column:
+    """Per-row size estimate; deletes only carry their key."""
+    return F.lit(ROW_BYTES) + 4 * F.when(_upsert(), F.coalesce("n_tok", F.lit(0))).otherwise(0)
+
+
+def _driver_bytes(n: int, key_bytes: int) -> int:
+    """Upper bound of the driver-side planning collect: one key row plus
+    at most one match row per source row, each the doc_id's UTF-8 bytes
+    plus ``DRIVER_ROW_BYTES`` of fixed-width columns."""
+    return 2 * (key_bytes + DRIVER_ROW_BYTES * n)
+
+
+def _file_ids(paths: list[str]) -> dict[str, int] | None:
+    """Each path's CRC-32 — Spark's ``crc32`` of the probe's decoded path
+    gives the same value, so a probe match carries 8 bytes instead of its
+    path — or None when two candidates collide (the merge then plans
+    distributed)."""
+    ids = {p: zlib.crc32(p.encode()) for p in paths}
+    return ids if len(set(ids.values())) == len(ids) else None
+
+
+def _collect_arrow(df: DataFrame) -> pa.Table:
+    """The driver-planning collect (tests wrap it to inspect the rows)."""
+    return df.toArrow()
+
+
+def _profile(src: DataFrame) -> dict:
+    """ONE pass over the prepared source (which also fills its cache):
+    key range, row counts, upsert bytes, null-``source`` upserts and the
+    doc_ids' total UTF-8 bytes, gathered as observed metrics of a no-op
+    write — no shuffle, and no key leaves the executors."""
+    obs = Observation()
+    src.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.min("doc_id").alias("lo"),
+        F.max("doc_id").alias("hi"),
+        F.count(F.when(_upsert(), 1)).alias("n_up"),
+        F.sum(F.when(_upsert(), _est_bytes_col())).alias("up_bytes"),
+        F.count(F.when(_upsert() & F.col("source").isNull(), 1)).alias("n_null"),
+        F.sum(F.octet_length("doc_id")).alias("key_bytes"),
+    ).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+def _write_batch(
+    spark, files, side, broadcast, inserts, n_ins, out_dir, target_rows
+) -> list[tuple]:
+    """ONE job: rewrite ``files`` against ``side`` (broadcast or
+    shuffle-joined), union the insert rows, route every row to its
+    ``_part=<source>`` directory. Returns ``(file, partition)`` pairs."""
+    parts = []
+    if files:
+        side = side.select(
             F.col("doc_id").alias("s_doc_id"),
-            F.when(F.col("_op") == "upsert", F.col("tokens")).alias("s_tokens"),
-            F.when(F.col("_op") == "upsert", F.col("n_tok")).alias("s_n_tok"),
+            F.when(_upsert(), F.col("tokens")).alias("s_tokens"),
+            F.when(_upsert(), F.col("n_tok")).alias("s_n_tok"),
             F.col("_op").alias("s_op"),
         )
-    )
-    rewritten = _apply_merge(target_all, src_side)
-    out_dir = out_root / "_rewrite"
-    # coalesce propagates upstream: collapsing to files/2 tasks would
-    # also run the scan+join+encode on that few cores. Halve the file
-    # count only once it exceeds the core count; below that, one task
-    # per input file keeps the single job fully parallel.
-    n_out = max(
-        min(len(files_all), spark.sparkContext.defaultParallelism),
-        len(files_all) // 2,
-    )
-    with _Phase("rewrite_write"):
-        (
-            rewritten.withColumn("_part", F.col("source"))
-            .coalesce(n_out)
-            .sortWithinPartitions("_part", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("_part")
-            .parquet(str(out_dir))
+        rewritten = _apply_merge(
+            spark.read.schema(TOKEN_SCHEMA).parquet(*files),
+            F.broadcast(side) if broadcast else side,
         )
-    pairs = []
-    for d in sorted(out_dir.glob("_part=*")):
-        part_val = unquote(d.name.split("=", 1)[1])
-        pairs.extend((f, part_val) for f in list_parquet_files(d))
-    with _Phase("rewrite_stats"):
-        stats_all = file_stats_rows(spark, pairs)
-    by_unit: dict[str, list[dict]] = defaultdict(list)
-    for s in stats_all:
-        by_unit[s["partition"]].append(s)
-    for part, files_p in pending:
-        new_rows = by_unit.get(part, [])  # empty = every row deleted
-        log.mark_unit_done(
-            f"rewrite:{part}",
-            files_in=files_p,
-            new_manifest_rows=new_rows,
-            metrics={"files_rewritten": len(files_p), "files_written": len(new_rows)},
-        )
+        if broadcast:
+            # ZERO shuffle: each scan split streams through the join, a
+            # small in-task sort and the parquet encoder. coalesce
+            # propagates upstream, so halve the task count only once it
+            # exceeds the core count.
+            rewritten = rewritten.coalesce(
+                max(min(len(files), spark.sparkContext.defaultParallelism), len(files) // 2)
+            )
+        parts.append(rewritten)
+    if inserts is not None:
+        parts.append(inserts.select("doc_id", "tokens", "n_tok", "source").coalesce(n_ins))
+    out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    writer = out.withColumn("_part", F.col("source")).sortWithinPartitions("_part", "doc_id").write
+    if files and not broadcast:
+        # keep the sort-merge join's AQE-sized partitions (coalescing
+        # would concentrate an over-cap batch on the fewest tasks); bound
+        # file sizes from the manifest row counts instead
+        n_out = max(1, len(files) // 2)
+        writer = writer.option("maxRecordsPerFile", target_rows // n_out + 1)
+    writer.mode("overwrite").partitionBy("_part").parquet(str(out_dir))
+    return [
+        (f, unquote(d.name.split("=", 1)[1]))
+        for d in sorted(out_dir.glob("_part=*"))
+        for f in list_parquet_files(d)
+    ]
 
 
 def merge_into(
@@ -289,8 +485,8 @@ def merge_into(
 
     ``max_touched_files`` caps the driver-side exactly-touched file
     list; a merge touching more files than that falls back to a
-    partition-granular rewrite set (all candidate files) so pathological
-    full-table merges can't blow up driver memory on ``collect_set``.
+    partition-granular rewrite set (all candidate files, one shuffle
+    batch) so pathological full-table merges can't blow up driver memory.
     """
     parent = table.current_snapshot_id()
     src = _prepare_source(source_df, duplicate_policy, salt)
@@ -342,362 +538,157 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         summary = dict(published["summary"])
         log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
         return {"snapshot_id": published["snapshot_id"], **summary}
-    done = log.completed_units()
+    phases: dict[str, float] = {}
+    clock = [time.perf_counter()]
 
-    # 1. PROFILE + PRUNE — ONE agg over the persisted source yields the
-    # key range (manifest pruning), the row count + avg token length
-    # (broadcast-size estimate), and — under policy="error" — the
-    # distinct-key count (SQL MERGE cardinality check). Collapsing these
-    # into one job is most of the merge's serial-term reduction.
-    aggs = [
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.count("*").alias("n"),
-        # token volume → whole-source broadcast-size estimate (decides
-        # the small-source fast path; same formula as unit_bytes below)
-        F.sum(F.coalesce(F.col("n_tok"), F.lit(0))).alias("tok"),
-    ]
-    if duplicate_policy == "error":
-        aggs.append(F.countDistinct("doc_id").alias("nd"))
-    with _Phase("profile_agg"):
-        prof = src.agg(*aggs).collect()[0]
-    if prof.lo is None:  # empty source
+    def lap(name: str) -> None:
+        now = time.perf_counter()
+        phases[name] = round(now - clock[0], 3)
+        clock[0] = now
+
+    # 1. PROFILE — one observed pass; it decides driver vs distributed
+    # planning before any key is pulled.
+    broadcast_cap = _broadcast_cap(spark)
+    prof = _profile(src)
+    lo, hi = prof["lo"], prof["hi"]
+    if lo is None:  # empty source
         return {"snapshot_id": None, "rows_updated": 0, "rows_deleted": 0, "rows_inserted": 0}
-    if duplicate_policy == "error" and prof.nd != prof.n:
-        # rare failure path — only here do we spend a job finding an example
-        ex = src.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
-        raise DuplicateSourceKeys(
-            f"source has duplicate doc_id (e.g. {ex[0]['doc_id']}); "
-            "pass duplicate_policy='last' to dedupe"
-        )
+    on_driver = _driver_bytes(prof["n"], prof["key_bytes"] or 0) <= broadcast_cap
     # Candidate pruning over DRIVER-SIDE manifest records (pyarrow footer
     # path for small manifests — no Spark job; distributed collect above
     # SMALL_MANIFEST_ROWS, see metadata.manifest_records).
-    with _Phase("candidate_collect"):
-        cand_rows = [
-            r for r in table.manifest_records(spark, parent)
-            if r["max_doc_id"] is not None and r["min_doc_id"] is not None
-            and r["max_doc_id"] >= prof.lo and r["min_doc_id"] <= prof.hi
-        ]
-    cand_by_part: dict[str, list[str]] = defaultdict(list)
-    for r in cand_rows:
-        cand_by_part[r["partition"]].append(r["file_path"])
-    cand_files = [r["file_path"] for r in cand_rows]
+    cand_rows = [
+        r for r in table.manifest_records(spark, parent)
+        if r["max_doc_id"] is not None and r["min_doc_id"] is not None
+        and r["max_doc_id"] >= lo and r["min_doc_id"] <= hi
+    ]
+    cand_files = sorted(r["file_path"] for r in cand_rows)
+    lap("profile")
 
-    # 2. PROBE — column-pruned scan of candidates (doc_id only) joined
-    # to the source keys. ONE grouped collect returns both the
-    # exactly-touched file set (collect_set per op — file lists are
-    # driver-planning-sized, as in Iceberg) and the per-op matched-row
-    # counts (countDistinct dedupes a key probed in >1 file).
-    # Source keys are UNIQUE here (dup policy above), so the probe join
-    # is a plain equi-join; AQE skew-join covers residual
-    # partition-level skew.
-    # Small-source FAST PATH: when the ENTIRE prepared source fits one
-    # broadcast cap, per-unit machinery is pure overhead — unit tagging
-    # (probe ⋈ file_units), the grouped eff_src materialization + agg,
-    # and one broadcast build + write job + stats pass PER partition
-    # unit are fixed driver-side jobs that amortize at 10^8-row merges
-    # but dominate a small one (and the streaming foreachBatch sink
-    # issues exactly such merges every microbatch). The fast path
-    # broadcasts the whole effective source once and rewrites ALL
-    # touched files in ONE job (partitionBy routes each row back to its
-    # partition dir). Large sources keep the per-unit key-assigned
-    # broadcast path — per-unit volume stays bounded at any scale.
-    est_src_bytes = int((prof.tok or 0) * 4 + prof.n * 64)
-    broadcast_cap = _broadcast_cap(spark)
-    fast = (
-        est_src_bytes < broadcast_cap
-        and _fail_after_units is None  # crash hook needs per-unit jobs
-        # dynamic-partition routing can't represent a null partition
-        and all(p != "__HIVE_DEFAULT_PARTITION__" for p in cand_by_part)
-    )
-
+    # 2. PROBE — doc_id + file path of the candidates only; the source
+    # key range also pushes into the scan, reaching parquet row-group
+    # stats (a micro-batch with a narrow key range skips most row groups
+    # of a wide candidate file).
+    probe_scan = None
     if cand_files:
-        # the source key range also pushes into the probe scan: file
-        # pruning is manifest-level, but [lo, hi] reaches the parquet
-        # row-group stats too (a streaming batch with a narrow/monotone
-        # key range skips most row groups of a wide candidate file)
-        probe = (
+        probe_scan = (
             spark.read.schema(TOKEN_SCHEMA)
             .parquet(*cand_files)
-            .where((F.col("doc_id") >= prof.lo) & (F.col("doc_id") <= prof.hi))
+            .where((F.col("doc_id") >= lo) & (F.col("doc_id") <= hi))
             .select("doc_id", _probe_file_path().alias("file_path"))
         )
-        src_keys = src.select("doc_id", "_op")
-        if fast:
-            # the whole key set fits a broadcast → probe joins map-side
-            # (no file_units tagging: the single rewrite job needs no
-            # per-unit source assignment)
-            matched = probe.join(F.broadcast(src_keys), "doc_id").persist()
-        else:
-            # file → partition-unit lookup from the manifest rows
-            # already in hand (driver-planning-sized, like Iceberg's
-            # file lists); the broadcast join tags every matched key
-            # with the rewrite unit whose file holds it, which is what
-            # lets each rewrite unit later join ONLY its own slice of
-            # the effective source.
-            file_units = F.broadcast(
-                spark.createDataFrame(
-                    [(_norm(r["file_path"]), r["partition"]) for r in cand_rows],
-                    "file_path string, _unit string",
-                )
-            )
-            matched = (
-                probe.join(file_units, "file_path")
-                .join(src_keys, "doc_id")
-                .persist()
-            )
+    file_ids = _file_ids([_norm(f) for f in cand_files]) if on_driver else None
+    if file_ids is not None:
+        plan = _DriverPlan(spark, src, probe_scan, file_ids)
+        if duplicate_policy == "error" and (dup := plan.duplicate()) is not None:
+            raise _duplicate_keys(dup)
     else:
-        matched = spark.createDataFrame(
-            [], "file_path string, doc_id string, _unit string, _op string"
-        ).persist()
-    with _Phase("probe_collect"):
-        probe_rows = (
-            matched.groupBy("_op")
-            .agg(
-                F.countDistinct("doc_id").alias("n"),
-                # slice executor-side so at most cap+1 paths ever reach
-                # the driver, however many files the merge touches
-                F.slice(
-                    F.collect_set("file_path"), 1, max_touched_files + 1
-                ).alias("files"),
-            )
-            .collect()
-        )
-    op_counts = {r._op: r.n for r in probe_rows}
-    if any(len(r.files) > max_touched_files for r in probe_rows):
+        if duplicate_policy == "error":
+            nd = src.agg(F.countDistinct("doc_id").alias("nd")).collect()[0].nd
+            if nd != prof["n"]:
+                # rare failure path — only here do we spend a job finding an example
+                ex = src.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
+                raise _duplicate_keys(ex[0]["doc_id"])
+        plan = _DistributedPlan(spark, src, prof, probe_scan, max_touched_files)
+    touched = {}
+    if plan.file_bytes is not None:
+        by_norm = {_norm(f): f for f in cand_files}
+        touched = {by_norm[p]: b for p, b in plan.file_bytes.items() if p in by_norm}
+    if plan.file_bytes is None or len(touched) > max_touched_files:
         # partition-granular fallback: rewrite every candidate file in
-        # place of the (too large to plan file-exactly) touched set —
-        # same results, bounded driver memory
+        # place of the (too large to plan file-exactly) touched set, in
+        # one shuffle batch — same results, bounded driver memory
         logger.warning(
             "merge touches >%d files; falling back to partition-granular "
             "rewrite over %d candidate files", max_touched_files, len(cand_files)
         )
-        touched_files = set(cand_files)
+        touched_files = len(cand_files)
+        batches = [(cand_files, False)]
     else:
-        touched_files = {f for r in probe_rows for f in r.files}
+        touched_files = len(touched)
+        fits = [(f, b, 0) for f, b in sorted(touched.items()) if b <= broadcast_cap]
+        over = sorted(f for f, b in touched.items() if b > broadcast_cap)
+        batches = [(b.files, True) for b in pack_bins(fits, "", broadcast_cap)]
+        if over:
+            batches.append((over, False))
+    if not batches and plan.inserted:
+        batches = [([], True)]  # insert-only merge
+    if isinstance(plan, _DistributedPlan):
+        plan.assign_batches(batches)
+    lap("probe")
 
-    metrics = {
-        "rows_updated": int(op_counts.get("upsert", 0)),
-        "rows_deleted": int(op_counts.get("delete", 0)),
-        "rows_inserted": 0,
-    }
+    # 3. REWRITE — one job per batch; inserts ride in batch 0's write,
+    # their fan-out sized from the exact insert volume. A unit record
+    # counts as done only if it is this plan's batch over the same files
+    # (a record left by another plan of the same job_id is ignored).
+    planned = {f"batch:{i}": files for i, (files, _) in enumerate(batches)}
+
+    def finished() -> dict:
+        return {u: r for u, r in log.completed_units().items()
+                if planned.get(u) == r["files_in"]}
+
     out_root = table.new_data_dir(job_tag)
-    touched_norm = {_norm(t) for t in touched_files}
+    file_rows = {r["file_path"]: r["record_count"] for r in cand_rows}
+    n_ins = max(1, min(
+        4 * spark.sparkContext.defaultParallelism,
+        -(-plan.insert_bytes // INSERT_TARGET_BYTES),
+    ))
 
-    # 3. REWRITE touched files — resumable per-partition units.
-    pending = []
-    for part in sorted(cand_by_part):
-        files_p = [f for f in cand_by_part[part] if _norm(f) in touched_norm]
-        if files_p and f"rewrite:{part}" not in done:
-            pending.append((part, files_p))
-
-    eff_src = None
-    if fast:
-        # FAST: one broadcast of the whole prepared source (insert keys
-        # ride along — they match no target row in the left join), ONE
-        # job over every pending unit's files, partitionBy routing back
-        # to per-partition dirs, one footer-stats pass. Lineage still
-        # records one unit per partition (commit assembly unchanged); a
-        # crash redoes the single job.
-        units_broadcast = len(pending)
-        if pending:
-            with _Phase("rewrite_units"):
-                _rewrite_all_broadcast(spark, src, pending, out_root, log)
-    else:
-        # EFFECTIVE rewrite source: only rows whose key matched a target
-        # row (inserts never join the rewrite), each tagged with the
-        # rewrite unit that holds it, and delete rows shed their payload
-        # (only the op matters). One join shuffle HERE replaces a
-        # full-source shuffle join in EVERY rewrite unit, and because
-        # each unit later filters to its OWN `_unit` slice, the per-unit
-        # broadcast volume is bounded by that unit's matched rows at ANY
-        # source scale — this is the fix for the 64M-row
-        # broadcast→shuffle plan flip (BENCH/BASELINE.md merge deep-run
-        # analysis). The distinct() guards against a key probed in more
-        # than one unit (a malformed table with duplicate doc_ids must
-        # not fan out target rows through the inner join).
-        eff_src = (
-            src.join(matched.select("doc_id", "_unit").distinct(), "doc_id")
-            .select(
-                "doc_id",
-                F.when(F.col("_op") == "upsert", F.col("tokens")).alias("tokens"),
-                F.when(F.col("_op") == "upsert", F.col("n_tok")).alias("n_tok"),
-                "_op",
-                "_unit",
-            )
-            .persist()
-        )
-        # exact PER-UNIT size estimates from the materialized rewrite
-        # side, not a guess — same single blocking agg as before, grouped.
-        with _Phase("eff_src_agg"):
-            eff_rows = (
-                eff_src.groupBy("_unit")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(F.coalesce("n_tok", F.lit(0))).alias("tok"),
-                )
-                .collect()
-            )
-        unit_bytes = {r._unit: int((r.tok or 0) * 4 + r.n * 64) for r in eff_rows}
-        file_rows = {r["file_path"]: r["record_count"] for r in cand_rows}
-        units_broadcast = sum(
-            1 for p, _ in pending if unit_bytes.get(p, 0) < broadcast_cap
-        )
-
-        def run_rewrite_unit(part: str, files_p: list[str]) -> None:
-            target_p = spark.read.schema(TOKEN_SCHEMA).parquet(*files_p)
-            # this unit's OWN slice of the effective source — a
-            # cache-local filter on the persisted eff_src, never the
-            # whole thing
-            src_side = eff_src.filter(F.col("_unit") == part).select(
-                F.col("doc_id").alias("s_doc_id"),
-                F.col("tokens").alias("s_tokens"),
-                F.col("n_tok").alias("s_n_tok"),
-                F.col("_op").alias("s_op"),
-            )
-            is_bcast = unit_bytes.get(part, 0) < broadcast_cap
-            if is_bcast:
-                src_side = F.broadcast(src_side)
-            rewritten = _apply_merge(target_p, src_side)
-            out_dir = out_root / part
-            n_out = max(1, len(files_p) // 2)  # merged output ≈ input volume
-            if is_bcast:
-                # ONE pass, ZERO shuffle: the broadcast join streams each
-                # scan split straight through coalesce into a small
-                # in-task sort and the parquet encoder. The previous shape
-                # (persist → range sampling job → range shuffle → write)
-                # materialized the full joined unit into the block cache
-                # and then moved it again through a shuffle — three extra
-                # full-data trips over the memory bus that showed up as
-                # the residual Amdahl serial term in the 64M deep run
-                # (BENCH/BASELINE.md r5 analysis). Range layout bought
-                # nothing here: the table's files are round-robin
-                # distributed, so pre- and post-merge envelopes span the
-                # full key range either way; re-clustering is
-                # clustering.py's job.
-                writer = rewritten.coalesce(n_out).sortWithinPartitions("doc_id").write
-            else:
-                # shuffle fallback (unit slice over the broadcast cap):
-                # keep the sort-merge join's AQE-sized partitions —
-                # coalescing to n_out tasks here would concentrate the
-                # very units that were too big to broadcast onto the
-                # fewest tasks (spill risk, defeats AQE skew splitting).
-                # File sizes are bounded via maxRecordsPerFile from the
-                # manifest row counts instead.
-                rows_unit = sum(file_rows.get(f, 0) for f in files_p)
-                writer = (
-                    rewritten.sortWithinPartitions("doc_id")
-                    .write.option(
-                        "maxRecordsPerFile",
-                        max(1, (rows_unit + n_out - 1) // max(1, n_out) + 1),
-                    )
-                )
-            writer.mode("overwrite").parquet(str(out_dir))
-            new_files = list_parquet_files(out_dir)
-            stats = file_stats_rows(spark, [(f, part) for f in new_files])
-            log.mark_unit_done(
-                f"rewrite:{part}",
-                files_in=files_p,
-                new_manifest_rows=stats,
-                metrics={"files_rewritten": len(files_p), "files_written": len(new_files)},
-            )
-
-        # run units concurrently (Spark interleaves the jobs; lineage
-        # appends are thread-safe). Sequential under the crash hook.
-        if _fail_after_units is not None:
-            for i, (part, files_p) in enumerate(pending, 1):
-                run_rewrite_unit(part, files_p)
-                if i >= _fail_after_units:
-                    raise RuntimeError(f"injected failure after {i} units (test hook)")
-        elif pending:
-            with _Phase("rewrite_units"), ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-                for f in [ex.submit(run_rewrite_unit, p, fs) for p, fs in pending]:
-                    f.result()
-
-    # 4. INSERT unit — not-matched upserts, ONE partitionBy write (the
-    # per-source routing happens inside the job, not in a driver loop).
-    # ``source`` is kept as a data column (scan() reads explicit file
-    # lists, which don't recover Hive-style dir values); the duplicated
-    # ``_part`` column only names the output directory. Row counts come
-    # from the footer-stats pass the manifest needs anyway — no count()
-    # job, and no second action over the repartitionByRange plan (its
-    # sampling pass would re-execute it).
-    if "insert" not in done:
-        _t_ins = time.time()
-        anti_keys = matched.select("doc_id")
-        if fast:
-            # matched keys fit the broadcast cap by the fast-path
-            # condition → the anti-join needs no shuffle either
-            anti_keys = F.broadcast(anti_keys)
-        inserts = (
-            src.filter(F.col("_op") == "upsert")
-            .join(anti_keys, "doc_id", "left_anti")
-            .select("doc_id", "tokens", "n_tok", "source")
-        )
-        ins_dir = out_root / "_inserts"
-        # output-task count derived from the SOURCE volume estimate (an
-        # upper bound on insert volume), not a constant tied to the
-        # local core count: a microbatch-sized merge writes one file
-        # per partition instead of defaultParallelism/2 shards, while a
-        # 10^8-row merge fans out to one task per ~target-file-size.
-        n_out = max(1, min(
-            4 * spark.sparkContext.defaultParallelism,
-            (est_src_bytes + INSERT_TARGET_BYTES - 1) // INSERT_TARGET_BYTES,
-        ))
-        # hash repartition, not repartitionByRange: range sampling is a
-        # second action over the anti-join (forcing a persist of the
-        # full insert payload to keep it single-execution); a hash
-        # exchange needs neither — one shuffle, one pass, no cache.
-        (
-            inserts.withColumn("_part", F.col("source"))
-            .repartition(n_out, "source", "doc_id")
-            .sortWithinPartitions("source", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("_part")
-            .parquet(str(ins_dir))
-        )
-        pairs = []
-        for d in sorted(ins_dir.glob("_part=*")):
-            part_val = unquote(d.name.split("=", 1)[1])
-            if part_val == "__HIVE_DEFAULT_PARTITION__":
-                # a null `source` would otherwise be read back as the
-                # literal marker string and silently diverge from the
-                # row's actual (null) column — refuse to fabricate it
-                raise ValueError(
-                    "merge source contains rows with null `source` "
-                    "(partition column); inserts must carry a partition value"
-                )
-            pairs.extend((f, part_val) for f in list_parquet_files(d))
+    def run_batch(i: int, files: list[str], broadcast: bool) -> None:
+        side, inserts = plan.source_slice(i, files)
+        pairs = _write_batch(spark, files, side, broadcast, inserts, n_ins,
+                             out_root / f"batch-{i}", sum(file_rows.get(f, 0) for f in files))
         stats = file_stats_rows(spark, pairs)
-        n_ins = sum(s["record_count"] for s in stats)
-        log.mark_unit_done("insert", files_in=[], new_manifest_rows=stats,
-                           metrics={"rows_inserted": n_ins})
-        if _TIMING:
-            print(f"MERGE_PHASE insert {time.time() - _t_ins:.2f}s", flush=True)
-    matched.unpersist()
-    if eff_src is not None:
-        eff_src.unpersist()
+        log.mark_unit_done(
+            f"batch:{i}",
+            files_in=files,
+            new_manifest_rows=stats,
+            metrics={"files_rewritten": len(files), "files_written": len(stats),
+                     "rows_inserted": plan.inserted if i == 0 else 0},
+        )
 
-    # 5. COMMIT — assemble from lineage (covers resumed units).
-    done = log.completed_units()
+    done = finished()
+    pending = [(i, fs, b) for i, (fs, b) in enumerate(batches) if f"batch:{i}" not in done]
+    if _fail_after_units is not None:
+        # sequential under the crash hook, so the failure point is exact
+        for n, args in enumerate(pending, 1):
+            run_batch(*args)
+            if n >= _fail_after_units:
+                raise RuntimeError(f"injected failure after {n} units (test hook)")
+    elif pending:
+        # Spark interleaves the batch jobs; lineage appends are thread-safe
+        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
+            for fut in [ex.submit(run_batch, *args) for args in pending]:
+                fut.result()
+    plan.close()
+    lap("rewrite")
+
+    # 4. COMMIT — assemble from lineage (covers resumed batches).
+    done = finished()
     removed = [f for rec in done.values() for f in rec["files_in"]]
     new_rows = [row for rec in done.values() for row in rec["new_manifest_rows"]]
-    for rec in done.values():
-        for k in metrics:
-            metrics[k] += rec["metrics"].get(k, 0)
-    summary = {**metrics, "files_rewritten": len(removed), "files_written": len(new_rows),
-               "candidate_files": len(cand_files), "touched_files": len(touched_files),
-               "broadcast_cap": broadcast_cap,
-               "units_broadcast": units_broadcast,
-               "job_tag": job_tag}
-    with _Phase("commit"):
-        # manifest-delta commit: driver-side pyarrow for small manifests
-        # (zero Spark jobs), distributed anti-join + union above the
-        # SMALL_MANIFEST_ROWS threshold (metadata.commit_delta)
-        sid = table.commit_delta(
-            spark, removed, new_rows, operation="merge", summary=summary, parent_id=parent
-        )
+    summary = {
+        "rows_updated": plan.updated,
+        "rows_deleted": plan.deleted,
+        "rows_inserted": sum(rec["metrics"].get("rows_inserted", 0) for rec in done.values()),
+        "files_rewritten": len(removed), "files_written": len(new_rows),
+        "candidate_files": len(cand_files), "touched_files": touched_files,
+        "broadcast_cap": broadcast_cap,
+        "units_broadcast": sum(1 for _, b in batches if b),
+        "batches": len(batches),
+        "batches_shuffled": sum(1 for _, b in batches if not b),
+        "job_tag": job_tag,
+        # the snapshot summary gets the phases so far; the commit's own
+        # seconds land in the same dict for the lineage event and result
+        "phases": phases,
+    }
+    # manifest-delta commit: driver-side pyarrow for small manifests
+    # (zero Spark jobs), distributed anti-join + union above the
+    # SMALL_MANIFEST_ROWS threshold (metadata.commit_delta)
+    sid = table.commit_delta(
+        spark, removed, new_rows, operation="merge", summary=summary, parent_id=parent
+    )
+    lap("commit")
     log.log_event("committed", snapshot_id=sid, **summary)
     return {"snapshot_id": sid, **summary}
 

@@ -14,11 +14,6 @@ def get_string_param(params: dict, key: str, default: str) -> str:
     return v if isinstance(v, str) else default
 
 
-def get_optional_string_param(params: dict, key: str) -> str | None:
-    v = params.get(key)
-    return v if isinstance(v, str) else None
-
-
 def get_double_param(params: dict, key: str, default: float) -> float:
     v = params.get(key)
     if isinstance(v, bool) or not isinstance(v, (int, float)):

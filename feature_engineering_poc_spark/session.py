@@ -53,7 +53,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # broadcast relations are built through driver collection; the
-        # 1g default would veto per-unit merge broadcasts that the
+        # 1g default would veto merge batch broadcasts that the
         # heap-aware cap (merge._broadcast_cap) has already sized to fit
         .config(
             "spark.driver.maxResultSize",
@@ -67,10 +67,3 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_session() -> None:
-    """Stop the active session (used by bench.py between parallelism levels)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

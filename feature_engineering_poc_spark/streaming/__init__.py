@@ -2,7 +2,7 @@
 SURVEY.md §2.2 marks the `incremental` config flag as dead surface; here
 incremental processing is real)."""
 
-from .lakehouse_sink import read_token_stream, stream_merge_into
+from .lakehouse_sink import stream_merge_into
 from .pipeline import (
     read_parquet_stream,
     run_available_now,
@@ -15,6 +15,5 @@ __all__ = [
     "windowed_event_counts",
     "sessionized_counts",
     "run_available_now",
-    "read_token_stream",
     "stream_merge_into",
 ]

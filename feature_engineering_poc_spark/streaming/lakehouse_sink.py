@@ -8,7 +8,7 @@ layered:
 - the STREAM checkpoint (Spark's offset log) guarantees each input
   file is processed by exactly one successful batch;
 - the MERGE lineage log (keyed ``stream-<query>-batch<id>``) makes a
-  crashed batch resumable without double-applying partition units;
+  crashed batch resumable without double-applying rewrite batches;
 - upsert MERGE is idempotent at the row level, so a batch replayed
   from the last un-committed offset converges to the same table state.
 
@@ -30,13 +30,6 @@ TOKEN_STREAM_SCHEMA = T.StructType(
     list(TOKEN_SCHEMA.fields)
     + [T.StructField("_op", T.StringType()), T.StructField("_seq", T.LongType())]
 )
-
-
-def read_token_stream(
-    spark: SparkSession, directory: str, with_ops: bool = True
-) -> DataFrame:
-    schema = TOKEN_STREAM_SCHEMA if with_ops else TOKEN_SCHEMA
-    return spark.readStream.schema(schema).parquet(directory)
 
 
 def stream_merge_into(

@@ -91,33 +91,45 @@ def test_merge_resume_after_commit_crash_window(spark, tmp_path):
     assert_scan_equivalent(expect, t.scan(spark))
 
 
-def test_merge_touched_file_cap_fallback(spark, tmp_path, caplog):
+def test_merge_touched_file_cap_fallback(spark, tmp_path, caplog, monkeypatch):
     """Over-cap merges fall back to rewriting all candidate files —
-    bounded driver memory, identical results."""
-    t1 = write_token_table(spark, tmp_path / "a", n_rows=1000, files_per_source=3, max_tok=32)
-    t2 = write_token_table(spark, tmp_path / "b", n_rows=1000, files_per_source=3, max_tok=32)
-    src1 = _upsert_source(spark, t1)
-    src2 = _upsert_source(spark, t2)
-    r_exact = merge_into(spark, t1, src1)
+    bounded driver memory, identical results — under driver-side and
+    (broadcast cap 0) distributed planning alike."""
     import logging
 
-    with caplog.at_level(logging.WARNING):
-        r_capped = merge_into(spark, t2, src2, max_touched_files=1)
-    assert any("partition-granular" in rec.message for rec in caplog.records)
-    assert r_capped["touched_files"] >= r_exact["touched_files"]
-    for k in ("rows_updated", "rows_deleted", "rows_inserted"):
-        assert r_capped[k] == r_exact[k]
-    assert_scan_equivalent(t1.scan(spark), t2.scan(spark))
+    t1 = write_token_table(spark, tmp_path / "a", n_rows=1000, files_per_source=3, max_tok=32)
+    r_exact = merge_into(spark, t1, _upsert_source(spark, t1))
+    for name, cap in (("b", None), ("c", "0")):
+        if cap is not None:
+            monkeypatch.setenv("FEPOC_MERGE_BROADCAST_CAP", cap)
+        t2 = write_token_table(spark, tmp_path / name, n_rows=1000, files_per_source=3, max_tok=32)
+        caplog.clear()
+        with caplog.at_level(logging.WARNING):
+            r_capped = merge_into(spark, t2, _upsert_source(spark, t2), max_touched_files=1)
+        assert any("partition-granular" in rec.message for rec in caplog.records)
+        assert r_capped["touched_files"] >= r_exact["touched_files"]
+        for k in ("rows_updated", "rows_deleted", "rows_inserted"):
+            assert r_capped[k] == r_exact[k]
+        assert_scan_equivalent(t1.scan(spark), t2.scan(spark))
 
 
-def test_merge_null_source_insert_fails_fast(spark, tmp_path):
+def test_merge_null_source_insert_fails_fast(spark, tmp_path, monkeypatch):
     t = write_token_table(spark, tmp_path / "t", n_rows=200, files_per_source=2, max_tok=32)
     bad = spark.createDataFrame(
         [("docZZZ", [1, 2], 2, None)],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    with pytest.raises(ValueError, match="null `source`"):
-        merge_into(spark, t, bad)
+    before = sorted(t.root.rglob("*.parquet"))
+    # driver-side planning, then distributed planning (broadcast cap 0)
+    for cap in (None, "0"):
+        if cap is not None:
+            monkeypatch.setenv("FEPOC_MERGE_BROADCAST_CAP", cap)
+        with pytest.raises(ValueError, match="null `source`"):
+            merge_into(spark, t, bad)
+        # rejected before any write: no orphan data file, no unit record
+        assert sorted(t.root.rglob("*.parquet")) == before
+        lineage = t.root / "metadata" / "lineage"
+        assert not any('"unit_done"' in f.read_text() for f in lineage.glob("*.jsonl"))
 
 
 def test_stale_lock_break_leaves_no_debris(spark, tmp_path, monkeypatch):

@@ -1,14 +1,20 @@
 """MERGE INTO: update/delete/insert vs a DuckDB oracle, duplicate-key
-policies, skew salting, file-scoped rewrite, resume."""
+policies, skew salting, file-scoped rewrite, batch plans, Spark job
+budgets, resume."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from feature_engineering_poc_spark.lakehouse import merge as merge_mod
 from feature_engineering_poc_spark.lakehouse import write_token_table
 from feature_engineering_poc_spark.lakehouse.generator import token_dataframe
+from feature_engineering_poc_spark.lakehouse.lineage import LineageLog
 from feature_engineering_poc_spark.lakehouse.merge import (
     DuplicateSourceKeys,
     merge_into,
@@ -21,15 +27,16 @@ def table(spark, tmp_path):
     return write_token_table(spark, tmp_path / "t", n_rows=1000, files_per_source=4, max_tok=64)
 
 
-def _source(spark, table):
-    """~10% updates (new tokens), ~5% deletes, ~10% inserts (FIXTURES.md F1)."""
+def _source(spark, table, upd_tok=4):
+    """~10% updates (``upd_tok`` new tokens), ~5% deletes, ~10% inserts
+    (FIXTURES.md F1)."""
     tgt = table.scan(spark)
     updates = (
         tgt.filter(F.pmod(F.xxhash64("doc_id"), F.lit(10)) == 0)
         .select(
             "doc_id",
-            F.array([F.lit(i) for i in range(4)]).cast("array<int>").alias("tokens"),
-            F.lit(4).cast("int").alias("n_tok"),
+            F.array([F.lit(i) for i in range(upd_tok)]).cast("array<int>").alias("tokens"),
+            F.lit(upd_tok).cast("int").alias("n_tok"),
             "source",
             F.lit("upsert").alias("_op"),
         )
@@ -44,18 +51,8 @@ def _source(spark, table):
     return updates.unionByName(deletes).unionByName(inserts)
 
 
-def test_merge_update_delete_insert_vs_duckdb_oracle(spark, table):
-    src = _source(spark, table)
-    tgt_pd = table.scan(spark).toPandas()
-    src_pd = src.toPandas()
-    n_upd_expect = len(src_pd[(src_pd._op == "upsert")
-                              & src_pd.doc_id.isin(tgt_pd.doc_id)])
-    result = merge_into(spark, table, src)
-    assert result["snapshot_id"] == 2
-    assert result["rows_updated"] == n_upd_expect
-    assert result["rows_inserted"] == 100
-
-    got = table.scan(spark).toPandas()
+def _oracle(tgt_pd, src_pd):
+    """The merged table by SQL MERGE semantics, sorted by doc_id."""
     con = duckdb.connect()
     con.register("tgt", tgt_pd)
     con.register("src", src_pd)
@@ -69,12 +66,30 @@ def test_merge_update_delete_insert_vs_duckdb_oracle(spark, table):
         WHERE s._op IS NULL OR s._op <> 'delete'
         """
     ).df()
+    return expect.sort_values("doc_id").reset_index(drop=True)
+
+
+def _assert_table_is(spark, table, expect):
+    got = table.scan(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
     assert len(got) == len(expect)
-    g = got.sort_values("doc_id").reset_index(drop=True)
-    e = expect.sort_values("doc_id").reset_index(drop=True)
-    assert (g.doc_id == e.doc_id).all()
-    assert (g.n_tok == e.n_tok).all()
-    assert all(list(a) == list(b) for a, b in zip(g.tokens, e.tokens))
+    assert (got.doc_id == expect.doc_id).all()
+    assert (got.n_tok == expect.n_tok).all()
+    assert (got.source == expect.source).all()
+    assert all(list(a) == list(b) for a, b in zip(got.tokens, expect.tokens))
+
+
+def test_merge_update_delete_insert_vs_duckdb_oracle(spark, table):
+    src = _source(spark, table)
+    tgt_pd = table.scan(spark).toPandas()
+    src_pd = src.toPandas()
+    n_upd_expect = len(src_pd[(src_pd._op == "upsert")
+                              & src_pd.doc_id.isin(tgt_pd.doc_id)])
+    result = merge_into(spark, table, src)
+    assert result["snapshot_id"] == 2
+    assert result["rows_updated"] == n_upd_expect
+    assert result["rows_inserted"] == 100
+
+    _assert_table_is(spark, table, _oracle(tgt_pd, src_pd))
 
 
 def test_merge_untouched_files_not_rewritten(spark, table):
@@ -176,46 +191,6 @@ def test_broadcast_cap_heap_aware(spark, monkeypatch):
     assert cap == min(max(64 << 20, heap // 16), int(mrs * 0.8))
 
 
-def test_merge_per_unit_broadcast_and_shuffle_fallback(spark, table, monkeypatch):
-    """Same merge under forced-shuffle (cap=0) and default (broadcast)
-    caps must agree — the per-unit slice is plan-invariant — and the
-    summary must record the cap and how many units broadcast."""
-    src = _source(spark, table).persist()
-    src_pd = src.toPandas().sort_values(["doc_id", "_op"]).reset_index(drop=True)
-
-    monkeypatch.setenv("FEPOC_MERGE_BROADCAST_CAP", "0")  # force shuffle units
-    r_shuffle = merge_into(spark, table, src)
-    assert r_shuffle["broadcast_cap"] == 0
-    assert r_shuffle["units_broadcast"] == 0
-    shuffled = table.scan(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
-
-    monkeypatch.delenv("FEPOC_MERGE_BROADCAST_CAP")
-    import shutil
-    import tempfile
-
-    d2 = tempfile.mkdtemp(prefix="fepoc_merge_bc_")
-    try:
-        t2 = write_token_table(
-            spark, d2 + "/t", n_rows=1000, files_per_source=4, max_tok=64
-        )
-        r_bcast = merge_into(spark, t2, src)
-        # every touched partition unit fits the heap-aware cap here
-        assert r_bcast["units_broadcast"] >= 1
-        assert r_bcast["broadcast_cap"] > 0
-        bcast = t2.scan(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
-    finally:
-        shutil.rmtree(d2, ignore_errors=True)
-    src.unpersist()
-
-    assert r_shuffle["rows_updated"] == r_bcast["rows_updated"]
-    assert r_shuffle["rows_deleted"] == r_bcast["rows_deleted"]
-    assert r_shuffle["rows_inserted"] == r_bcast["rows_inserted"]
-    assert list(shuffled.doc_id) == list(bcast.doc_id)
-    assert list(shuffled.n_tok) == list(bcast.n_tok)
-    assert all(list(a) == list(b) for a, b in zip(shuffled.tokens, bcast.tokens))
-    assert len(src_pd) > 0  # sanity: the merge actually did work
-
-
 def test_merge_special_chars_in_table_root(spark, tmp_path):
     """input_file_name() returns a percent-encoded URI; the probe join
     must still match manifest paths for roots containing spaces, '%',
@@ -249,34 +224,183 @@ def test_parse_size_two_letter_suffixes():
     assert _parse_size("64") == 64
 
 
-def test_merge_small_source_fast_path_equivalence(spark, table, monkeypatch):
-    """The single-broadcast fast path (whole source under one cap) and
-    the per-unit path must produce identical tables and summaries."""
-    src = _source(spark, table).persist()
+# With 48-token updates the fixture source (~250 rows of 15-char
+# doc_ids) fits the driver planning budget at this cap (_driver_bytes
+# ≈ 250 × 2 × (15 + 20) B ≈ 17.5 KB) while its matched bytes (~29 KB)
+# need more than one broadcast batch.
+MULTI_BATCH_CAP = 24 << 10
 
-    # force the per-unit SLOW path by shrinking the cap below the source
-    monkeypatch.setenv("FEPOC_MERGE_BROADCAST_CAP", "1")
-    r_slow = merge_into(spark, table, src)
-    assert r_slow["units_broadcast"] == 0  # every unit over the 1-byte cap
-    slow_pd = table.scan(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
 
-    monkeypatch.delenv("FEPOC_MERGE_BROADCAST_CAP")
-    import shutil
-    import tempfile
+def _spy_driver_collect(monkeypatch) -> list:
+    """Record every driver-side planning collect (Arrow tables)."""
+    collected = []
+    real = merge_mod._collect_arrow
 
-    d2 = tempfile.mkdtemp(prefix="fepoc_merge_fast_")
-    try:
-        t2 = write_token_table(spark, d2 + "/t", n_rows=1000, files_per_source=4, max_tok=64)
-        r_fast = merge_into(spark, t2, src)
-        # fast path: every pending unit rides the one broadcast
-        assert r_fast["units_broadcast"] >= 1
-        fast_pd = t2.scan(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
-    finally:
-        shutil.rmtree(d2, ignore_errors=True)
+    def spy(df):
+        collected.append(real(df))
+        return collected[-1]
+
+    monkeypatch.setattr(merge_mod, "_collect_arrow", spy)
+    return collected
+
+
+def _set_cap(monkeypatch, cap):
+    if cap is None:
+        monkeypatch.delenv("FEPOC_MERGE_BROADCAST_CAP", raising=False)
+    else:
+        monkeypatch.setenv("FEPOC_MERGE_BROADCAST_CAP", str(cap))
+
+
+@pytest.mark.parametrize(
+    "cap, driver_keys, shuffled",
+    [(None, True, 0), (MULTI_BATCH_CAP, True, 0), (0, False, 1)],
+    ids=["single_batch", "multi_batch", "shuffle_batch"],
+)
+def test_merge_batch_plans_agree(spark, table, monkeypatch, cap, driver_keys, shuffled):
+    """One rewrite path, three plans of it: a single broadcast batch;
+    several broadcast batches with the keys still planned on the driver;
+    distributed planning with one shuffle batch (cap 0). Each must give
+    the oracle's table and row counts."""
+    _set_cap(monkeypatch, cap)
+    collected = _spy_driver_collect(monkeypatch)
+    src = _source(spark, table, upd_tok=48).persist()
+    tgt_pd, src_pd = table.scan(spark).toPandas(), src.toPandas()
+    r = merge_into(spark, table, src)
     src.unpersist()
 
+    assert bool(collected) == driver_keys
+    n_batches = {None: 1, MULTI_BATCH_CAP: r["batches"], 0: 1}[cap]
+    assert r["batches"] == n_batches and (cap != MULTI_BATCH_CAP or n_batches >= 2)
+    assert r["batches_shuffled"] == shuffled
+    assert r["units_broadcast"] == r["batches"] - shuffled
+    in_tgt = src_pd.doc_id.isin(tgt_pd.doc_id)
+    assert r["rows_updated"] == ((src_pd._op == "upsert") & in_tgt).sum()
+    assert r["rows_deleted"] == ((src_pd._op == "delete") & in_tgt).sum()
+    assert r["rows_inserted"] == ((src_pd._op == "upsert") & ~in_tgt).sum() == 100
+    _assert_table_is(spark, table, _oracle(tgt_pd, src_pd))
+    # the phase record reaches the snapshot summary (commit still open
+    # there) and the result
+    snap = table.snapshot()["summary"]
+    assert snap["batches"] == r["batches"]
+    assert set(snap["phases"]) == {"profile", "probe", "rewrite"}
+    assert set(r["phases"]) == {"profile", "probe", "rewrite", "commit"}
+
+
+def _last_job_id(spark) -> int:
+    """Newest Spark job id in the status store (as perfbench/trace.py reads it)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.length())), default=-1)
+
+
+@pytest.mark.parametrize("cap, budget", [(None, 6), (0, 26)], ids=["default_cap", "cap0"])
+def test_merge_spark_job_budget(spark, table, monkeypatch, cap, budget):
+    """Under the default cap the fixture merge runs the profile pass, the
+    probe (source keys broadcast + one collect) and one batch (key
+    broadcast, source slice, write with the inserts fused in); cap 0
+    plans distributed and rewrites in one shuffle-join batch."""
+    _set_cap(monkeypatch, cap)
+    src = _source(spark, table)
+    before = _last_job_id(spark)
+    merge_into(spark, table, src)
+    assert _last_job_id(spark) - before <= budget
+
+
+def test_merge_resume_skips_finished_batches(spark, table, monkeypatch):
+    """A crash after the first of several batches, then a rerun under the
+    same job_id: the finished batch is not redone, the result is exact."""
+    _set_cap(monkeypatch, MULTI_BATCH_CAP)
+    src = _source(spark, table, upd_tok=48).persist()
+    expect = _oracle(table.scan(spark).toPandas(), src.toPandas())
+    with pytest.raises(RuntimeError, match="injected failure"):
+        merge_into(spark, table, src, job_id="mbatch", _fail_after_units=1)
+    log = LineageLog(table.root, "mbatch")
+    assert list(log.completed_units()) == ["batch:0"]
+    assert table.current_snapshot_id() == 1
+    r = merge_into(spark, table, src, job_id="mbatch")
+    src.unpersist()
+    assert r["batches"] >= 2 and r["rows_inserted"] == 100
+    units = [rec["unit"] for rec in log.records() if rec["event"] == "unit_done"]
+    assert sorted(units) == [f"batch:{i}" for i in range(r["batches"])]
+    _assert_table_is(spark, table, expect)
+
+
+def test_merge_insert_fanout_from_insert_volume(spark, table, monkeypatch):
+    """An update-heavy merge sizes its insert write from the insert rows,
+    not from the whole source: at most one insert file per partition."""
+    updates = table.scan(spark).select(
+        "doc_id", F.array_repeat(F.lit(7), 64).alias("tokens"),
+        F.lit(64).alias("n_tok"), "source",
+    )
+    inserts = token_dataframe(spark, 20, seed=5, max_tok=8, id_offset=20_000_000)
+    # the source estimate (~320 KB) spans ten insert targets; the
+    # inserts (~2 KB) fit one
+    monkeypatch.setattr(merge_mod, "INSERT_TARGET_BYTES", 32 << 10)
+    pre = set(table.data_files(spark))
+    r = merge_into(spark, table, updates.unionByName(inserts))
+    assert (r["rows_updated"], r["rows_inserted"]) == (1000, 20)
+    ins_ids = {row.doc_id for row in inserts.select("doc_id").collect()}
+    per_part = Counter()
+    for rec in table.manifest_records(spark):
+        if rec["file_path"] in pre:
+            continue
+        ids = set(pq.read_table(rec["file_path"], columns=["doc_id"])["doc_id"].to_pylist())
+        if ids <= ins_ids:
+            per_part[rec["partition"]] += 1
+    assert per_part and max(per_part.values()) == 1
+
+
+def test_merge_driver_budget_boundary(spark, table, monkeypatch):
+    """Driver planning applies exactly while ``_driver_bytes`` of the
+    source fits the cap, and the collect stays within that bound."""
+    src = _source(spark, table).persist()
+    src_pd = src.toPandas()
+    need = merge_mod._driver_bytes(len(src_pd), sum(len(d.encode()) for d in src_pd.doc_id))
+    expect = _oracle(table.scan(spark).toPandas(), src_pd)
+    results = []
+    for cap, on_driver in ((need, True), (need - 1, False)):
+        t = write_token_table(spark, table.root.parent / f"cap{cap}", n_rows=1000,
+                              files_per_source=4, max_tok=64)
+        _set_cap(monkeypatch, cap)
+        collected = _spy_driver_collect(monkeypatch)
+        results.append(merge_into(spark, t, src))
+        assert bool(collected) == on_driver
+        if collected:
+            assert collected[0].num_rows <= 2 * len(src_pd)
+            assert collected[0].nbytes <= need
+        _assert_table_is(spark, t, expect)
+    src.unpersist()
     for k in ("rows_updated", "rows_deleted", "rows_inserted", "touched_files"):
-        assert r_slow[k] == r_fast[k], k
-    assert list(slow_pd.doc_id) == list(fast_pd.doc_id)
-    assert list(slow_pd.n_tok) == list(fast_pd.n_tok)
-    assert all(list(a) == list(b) for a, b in zip(slow_pd.tokens, fast_pd.tokens))
+        assert results[0][k] == results[1][k], k
+
+
+def test_merge_file_id_collision_plans_distributed(spark, table, monkeypatch):
+    """Colliding candidate file ids send the merge to distributed planning."""
+    collected = _spy_driver_collect(monkeypatch)
+    monkeypatch.setattr(merge_mod, "_file_ids", lambda paths: None)
+    src = _source(spark, table).persist()
+    expect = _oracle(table.scan(spark).toPandas(), src.toPandas())
+    r = merge_into(spark, table, src)
+    src.unpersist()
+    assert not collected and r["rows_inserted"] == 100
+    _assert_table_is(spark, table, expect)
+
+
+def test_merge_ignores_unit_records_of_another_plan(spark, table, monkeypatch):
+    """A job_id whose lineage holds unit records this plan did not write
+    (another layout, or another batch split of the same files) reruns
+    the merge from the parent snapshot and commits only its own units."""
+    src = _source(spark, table).persist()
+    expect = _oracle(table.scan(spark).toPandas(), src.toPandas())
+    files = sorted(table.data_files(spark))
+    log = LineageLog(table.root, "mixed")
+    fake = {"file_path": files[0], "partition": "x", "record_count": 1}
+    log.mark_unit_done("rewrite:books", files_in=files[:1], new_manifest_rows=[fake],
+                       metrics={"files_rewritten": 1, "files_written": 1})
+    log.mark_unit_done("batch:0", files_in=files[:1], new_manifest_rows=[fake],
+                       metrics={"files_rewritten": 1, "files_written": 1, "rows_inserted": 7})
+    r = merge_into(spark, table, src, job_id="mixed")
+    src.unpersist()
+    assert r["rows_inserted"] == 100
+    _assert_table_is(spark, table, expect)
