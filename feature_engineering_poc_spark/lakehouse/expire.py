@@ -1,14 +1,21 @@
 """Snapshot expiry + orphan-file GC + manifest rewrite (north_rule ops #4-5).
 
-All three are METADATA-dominant operations:
+All three are METADATA-dominant operations, planned and committed on
+the driver like every other op's manifest work (Iceberg's planning
+model): reachability reads only the ``file_path`` column of each
+snapshot manifest with pyarrow (``TokenTable.manifest_paths``) and does
+the set algebra in Python; the rewrite is ``manifest_records`` →
+``file_stats_rows`` → ``commit_delta``, which read, stat and write the
+manifest with pyarrow up to ``SMALL_MANIFEST_ROWS`` / ``SMALL_STATS_FILES``
+and switch to Spark above. On small tables no op runs a Spark job.
+
+Paths are compared scheme-normalized (``file:///x`` and ``/x`` are the
+same file), as ``commit_delta`` compares them.
 
 - ``expire_snapshots``: drop snapshots beyond the retention policy and
-  delete data files reachable ONLY from expired snapshots. Reachability
-  is set algebra over manifests, computed distributedly
-  (union/distinct/anti-join on file_path — at 10^12-sequence scale the
-  manifests are themselves big data). The safety property (tested):
-  a file reachable from ANY retained snapshot is never deleted.
-  Reference precedent for aggressive retention:
+  delete data files reachable ONLY from expired snapshots. The safety
+  property (tested): a file reachable from ANY retained snapshot is
+  never deleted. Reference precedent for aggressive retention:
   ``retentionDurationCheck.enabled=false`` (SparkSessionManager.scala:59).
 - ``remove_orphans``: delete files on the filesystem that no snapshot
   references (debris from crashed jobs), with a modification-time
@@ -26,7 +33,12 @@ from pyspark.sql import SparkSession
 
 from . import fs as fslayer
 from .metadata import TokenTable, list_parquet_files
-from .stats import file_stats_df
+from .stats import file_stats_rows
+
+
+def _paths(table: TokenTable, snapshot_ids) -> set[str]:
+    """Normalized file paths referenced by any of the snapshots."""
+    return set().union(*(table.manifest_paths(i) for i in snapshot_ids))
 
 
 def expire_snapshots(
@@ -53,20 +65,9 @@ def expire_snapshots(
     if not expired_ids:
         return {"expired_snapshots": [], "deleted_files": 0}
 
-    # Reachability — distributed set algebra over manifests.
-    def union_manifests(ids):
-        dfs = [table.manifest_df(spark, i).select("file_path") for i in ids]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out.distinct()
-
-    reachable = union_manifests(sorted(retained_ids))
-    expired_refs = union_manifests(expired_ids)
-    doomed = [
-        r.file_path
-        for r in expired_refs.join(reachable, "file_path", "left_anti").collect()
-    ]
+    # Reachability: files of expired snapshots minus files of retained ones.
+    retained = sorted(retained_ids)
+    doomed = sorted(_paths(table, expired_ids) - _paths(table, retained))
     if not dry_run:
         # fs layer: driver loop for planning-sized lists, distributed
         # foreachPartition fan-out past the threshold (fs.py) — an
@@ -82,7 +83,7 @@ def expire_snapshots(
                     mdir.rmdir()
             table.snapshot_path(sid).unlink(missing_ok=True)
     return {"expired_snapshots": expired_ids, "deleted_files": len(doomed),
-            "retained_snapshots": sorted(retained_ids)}
+            "retained_snapshots": retained}
 
 
 def remove_orphans(
@@ -94,28 +95,20 @@ def remove_orphans(
     """Delete data files no snapshot references, respecting a grace window.
 
     Listing is driver-side ``rglob`` here (local FS); on object storage
-    this becomes a distributed listing job — the anti-join is already
-    distributed either way.
+    this becomes a distributed listing job. The reference check is a
+    set difference against every snapshot's manifest paths.
     """
     snaps = table.snapshots()
-    refs = None
-    for s in snaps:
-        if s.get("manifest") is None:
-            continue
-        d = table.manifest_df(spark, s["snapshot_id"]).select("file_path")
-        refs = d if refs is None else refs.unionByName(d)
-    listed = list_parquet_files(table.data_dir)
-    listed_df = spark.createDataFrame([(f,) for f in listed] or [], "file_path string")
-    orphans_df = (
-        listed_df.join(refs.distinct(), "file_path", "left_anti") if refs is not None else listed_df
-    )
+    listed = list_parquet_files(table.data_dir)  # plain local paths
+    refs = _paths(table, [s["snapshot_id"] for s in snaps if s.get("manifest")])
+    unreferenced = [f for f in listed if f not in refs]
     cutoff = time.time() - grace_period_ms / 1000.0
 
     def _old_enough(p) -> bool:
         mtime = fslayer.file_mtime(p)
         return mtime is not None and mtime < cutoff
 
-    orphans = [r.file_path for r in orphans_df.collect() if _old_enough(r.file_path)]
+    orphans = [f for f in unreferenced if _old_enough(f)]
     # Manifest dirs from commit attempts that crashed before publishing
     # (commit() writes manifests to unique paths before the CAS): any
     # metadata/manifest-* dir no snapshot references is debris.
@@ -141,13 +134,11 @@ def rewrite_manifests(spark: SparkSession, table: TokenTable) -> dict:
     """Recompute per-file stats from parquet footers; new snapshot,
     same data files."""
     parent = table.current_snapshot_id()
-    pairs = [
-        (r.file_path, r.partition)
-        for r in table.manifest_df(spark).select("file_path", "partition").collect()
-    ]
-    fresh = file_stats_df(spark, pairs)
-    sid = table.commit(
-        fresh,
+    pairs = [(r["file_path"], r["partition"]) for r in table.manifest_records(spark, parent)]
+    sid = table.commit_delta(
+        spark,
+        removed_files=[f for f, _ in pairs],
+        new_rows=file_stats_rows(spark, pairs),
         operation="rewrite-manifests",
         summary={"files": len(pairs)},
         parent_id=parent,

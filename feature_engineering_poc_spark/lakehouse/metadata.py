@@ -209,6 +209,19 @@ class TokenTable:
 
         return sum(pq.ParquetFile(f).metadata.num_rows for f in self._manifest_files(snapshot_id))
 
+    def manifest_paths(self, snapshot_id: int | None = None) -> set[str]:
+        """Scheme-normalized ``file_path`` set of a snapshot's manifest,
+        read driver-side with pyarrow (that one column only) — the
+        reachability input of expiry and orphan GC. The set lands on the
+        driver at any manifest size, as ``manifest_records`` rows do."""
+        import pyarrow.parquet as pq
+
+        out: set[str] = set()
+        for f in self._manifest_files(snapshot_id):
+            paths = pq.read_table(f, columns=["file_path"]).column(0).to_pylist()
+            out.update(map(_strip_scheme, paths))
+        return out
+
     def manifest_records(
         self, spark: SparkSession, snapshot_id: int | None = None
     ) -> list[dict]:

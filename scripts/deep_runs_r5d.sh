@@ -11,7 +11,6 @@ cd /root/repo
 export SPARK_GRAFT_SCALING_N=1
 export SPARK_GRAFT_DEEP_REPS=3
 export SPARK_DRIVER_MEMORY=48g
-export FEPOC_MERGE_TIMING=1
 export SPARK_GRAFT_DEEP_DROPCACHE=1  # sync-only (default, explicit)
 echo "=== MERGE DEEP 64M (sync-equalized) START $(date)"
 SPARK_GRAFT_DEEP_ROWS=64000000 timeout 13000 python bench.py --scaling-merge

@@ -9,7 +9,6 @@ set -x
 cd /root/repo
 export SPARK_GRAFT_SCALING_N=1
 export SPARK_DRIVER_MEMORY=48g
-export FEPOC_MERGE_TIMING=1  # legs print MERGE_PHASE lines; run_leg echoes them
 echo "=== MERGE DEEP 64M START $(date)"
 SPARK_GRAFT_DEEP_ROWS=64000000 SPARK_GRAFT_DEEP_REPS=5 timeout 20000 \
   python bench.py --scaling-merge

@@ -21,3 +21,11 @@ def spark():
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def last_job_id(spark) -> int:
+    """Newest Spark job id in the status store (as perfbench/trace.py reads it)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.length())), default=-1)

@@ -20,6 +20,7 @@ from feature_engineering_poc_spark.lakehouse.merge import (
     merge_into,
 )
 from feature_engineering_poc_spark.lakehouse.skew import hot_keys, salted_latest_by_key
+from tests.conftest import last_job_id
 
 
 @pytest.fixture()
@@ -286,14 +287,6 @@ def test_merge_batch_plans_agree(spark, table, monkeypatch, cap, driver_keys, sh
     assert set(r["phases"]) == {"profile", "probe", "rewrite", "commit"}
 
 
-def _last_job_id(spark) -> int:
-    """Newest Spark job id in the status store (as perfbench/trace.py reads it)."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)
-    return max((jobs.apply(i).jobId() for i in range(jobs.length())), default=-1)
-
-
 @pytest.mark.parametrize("cap, budget", [(None, 6), (0, 26)], ids=["default_cap", "cap0"])
 def test_merge_spark_job_budget(spark, table, monkeypatch, cap, budget):
     """Under the default cap the fixture merge runs the profile pass, the
@@ -302,9 +295,9 @@ def test_merge_spark_job_budget(spark, table, monkeypatch, cap, budget):
     plans distributed and rewrites in one shuffle-join batch."""
     _set_cap(monkeypatch, cap)
     src = _source(spark, table)
-    before = _last_job_id(spark)
+    before = last_job_id(spark)
     merge_into(spark, table, src)
-    assert _last_job_id(spark) - before <= budget
+    assert last_job_id(spark) - before <= budget
 
 
 def test_merge_resume_skips_finished_batches(spark, table, monkeypatch):
