@@ -7,17 +7,25 @@ MULTI-column predicates — the pruning mechanism is manifest min/max
 those ranges tight.
 
 Scale shape:
-- Curve keys are computed by an Arrow-batched pandas UDF over numpy
-  (plans/sfc.py) — zero per-row Python.
+- Curve keys are computed by one numpy function (``_keys`` over
+  plans/sfc.py) — zero per-row Python — in-task or inside an
+  Arrow-batched pandas UDF.
 - Column bounds for grid normalization come from the MANIFEST
   (min-of-mins / max-of-maxs per partition) — no data pass.
-- One range shuffle per partition unit (``repartitionByRange(zkey)``)
-  + in-partition sort; that is the minimum data movement any
-  clustering rewrite can do.
+- A partition unit whose summed file bytes fit one scan task
+  (``spark.sql.files.maxPartitionBytes``, the memory envelope of a
+  compaction bin) is rewritten INSIDE one task: pyarrow read, curve
+  key, stable sort, ``n_out`` equal-row zstd slices, footer stats —
+  compaction's kernel and chunked executor, so all such units share
+  ONE shuffle-free Spark job (compaction.run_task_units).
+- A larger unit takes the shuffle path: one range placement per unit
+  (quantile boundaries + a bucket hash exchange) + in-partition sort;
+  that is the minimum data movement a rewrite above one task's memory
+  can do. ``units_shuffled`` in the summary counts these units.
 - The zkey is PERSISTED as an extra column in the rewritten files, so
-  parquet footers (and thus the manifest, via stats.py) carry zkey
-  min/max for curve-range pruning; table scans use the fixed 4-column
-  schema and never see it.
+  parquet footers (and thus the manifest) carry zkey min/max for
+  curve-range pruning; table scans use the fixed 4-column schema and
+  never see it.
 - Per-partition resumable units with lineage checkpoints, atomic
   snapshot commit — same protocol as compaction.
 """
@@ -25,8 +33,7 @@ Scale shape:
 from __future__ import annotations
 
 from collections import defaultdict
-from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 import numpy as np
 import pandas as pd
@@ -39,7 +46,15 @@ from ..plans.sfc import (
     normalize_to_grid,
     string_prefix_ordinal,
 )
+from .compaction import (
+    UNITS_PER_JOB,
+    TaskUnit,
+    crash_hook,
+    run_task_units,
+    run_threaded_units,
+)
 from .lineage import LineageLog
+from .merge import _parse_size
 from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
 from .stats import file_stats_rows
 
@@ -96,22 +111,35 @@ class _ColSpec:
     hi: float
 
 
+def _keys(specs: list[_ColSpec], curve: str, bits: int, cols) -> np.ndarray:
+    """Curve key (int64) per row; ``cols`` are pandas Series in
+    ``specs`` order. The one key function of both rewrite paths."""
+    grids = []
+    for series, spec in zip(cols, specs):
+        if spec.kind == "string":
+            vals = string_prefix_ordinal(series).astype(np.float64)
+        else:
+            vals = series.to_numpy(dtype=np.float64, na_value=spec.lo)
+        grids.append(normalize_to_grid(vals, spec.lo, spec.hi, bits))
+    key = hilbert_index(grids, bits) if curve == "hilbert" else interleave_bits(grids, bits)
+    return key.astype(np.int64)
+
+
 def _make_key_udf(specs: list[_ColSpec], curve: str, bits: int):
     """Factory: pandas UDF computing the SFC key for these column specs."""
 
     def _kernel(*cols: pd.Series) -> pd.Series:
-        grids = []
-        for series, spec in zip(cols, specs):
-            if spec.kind == "string":
-                ordv = string_prefix_ordinal(series).astype(np.float64)
-                grids.append(normalize_to_grid(ordv, spec.lo, spec.hi, bits))
-            else:
-                vals = series.to_numpy(dtype=np.float64, na_value=spec.lo)
-                grids.append(normalize_to_grid(vals, spec.lo, spec.hi, bits))
-        key = hilbert_index(grids, bits) if curve == "hilbert" else interleave_bits(grids, bits)
-        return pd.Series(key.astype(np.int64))
+        return pd.Series(_keys(specs, curve, bits, cols))
 
     return F.pandas_udf(_kernel, "long")
+
+
+def _table_keys(key: dict, tbl) -> np.ndarray:
+    """Curve keys of a pyarrow table for an in-task rewrite; ``key`` is
+    the JSON key spec ``cluster`` puts into the unit's task spec."""
+    specs = [_ColSpec(**c) for c in key["cols"]]
+    cols = [tbl.column(s.name).to_pandas() for s in specs]
+    return _keys(specs, key["curve"], key["bits"], cols)
 
 
 def _partition_bounds(
@@ -192,18 +220,39 @@ def cluster(
         log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
         return {"snapshot_id": published["snapshot_id"], **summary}
     done = log.completed_units()
+    # A unit whose input fits one scan task is rewritten inside one
+    # task (the memory envelope of a compaction bin); larger units
+    # take the shuffle path.
+    task_bytes = _parse_size(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    shuffled = {p for p, rows_p in by_part.items()
+                if sum(r["file_bytes"] for r in rows_p) > task_bytes}
 
-    def run_unit(part: str) -> None:
+    def plan_unit(part: str):
         rows_p = by_part[part]
         files = [r["file_path"] for r in rows_p]
         total_bytes = sum(r["file_bytes"] for r in rows_p)
-        total_rows = sum(r["record_count"] for r in rows_p)
+        metrics = {"files_rewritten": len(files), "bytes": total_bytes,
+                   "rows": sum(r["record_count"] for r in rows_p)}
         n_out = max(1, round(total_bytes / target_file_bytes))
         specs = _partition_bounds(spark, rows_p, list(columns), files)
+        out_dir = table.new_data_dir(job_tag) / part
+        return files, metrics, n_out, specs, out_dir
+
+    def task_unit(part: str) -> TaskUnit:
+        files, metrics, n_out, specs, out_dir = plan_unit(part)
+        spec = {
+            "files": files,
+            "partition": part,
+            "outs": [str(out_dir / f"zkey-{i:05d}.parquet") for i in range(n_out)],
+            "key": {"cols": [asdict(c) for c in specs], "curve": curve, "bits": bits},
+        }
+        return TaskUnit(part, [spec], files, metrics)
+
+    def run_shuffle_unit(part: str) -> None:
+        files, metrics, n_out, specs, out_dir = plan_unit(part)
         key_udf = _make_key_udf(specs, curve, bits)
         df = spark.read.schema(TOKEN_SCHEMA).parquet(*files)
         keyed = df.withColumn("zkey", key_udf(*[F.col(s.name) for s in specs]))
-        out_dir = table.new_data_dir(job_tag) / part
 
         # Range placement WITHOUT repartitionByRange: its boundary
         # sampling job re-executes the child plan — a second full pass
@@ -247,7 +296,7 @@ def cluster(
         (
             placed.sortWithinPartitions("zkey")
             .write.mode("overwrite")
-            .option("maxRecordsPerFile", max(1, (total_rows + n_out - 1) // n_out + 1))
+            .option("maxRecordsPerFile", max(1, (metrics["rows"] + n_out - 1) // n_out + 1))
             .parquet(str(out_dir))
         )
         new_files = list_parquet_files(out_dir)
@@ -256,22 +305,17 @@ def cluster(
             part,
             files_in=files,
             new_manifest_rows=stats,
-            metrics={"files_rewritten": len(files), "files_written": len(new_files),
-                     "bytes": total_bytes, "rows": total_rows},
+            metrics={**metrics, "files_written": len(new_files)},
         )
 
-    # concurrent resumable units (see compaction.py for rationale);
-    # sequential under the crash-injection hook.
+    # In-task units share compaction's chunked executor; shuffle units
+    # run concurrently, one unit's jobs per thread. The crash hook runs
+    # every unit in its own job(s), sequentially.
+    tick = crash_hook(_fail_after_units)
     pending = [p for p in sorted(by_part) if p not in done]
-    if _fail_after_units is not None:
-        for i, part in enumerate(pending, 1):
-            run_unit(part)
-            if i >= _fail_after_units:
-                raise RuntimeError(f"injected failure after {i} units (test hook)")
-    elif pending:
-        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-            for f in [ex.submit(run_unit, p) for p in pending]:
-                f.result()
+    in_task = [task_unit(p) for p in pending if p not in shuffled]
+    run_task_units(spark, log, in_task, 1 if tick else UNITS_PER_JOB, tick)
+    run_threaded_units(run_shuffle_unit, [p for p in pending if p in shuffled], tick)
 
     done = log.completed_units()
     removed = [f for rec in done.values() for f in rec["files_in"]]
@@ -283,6 +327,7 @@ def cluster(
         "files_written": len(new_rows),
         "rows": sum(rec["metrics"]["rows"] for rec in done.values()),
         "units": len(by_part),
+        "units_shuffled": len(shuffled),
         "job_tag": job_tag,
     }
     sid = table.commit_delta(

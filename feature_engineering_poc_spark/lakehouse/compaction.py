@@ -5,14 +5,13 @@ Shape of the job, scale-first:
 1. PLAN (driver, metadata only): filter the manifest to
    smaller-than-threshold files, FFD-bin-pack per partition
    (plans/binpack.py). No data rows are read for planning.
-2. EXECUTE (cluster, one Spark job per partition unit): read exactly
-   the binned files, ``repartitionByRange(n_bins, doc_id)`` +
-   ``sortWithinPartitions`` so output files hold tight, disjoint
-   doc_id ranges (maximum min/max pruning power), write to a
-   DETERMINISTICALLY-NAMED directory with mode=overwrite (idempotent
-   rerun), stamp per-file footer stats (stats.py — footer reads only).
-   Compaction within a partition needs NO shuffle beyond the one range
-   repartition; nothing crosses partitions.
+2. EXECUTE (cluster, one shuffle-free Spark job per chunk of
+   ``UNITS_PER_JOB`` partition units): each FFD bin is one in-task
+   pyarrow rewrite that reads exactly the binned files, sorts them by
+   doc_id, writes one zstd file to a DETERMINISTICALLY-NAMED path
+   (idempotent rerun) and returns its footer stats. Nothing crosses
+   partitions. clustering.py runs its single-task units through the
+   same kernel and executor (``run_task_units``).
 3. CHECKPOINT: a lineage record per completed partition carries the
    unit's new manifest rows + metrics; a resumed job skips completed
    units entirely (lineage.py).
@@ -28,8 +27,11 @@ the mechanism is explicit and from scratch.
 
 from __future__ import annotations
 
+import itertools
 from collections import defaultdict
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -39,6 +41,8 @@ from .metadata import MANIFEST_SCHEMA, TOKEN_SCHEMA, TokenTable, list_parquet_fi
 from .stats import file_stats_rows
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
+# Partition units per in-task rewrite job (``run_task_units``).
+UNITS_PER_JOB = 64
 
 
 def _rewrite_bins_distributed(
@@ -47,19 +51,28 @@ def _rewrite_bins_distributed(
     """Execute bin rewrites as ONE shuffle-free Spark job.
 
     Each task receives bin specs, reads the bin's files with pyarrow
-    (vectorized C++, no per-row Python), sorts the bin by doc_id for
-    locality, writes exactly one target-size output file, and returns
-    its manifest row (footer stats computed in-task — no second pass).
+    (vectorized C++, no per-row Python), sorts the bin, writes its
+    outputs with zstd, and returns their manifest rows (footer stats
+    computed in-task — no second pass).
 
-    Compaction within a partition is embarrassingly parallel across
-    bins: no shuffle, no range-sampling pass, parallelism = number of
-    bins (at 100 TB: hundreds of thousands).
+    A spec is ``{"files", "partition", "outs": [path, ...], "key"}``.
+    Without a ``key`` (compaction) the bin is sorted by doc_id and
+    written to its one output. With a curve ``key`` (clustering.py)
+    the rows get their curve key (``clustering._table_keys``), are
+    stably sorted on it and cut into ``len(outs)`` equal-row slices,
+    each written with the ``zkey`` column so its footer carries zkey
+    min/max.
+
+    Rewrites are embarrassingly parallel across bins: no shuffle, no
+    range-sampling pass, parallelism = number of bins (at 100 TB:
+    hundreds of thousands).
     """
     import json as _json
 
     import pandas as pd
 
     def kernel(batches):
+        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -75,26 +88,46 @@ def _rewrite_bins_distributed(
                 tbl = pa.concat_tables(
                     [fslayer.read_parquet(f, columns=cols) for f in spec["files"]]
                 )
-                tbl = tbl.take(pc.sort_indices(tbl.column("doc_id")))
-                # zstd: compacted files are cold data — trade CPU (which
-                # scales with executors) for bytes (which cost forever)
-                n_bytes = fslayer.write_parquet(tbl, spec["out"], compression="zstd")
-                doc = tbl.column("doc_id")
-                ntk = tbl.column("n_tok")
-                out.append(
-                    {
-                        "file_path": spec["out"],
-                        "partition": spec["partition"],
-                        "record_count": tbl.num_rows,
-                        "file_bytes": n_bytes,
-                        "min_doc_id": pc.min(doc).as_py(),
-                        "max_doc_id": pc.max(doc).as_py(),
-                        "min_n_tok": pc.min(ntk).as_py(),
-                        "max_n_tok": pc.max(ntk).as_py(),
-                        "min_zkey": None,
-                        "max_zkey": None,
-                    }
-                )
+                outs = spec["outs"]
+                if spec.get("key") is None:
+                    tbl = tbl.take(pc.sort_indices(tbl.column("doc_id")))
+                    slices = [(outs[0], tbl)]
+                else:
+                    from feature_engineering_poc_spark.lakehouse.clustering import (
+                        _table_keys,
+                    )
+
+                    zkey = _table_keys(spec["key"], tbl)
+                    order = np.argsort(zkey, kind="stable")
+                    # drop the inputs' Spark row schema (it omits zkey and
+                    # would hide the column from Spark schema inference)
+                    tbl = (tbl.take(order).replace_schema_metadata(None)
+                           .append_column("zkey", pa.array(zkey[order])))
+                    n, k = tbl.num_rows, max(1, min(len(outs), tbl.num_rows))
+                    cuts = [i * n // k for i in range(k + 1)]
+                    slices = [(outs[i], tbl.slice(cuts[i], cuts[i + 1] - cuts[i]))
+                              for i in range(k)]
+                for path, part in slices:
+                    # zstd: rewritten files are cold data — trade CPU (which
+                    # scales with executors) for bytes (which cost forever)
+                    n_bytes = fslayer.write_parquet(part, path, compression="zstd")
+                    doc = part.column("doc_id")
+                    ntk = part.column("n_tok")
+                    zk = part.column("zkey") if "zkey" in part.column_names else None
+                    out.append(
+                        {
+                            "file_path": path,
+                            "partition": spec["partition"],
+                            "record_count": part.num_rows,
+                            "file_bytes": n_bytes,
+                            "min_doc_id": pc.min(doc).as_py(),
+                            "max_doc_id": pc.max(doc).as_py(),
+                            "min_n_tok": pc.min(ntk).as_py(),
+                            "max_n_tok": pc.max(ntk).as_py(),
+                            "min_zkey": None if zk is None else pc.min(zk).as_py(),
+                            "max_zkey": None if zk is None else pc.max(zk).as_py(),
+                        }
+                    )
             yield pd.DataFrame(out, columns=[f.name for f in MANIFEST_SCHEMA.fields])
 
     # Slices = 4×parallelism (capped by bin count): several bins ride
@@ -109,6 +142,79 @@ def _rewrite_bins_distributed(
     return [r.asDict() for r in specs_df.mapInPandas(kernel, MANIFEST_SCHEMA).collect()]
 
 
+@dataclass
+class TaskUnit:
+    """One resumable partition unit whose bins run as in-task rewrites."""
+
+    part: str
+    specs: list[dict]
+    files_in: list[str]
+    metrics: dict
+
+
+def crash_hook(fail_after_units: int | None) -> Callable[[], None] | None:
+    """Test hook: a callable to run after each finished unit that raises
+    after the ``fail_after_units``-th one (None: no hook)."""
+    if fail_after_units is None:
+        return None
+    finished = itertools.count(1)
+
+    def tick() -> None:
+        i = next(finished)
+        if i >= fail_after_units:
+            raise RuntimeError(f"injected failure after {i} units (test hook)")
+
+    return tick
+
+
+def run_threaded_units(
+    fn: Callable, pending: list, after_unit: Callable[[], None] | None = None
+) -> None:
+    """Run ``fn(unit)`` for each pending unit that needs its own Spark
+    jobs: concurrently from up to 8 threads, or one at a time with
+    ``after_unit`` after each (the crash hook's exact crash point)."""
+    if after_unit is not None:
+        for unit in pending:
+            fn(unit)
+            after_unit()
+    elif pending:
+        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
+            for f in [ex.submit(fn, unit) for unit in pending]:
+                f.result()
+
+
+def run_task_units(
+    spark: SparkSession,
+    log: LineageLog,
+    units: list[TaskUnit],
+    units_per_job: int = UNITS_PER_JOB,
+    after_unit: Callable[[], None] | None = None,
+) -> None:
+    """Run units GROUPED into chunks of ``units_per_job``: all of a
+    chunk's bins ride one Spark job (bins are independent tasks, so
+    grouping loses no parallelism and slashes per-job driver overhead).
+    Lineage checkpoints stay per-unit, written after each job; a crash
+    mid-chunk redoes at most one chunk of deterministic outputs.
+    ``after_unit`` runs after each checkpoint (the crash hook, which
+    also wants ``units_per_job=1`` for an exact crash point)."""
+    for start in range(0, len(units), units_per_job):
+        chunk = units[start : start + units_per_job]
+        rows = _rewrite_bins_distributed(spark, [s for u in chunk for s in u.specs])
+        rows_by_part: dict[str, list[dict]] = defaultdict(list)
+        for r in rows:
+            rows_by_part[r["partition"]].append(r)
+        for u in chunk:
+            new_rows = rows_by_part[u.part]
+            log.mark_unit_done(
+                u.part,
+                files_in=u.files_in,
+                new_manifest_rows=new_rows,
+                metrics={**u.metrics, "files_written": len(new_rows)},
+            )
+            if after_unit is not None:
+                after_unit()
+
+
 def compact(
     spark: SparkSession,
     table: TokenTable,
@@ -117,7 +223,7 @@ def compact(
     job_id: str | None = None,
     mode: str = "binpack",
     partitions: list[str] | None = None,
-    units_per_job: int = 64,
+    units_per_job: int = UNITS_PER_JOB,
     _fail_after_units: int | None = None,
 ) -> dict:
     """Compact small files; returns a summary dict (snapshot_id=None if no-op).
@@ -187,19 +293,38 @@ def compact(
     resumed = sum(1 for part, _ in units if part in done)
     pending = [(part, bins) for part, bins in units if part not in done]
 
-    def run_unit(part: str, bins) -> None:
-        files = [f for b in bins for f in b.files]
-        rows = sum(b.rows for b in bins)
-        n_out = len(bins)
-        out_dir = table.new_data_dir(job_tag) / part
-        if mode == "binpack":
+    # EXECUTE. Binpack: every bin is one in-task rewrite; pending units
+    # ride shared jobs of ``units_per_job`` units (run_task_units). Sort
+    # mode runs one unit per job (each needs its own range shuffle).
+    # The crash hook runs one unit per job for an exact crash point.
+    tick = crash_hook(_fail_after_units)
+
+    def unit_metrics(bins) -> dict:
+        return {
+            "files_rewritten": sum(len(b.files) for b in bins),
+            "bytes_compacted": sum(b.bytes for b in bins),
+            "rows": sum(b.rows for b in bins),
+        }
+
+    if mode == "binpack":
+        task_units = []
+        for part, bins in pending:
+            out_dir = table.new_data_dir(job_tag) / part
             specs = [
-                {"files": b.files, "partition": part, "out": str(out_dir / f"bin-{i:05d}.parquet")}
+                {"files": b.files, "partition": part,
+                 "outs": [str(out_dir / f"bin-{i:05d}.parquet")]}
                 for i, b in enumerate(bins)
             ]
-            stats = _rewrite_bins_distributed(spark, specs)
-            new_count = len(stats)
-        else:  # mode == "sort": global per-partition re-sort (one range shuffle)
+            files = [f for b in bins for f in b.files]
+            task_units.append(TaskUnit(part, specs, files, unit_metrics(bins)))
+        run_task_units(spark, log, task_units, 1 if tick else units_per_job, tick)
+    else:  # mode == "sort": global per-partition re-sort (one range shuffle)
+
+        def run_sort_unit(part: str, bins) -> None:
+            files = [f for b in bins for f in b.files]
+            rows = sum(b.rows for b in bins)
+            n_out = len(bins)
+            out_dir = table.new_data_dir(job_tag) / part
             df = spark.read.schema(TOKEN_SCHEMA).parquet(*files)
             (
                 df.repartitionByRange(n_out, "doc_id")
@@ -210,67 +335,14 @@ def compact(
             )
             new_files = list_parquet_files(out_dir)
             stats = file_stats_rows(spark, [(f, part) for f in new_files])
-            new_count = len(new_files)
-        log.mark_unit_done(
-            part,
-            files_in=files,
-            new_manifest_rows=stats,
-            metrics={
-                "files_rewritten": len(files),
-                "files_written": new_count,
-                "bytes_compacted": sum(b.bytes for b in bins),
-                "rows": rows,
-            },
-        )
+            log.mark_unit_done(
+                part,
+                files_in=files,
+                new_manifest_rows=stats,
+                metrics={**unit_metrics(bins), "files_written": len(new_files)},
+            )
 
-    # EXECUTE. Binpack: pending units GROUPED into chunks of
-    # ``units_per_job`` — all of a chunk's bins ride one Spark job
-    # (bins are independent tasks; grouping adds parallelism within the
-    # job and slashes per-job driver overhead). Lineage checkpoints stay
-    # per-partition. Sort mode / the crash hook run one unit per job
-    # (sort needs its own range shuffle per partition; the hook needs an
-    # exact crash point).
-    if _fail_after_units is not None:
-        for i, (part, bins) in enumerate(pending, 1):
-            run_unit(part, bins)
-            if i >= _fail_after_units:
-                raise RuntimeError(f"injected failure after {i} units (test hook)")
-    elif mode == "binpack" and pending:
-        for chunk_start in range(0, len(pending), units_per_job):
-            chunk = pending[chunk_start : chunk_start + units_per_job]
-            all_specs = []
-            for part, bins in chunk:
-                out_dir = table.new_data_dir(job_tag) / part
-                all_specs.extend(
-                    {
-                        "files": b.files,
-                        "partition": part,
-                        "out": str(out_dir / f"bin-{i:05d}.parquet"),
-                    }
-                    for i, b in enumerate(bins)
-                )
-            stats_all = _rewrite_bins_distributed(spark, all_specs)
-            stats_by_part: dict[str, list[dict]] = defaultdict(list)
-            for s in stats_all:
-                stats_by_part[s["partition"]].append(s)
-            for part, bins in chunk:
-                files = [f for b in bins for f in b.files]
-                log.mark_unit_done(
-                    part,
-                    files_in=files,
-                    new_manifest_rows=stats_by_part[part],
-                    metrics={
-                        "files_rewritten": len(files),
-                        "files_written": len(stats_by_part[part]),
-                        "bytes_compacted": sum(b.bytes for b in bins),
-                        "rows": sum(b.rows for b in bins),
-                    },
-                )
-    elif pending:
-        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-            futures = [ex.submit(run_unit, part, bins) for part, bins in pending]
-            for f in futures:
-                f.result()
+        run_threaded_units(lambda unit: run_sort_unit(*unit), pending, tick)
 
     # COMMIT — manifest delta assembled from lineage (covers resumed
     # units too); driver-side pyarrow write for small manifests,

@@ -3,7 +3,9 @@ scan equivalence, resume."""
 
 from __future__ import annotations
 
+import contextlib
 import itertools
+from collections import defaultdict
 
 import numpy as np
 import pytest
@@ -14,11 +16,48 @@ from feature_engineering_poc_spark.lakehouse import (
     write_token_table,
 )
 from feature_engineering_poc_spark.lakehouse.clustering import cluster, prune_files
+from feature_engineering_poc_spark.lakehouse.lineage import LineageLog
 from feature_engineering_poc_spark.plans.sfc import (
     hilbert_index,
     interleave_bits,
     string_prefix_ordinal,
 )
+
+from tests.conftest import last_job_id
+
+PATHS = ["task", "shuffle"]
+
+
+def _unit_bytes(spark, table) -> dict[str, int]:
+    out: dict[str, int] = defaultdict(int)
+    for r in table.manifest_records(spark):
+        out[r["partition"]] += r["file_bytes"]
+    return out
+
+
+@contextlib.contextmanager
+def _rewrite_path(spark, table, path: str):
+    """Pin which path every clustering unit takes: ``task`` keeps the
+    session's maxPartitionBytes (far above these fixtures' units);
+    ``shuffle`` lowers it below the smallest unit's bytes. Restored on
+    exit (the session is shared)."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    if path == "shuffle":
+        spark.conf.set(key, str(min(_unit_bytes(spark, table).values()) - 1))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _assert_path(table, result: dict, path: str) -> None:
+    """Which path ran, as the summary, the snapshot summary and the
+    ``committed`` lineage event report it."""
+    want = result["units"] if path == "shuffle" else 0
+    assert result["units_shuffled"] == want
+    assert table.snapshots()[-1]["summary"]["units_shuffled"] == want
+    assert LineageLog(table.root, result["job_tag"]).committed()["units_shuffled"] == want
 
 
 def test_zorder_matches_slow_reference():
@@ -55,8 +94,9 @@ def test_string_prefix_ordinal_order_preserving():
     assert (np.argsort(o, kind="stable") == np.argsort(trunc.values, kind="stable")).all()
 
 
+@pytest.mark.parametrize("path", PATHS)
 @pytest.mark.parametrize("curve", ["zorder", "hilbert"])
-def test_cluster_rewrite_equivalence_and_pruning(spark, tmp_path, curve):
+def test_cluster_rewrite_equivalence_and_pruning(spark, tmp_path, curve, path):
     t = write_token_table(spark, tmp_path / curve, n_rows=6000, files_per_source=8, max_tok=256)
     pre_sid = t.current_snapshot_id()
     m_before = t.manifest_df(spark)
@@ -66,9 +106,11 @@ def test_cluster_rewrite_equivalence_and_pruning(spark, tmp_path, curve):
     lo, hi = 16, 32
     pruned_before = prune_files(m_before, n_tok_range=(lo, hi)).count()
 
-    result = cluster(spark, t, columns=("n_tok", "doc_id"), curve=curve,
-                     target_file_bytes=48 * 1024)
+    with _rewrite_path(spark, t, path):
+        result = cluster(spark, t, columns=("n_tok", "doc_id"), curve=curve,
+                         target_file_bytes=48 * 1024)
     assert result["snapshot_id"] == pre_sid + 1
+    _assert_path(t, result, path)
 
     # correctness: scan equivalence + snapshot isolation
     assert_scan_equivalent(t.scan(spark, pre_sid), t.scan(spark))
@@ -100,14 +142,22 @@ def test_cluster_rewrite_equivalence_and_pruning(spark, tmp_path, curve):
     assert zrows == files_after
 
 
-def test_cluster_resume(spark, tmp_path):
+@pytest.mark.parametrize("path", PATHS)
+def test_cluster_resume(spark, tmp_path, path):
     t = write_token_table(spark, tmp_path / "resume", n_rows=2000, files_per_source=4, max_tok=64)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        cluster(spark, t, curve="zorder", target_file_bytes=48 * 1024,
-                job_id="clresume", _fail_after_units=1)
-    assert t.current_snapshot_id() == 1
-    result = cluster(spark, t, curve="zorder", target_file_bytes=48 * 1024, job_id="clresume")
+    with _rewrite_path(spark, t, path):
+        before = last_job_id(spark)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            cluster(spark, t, curve="zorder", target_file_bytes=48 * 1024,
+                    job_id="clresume", _fail_after_units=1)
+        assert t.current_snapshot_id() == 1
+        assert len(LineageLog(t.root, "clresume").completed_units()) == 1
+        if path == "task":  # the crashed unit ran as its own in-task job
+            assert last_job_id(spark) == before + 1
+        result = cluster(spark, t, curve="zorder", target_file_bytes=48 * 1024,
+                         job_id="clresume")
     assert result["snapshot_id"] == 2
+    _assert_path(t, result, path)
     assert_scan_equivalent(t.scan(spark, 1), t.scan(spark))
 
 
@@ -140,12 +190,15 @@ def test_partition_remap_places_buckets_exactly(spark):
         assert {(r.bucket, r.p) for r in placed.collect()} == {(b, b) for b in range(n)}
 
 
-def test_cluster_output_files_range_disjoint(spark, tmp_path):
-    """The quantile-placed rewrite must keep what range partitioning
-    guaranteed: per-file zkey envelopes that do not interleave (this is
-    the file-pruning power the op exists for)."""
+@pytest.mark.parametrize("path", PATHS)
+def test_cluster_output_files_range_disjoint(spark, tmp_path, path):
+    """Both rewrite paths must keep what range partitioning guaranteed:
+    per-file zkey envelopes that do not interleave (this is the
+    file-pruning power the op exists for)."""
     t = write_token_table(spark, tmp_path / "disj", n_rows=4000, files_per_source=6, max_tok=128)
-    cluster(spark, t, curve="zorder", target_file_bytes=32 * 1024)
+    with _rewrite_path(spark, t, path):
+        result = cluster(spark, t, curve="zorder", target_file_bytes=32 * 1024)
+    _assert_path(t, result, path)
     m = t.manifest_df(spark).select("partition", "min_zkey", "max_zkey").collect()
     by_part = {}
     for r in m:
@@ -156,3 +209,40 @@ def test_cluster_output_files_range_disjoint(spark, tmp_path):
         for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
             # adjacent files may share a boundary key value, never interleave
             assert hi1 <= lo2, (part, (lo1, hi1), (lo2, hi2))
+
+
+def test_cluster_task_path_one_job_equal_slices(spark, tmp_path):
+    """Units that fit one task run as ONE Spark job in total, and each
+    unit writes exactly n_out files whose row counts differ by <= 1."""
+    t = write_token_table(spark, tmp_path / "one", n_rows=4000, files_per_source=6, max_tok=128)
+    target = 32 * 1024
+    n_out = {p: max(1, round(b / target)) for p, b in _unit_bytes(spark, t).items()}
+    assert max(n_out.values()) > 1
+    before = last_job_id(spark)
+    result = cluster(spark, t, curve="zorder", target_file_bytes=target)
+    assert last_job_id(spark) == before + 1
+    _assert_path(t, result, "task")
+    rows: dict[str, list[int]] = defaultdict(list)
+    for r in t.manifest_records(spark):
+        rows[r["partition"]].append(r["record_count"])
+    assert {p: len(c) for p, c in rows.items()} == n_out
+    for part, counts in rows.items():
+        assert max(counts) - min(counts) <= 1, (part, counts)
+
+
+def test_cluster_paths_agree_on_keys(spark, tmp_path):
+    """The in-task rewrite and the shuffle path compute the same curve
+    key for every row (one key function, ``_keys``)."""
+    keyed = {}
+    for path in PATHS:
+        t = write_token_table(spark, tmp_path / path, n_rows=2000, files_per_source=4,
+                              max_tok=64)
+        with _rewrite_path(spark, t, path):
+            result = cluster(spark, t, curve="hilbert", target_file_bytes=16 * 1024)
+        _assert_path(t, result, path)
+        files = [r["file_path"] for r in t.manifest_records(spark)]
+        keyed[path] = sorted(
+            (r.doc_id, r.zkey)
+            for r in spark.read.parquet(*files).select("doc_id", "zkey").collect()
+        )
+    assert keyed["task"] == keyed["shuffle"]
