@@ -33,6 +33,8 @@ Scale shape:
 from __future__ import annotations
 
 from collections import defaultdict
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 
 import numpy as np
@@ -46,13 +48,7 @@ from ..plans.sfc import (
     normalize_to_grid,
     string_prefix_ordinal,
 )
-from .compaction import (
-    UNITS_PER_JOB,
-    TaskUnit,
-    crash_hook,
-    run_task_units,
-    run_threaded_units,
-)
+from .compaction import UNITS_PER_JOB, TaskUnit, crash_hook, run_task_units
 from .lineage import LineageLog
 from .merge import _parse_size
 from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
@@ -140,6 +136,22 @@ def _table_keys(key: dict, tbl) -> np.ndarray:
     specs = [_ColSpec(**c) for c in key["cols"]]
     cols = [tbl.column(s.name).to_pandas() for s in specs]
     return _keys(specs, key["curve"], key["bits"], cols)
+
+
+def _run_threaded_units(
+    fn: Callable, pending: list, after_unit: Callable[[], None] | None = None
+) -> None:
+    """Run ``fn(unit)`` for each pending shuffle unit (each needs its own
+    Spark jobs): concurrently from up to 8 threads, or one at a time with
+    ``after_unit`` after each (the crash hook's exact crash point)."""
+    if after_unit is not None:
+        for unit in pending:
+            fn(unit)
+            after_unit()
+    elif pending:
+        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
+            for f in [ex.submit(fn, unit) for unit in pending]:
+                f.result()
 
 
 def _partition_bounds(
@@ -315,7 +327,7 @@ def cluster(
     pending = [p for p in sorted(by_part) if p not in done]
     in_task = [task_unit(p) for p in pending if p not in shuffled]
     run_task_units(spark, log, in_task, 1 if tick else UNITS_PER_JOB, tick)
-    run_threaded_units(run_shuffle_unit, [p for p in pending if p in shuffled], tick)
+    _run_threaded_units(run_shuffle_unit, [p for p in pending if p in shuffled], tick)
 
     done = log.completed_units()
     removed = [f for rec in done.values() for f in rec["files_in"]]

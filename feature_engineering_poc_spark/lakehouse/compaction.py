@@ -10,8 +10,9 @@ Shape of the job, scale-first:
    pyarrow rewrite that reads exactly the binned files, sorts them by
    doc_id, writes one zstd file to a DETERMINISTICALLY-NAMED path
    (idempotent rerun) and returns its footer stats. Nothing crosses
-   partitions. clustering.py runs its single-task units through the
-   same kernel and executor (``run_task_units``).
+   partitions. clustering.py runs its single-task units and merge.py
+   its copy-on-write batches through the same kernel and executor
+   (``run_task_units``).
 3. CHECKPOINT: a lineage record per completed partition carries the
    unit's new manifest rows + metrics; a resumed job skips completed
    units entirely (lineage.py).
@@ -30,15 +31,14 @@ from __future__ import annotations
 import itertools
 from collections import defaultdict
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from ..plans.binpack import pack_bins
 from .lineage import LineageLog
-from .metadata import MANIFEST_SCHEMA, TOKEN_SCHEMA, TokenTable, list_parquet_files
-from .stats import file_stats_rows
+from .metadata import MANIFEST_SCHEMA, TokenTable
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 # Partition units per in-task rewrite job (``run_task_units``).
@@ -47,11 +47,12 @@ UNITS_PER_JOB = 64
 
 def _rewrite_bins_distributed(
     spark: SparkSession, bin_specs: list[dict]
-) -> list[dict]:
-    """Execute bin rewrites as ONE shuffle-free Spark job.
+) -> list[list[dict]]:
+    """Execute in-task rewrites as ONE shuffle-free Spark job; returns
+    each spec's manifest rows, in spec order.
 
-    Each task receives bin specs, reads the bin's files with pyarrow
-    (vectorized C++, no per-row Python), sorts the bin, writes its
+    Each task receives specs, reads each spec's files with pyarrow
+    (vectorized C++, no per-row Python), rewrites them, writes its
     outputs with zstd, and returns their manifest rows (footer stats
     computed in-task — no second pass).
 
@@ -61,7 +62,9 @@ def _rewrite_bins_distributed(
     the rows get their curve key (``clustering._table_keys``), are
     stably sorted on it and cut into ``len(outs)`` equal-row slices,
     each written with the ``zkey`` column so its footer carries zkey
-    min/max.
+    min/max. A MERGE batch spec carries ``apply`` (the source rows'
+    parquet files) instead, and merge.py's ``_merge_in_task`` applies
+    them and names one output per ``source`` value.
 
     Rewrites are embarrassingly parallel across bins: no shuffle, no
     range-sampling pass, parallelism = number of bins (at 100 TB:
@@ -81,22 +84,26 @@ def _rewrite_bins_distributed(
         cols = ["doc_id", "tokens", "n_tok", "source"]
         for pdf in batches:
             out = []
-            for spec_json in pdf["spec"]:
+            for idx, spec_json in zip(pdf["idx"], pdf["spec"]):
                 spec = _json.loads(spec_json)
                 # fs layer: inputs/outputs may be local paths or
                 # file://-or-object-store URIs (fs.py)
-                tbl = pa.concat_tables(
-                    [fslayer.read_parquet(f, columns=cols) for f in spec["files"]]
-                )
-                outs = spec["outs"]
-                if spec.get("key") is None:
+                tables = [fslayer.read_parquet(f, columns=cols) for f in spec["files"]]
+                if "apply" in spec:
+                    from feature_engineering_poc_spark.lakehouse.merge import _merge_in_task
+
+                    slices = _merge_in_task(spec, tables)
+                elif spec.get("key") is None:
+                    tbl = pa.concat_tables(tables)
                     tbl = tbl.take(pc.sort_indices(tbl.column("doc_id")))
-                    slices = [(outs[0], tbl)]
+                    slices = [(spec["outs"][0], spec["partition"], tbl)]
                 else:
                     from feature_engineering_poc_spark.lakehouse.clustering import (
                         _table_keys,
                     )
 
+                    tbl = pa.concat_tables(tables)
+                    outs = spec["outs"]
                     zkey = _table_keys(spec["key"], tbl)
                     order = np.argsort(zkey, kind="stable")
                     # drop the inputs' Spark row schema (it omits zkey and
@@ -105,9 +112,10 @@ def _rewrite_bins_distributed(
                            .append_column("zkey", pa.array(zkey[order])))
                     n, k = tbl.num_rows, max(1, min(len(outs), tbl.num_rows))
                     cuts = [i * n // k for i in range(k + 1)]
-                    slices = [(outs[i], tbl.slice(cuts[i], cuts[i + 1] - cuts[i]))
+                    slices = [(outs[i], spec["partition"],
+                               tbl.slice(cuts[i], cuts[i + 1] - cuts[i]))
                               for i in range(k)]
-                for path, part in slices:
+                for path, partition, part in slices:
                     # zstd: rewritten files are cold data — trade CPU (which
                     # scales with executors) for bytes (which cost forever)
                     n_bytes = fslayer.write_parquet(part, path, compression="zstd")
@@ -117,7 +125,7 @@ def _rewrite_bins_distributed(
                     out.append(
                         {
                             "file_path": path,
-                            "partition": spec["partition"],
+                            "partition": partition,
                             "record_count": part.num_rows,
                             "file_bytes": n_bytes,
                             "min_doc_id": pc.min(doc).as_py(),
@@ -126,27 +134,36 @@ def _rewrite_bins_distributed(
                             "max_n_tok": pc.max(ntk).as_py(),
                             "min_zkey": None if zk is None else pc.min(zk).as_py(),
                             "max_zkey": None if zk is None else pc.max(zk).as_py(),
+                            "_spec": idx,
                         }
                     )
-            yield pd.DataFrame(out, columns=[f.name for f in MANIFEST_SCHEMA.fields])
+            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
 
+    out_schema = T.StructType(
+        MANIFEST_SCHEMA.fields + [T.StructField("_spec", T.IntegerType())]
+    )
     # Slices = 4×parallelism (capped by bin count): several bins ride
     # one task, cutting per-task launch/Arrow overhead ~an order of
     # magnitude vs task-per-bin while keeping 4 waves for balance.
     # parallelize (not repartition): no round-robin shuffle, no barrier.
     n_slices = max(1, min(len(bin_specs), spark.sparkContext.defaultParallelism * 4))
     rdd = spark.sparkContext.parallelize(
-        [(_json.dumps(s),) for s in bin_specs], n_slices
+        [(i, _json.dumps(s)) for i, s in enumerate(bin_specs)], n_slices
     )
-    specs_df = spark.createDataFrame(rdd, "spec string")
-    return [r.asDict() for r in specs_df.mapInPandas(kernel, MANIFEST_SCHEMA).collect()]
+    specs_df = spark.createDataFrame(rdd, "idx int, spec string")
+    per_spec: list[list[dict]] = [[] for _ in bin_specs]
+    for r in specs_df.mapInPandas(kernel, out_schema).collect():
+        row = r.asDict()
+        per_spec[row.pop("_spec")].append(row)
+    return per_spec
 
 
 @dataclass
 class TaskUnit:
-    """One resumable partition unit whose bins run as in-task rewrites."""
+    """One resumable unit (its lineage ``name``) whose specs run as
+    in-task rewrites."""
 
-    part: str
+    name: str
     specs: list[dict]
     files_in: list[str]
     metrics: dict
@@ -167,22 +184,6 @@ def crash_hook(fail_after_units: int | None) -> Callable[[], None] | None:
     return tick
 
 
-def run_threaded_units(
-    fn: Callable, pending: list, after_unit: Callable[[], None] | None = None
-) -> None:
-    """Run ``fn(unit)`` for each pending unit that needs its own Spark
-    jobs: concurrently from up to 8 threads, or one at a time with
-    ``after_unit`` after each (the crash hook's exact crash point)."""
-    if after_unit is not None:
-        for unit in pending:
-            fn(unit)
-            after_unit()
-    elif pending:
-        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-            for f in [ex.submit(fn, unit) for unit in pending]:
-                f.result()
-
-
 def run_task_units(
     spark: SparkSession,
     log: LineageLog,
@@ -191,7 +192,7 @@ def run_task_units(
     after_unit: Callable[[], None] | None = None,
 ) -> None:
     """Run units GROUPED into chunks of ``units_per_job``: all of a
-    chunk's bins ride one Spark job (bins are independent tasks, so
+    chunk's specs ride one Spark job (specs are independent tasks, so
     grouping loses no parallelism and slashes per-job driver overhead).
     Lineage checkpoints stay per-unit, written after each job; a crash
     mid-chunk redoes at most one chunk of deterministic outputs.
@@ -199,14 +200,11 @@ def run_task_units(
     also wants ``units_per_job=1`` for an exact crash point)."""
     for start in range(0, len(units), units_per_job):
         chunk = units[start : start + units_per_job]
-        rows = _rewrite_bins_distributed(spark, [s for u in chunk for s in u.specs])
-        rows_by_part: dict[str, list[dict]] = defaultdict(list)
-        for r in rows:
-            rows_by_part[r["partition"]].append(r)
+        per_spec = iter(_rewrite_bins_distributed(spark, [s for u in chunk for s in u.specs]))
         for u in chunk:
-            new_rows = rows_by_part[u.part]
+            new_rows = [r for _ in u.specs for r in next(per_spec)]
             log.mark_unit_done(
-                u.part,
+                u.name,
                 files_in=u.files_in,
                 new_manifest_rows=new_rows,
                 metrics={**u.metrics, "files_written": len(new_rows)},
@@ -221,21 +219,17 @@ def compact(
     target_file_bytes: int = DEFAULT_TARGET_BYTES,
     small_file_threshold: int | None = None,
     job_id: str | None = None,
-    mode: str = "binpack",
     partitions: list[str] | None = None,
     units_per_job: int = UNITS_PER_JOB,
     _fail_after_units: int | None = None,
 ) -> dict:
     """Compact small files; returns a summary dict (snapshot_id=None if no-op).
 
-    ``mode="binpack"`` (default, Iceberg-binpack semantics): zero
-    shuffle — each FFD bin becomes one task that rewrites its files
-    into one sorted output file. ``mode="sort"``: per-partition global
-    sort via ``repartitionByRange(doc_id)`` (use when the table needs
-    re-sorting, not just file-size repair; clustering.py is the
-    dedicated re-sort op).
+    Iceberg-binpack semantics with zero shuffle: each FFD bin becomes
+    one task that rewrites its files into one doc_id-sorted output file
+    (clustering.py is the re-sort op).
 
-    Binpack execution GROUPS partition units: up to ``units_per_job``
+    Execution GROUPS partition units: up to ``units_per_job``
     partitions' bins ride in ONE Spark job (bins are independent tasks,
     so grouping loses no parallelism). This bounds the per-job driver
     submission overhead — the constant serial term — at 1/64th of a
@@ -293,56 +287,25 @@ def compact(
     resumed = sum(1 for part, _ in units if part in done)
     pending = [(part, bins) for part, bins in units if part not in done]
 
-    # EXECUTE. Binpack: every bin is one in-task rewrite; pending units
-    # ride shared jobs of ``units_per_job`` units (run_task_units). Sort
-    # mode runs one unit per job (each needs its own range shuffle).
-    # The crash hook runs one unit per job for an exact crash point.
+    # EXECUTE: every bin is one in-task rewrite; pending units ride
+    # shared jobs of ``units_per_job`` units (run_task_units). The crash
+    # hook runs one unit per job for an exact crash point.
     tick = crash_hook(_fail_after_units)
-
-    def unit_metrics(bins) -> dict:
-        return {
+    task_units = []
+    for part, bins in pending:
+        out_dir = table.new_data_dir(job_tag) / part
+        specs = [
+            {"files": b.files, "partition": part,
+             "outs": [str(out_dir / f"bin-{i:05d}.parquet")]}
+            for i, b in enumerate(bins)
+        ]
+        metrics = {
             "files_rewritten": sum(len(b.files) for b in bins),
             "bytes_compacted": sum(b.bytes for b in bins),
             "rows": sum(b.rows for b in bins),
         }
-
-    if mode == "binpack":
-        task_units = []
-        for part, bins in pending:
-            out_dir = table.new_data_dir(job_tag) / part
-            specs = [
-                {"files": b.files, "partition": part,
-                 "outs": [str(out_dir / f"bin-{i:05d}.parquet")]}
-                for i, b in enumerate(bins)
-            ]
-            files = [f for b in bins for f in b.files]
-            task_units.append(TaskUnit(part, specs, files, unit_metrics(bins)))
-        run_task_units(spark, log, task_units, 1 if tick else units_per_job, tick)
-    else:  # mode == "sort": global per-partition re-sort (one range shuffle)
-
-        def run_sort_unit(part: str, bins) -> None:
-            files = [f for b in bins for f in b.files]
-            rows = sum(b.rows for b in bins)
-            n_out = len(bins)
-            out_dir = table.new_data_dir(job_tag) / part
-            df = spark.read.schema(TOKEN_SCHEMA).parquet(*files)
-            (
-                df.repartitionByRange(n_out, "doc_id")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", max(1, (rows + n_out - 1) // n_out + 1))
-                .parquet(str(out_dir))
-            )
-            new_files = list_parquet_files(out_dir)
-            stats = file_stats_rows(spark, [(f, part) for f in new_files])
-            log.mark_unit_done(
-                part,
-                files_in=files,
-                new_manifest_rows=stats,
-                metrics={**unit_metrics(bins), "files_written": len(new_files)},
-            )
-
-        run_threaded_units(lambda unit: run_sort_unit(*unit), pending, tick)
+        task_units.append(TaskUnit(part, specs, [f for b in bins for f in b.files], metrics))
+    run_task_units(spark, log, task_units, 1 if tick else units_per_job, tick)
 
     # COMMIT — manifest delta assembled from lineage (covers resumed
     # units too); driver-side pyarrow write for small manifests,

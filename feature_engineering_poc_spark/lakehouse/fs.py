@@ -1,9 +1,10 @@
 """Thin filesystem layer (pyarrow.fs) for executor-side file IO.
 
-Every direct file operation in the maintenance data plane (binpack
-kernel reads/writes, footer stats, expiry deletes) routes through this
-module so paths may be plain local paths, ``file://`` URIs, or — on a
-real deployment — any pyarrow-supported object store (``s3://``,
+Every direct file operation in the maintenance data plane (in-task
+rewrite reads/writes, footer stats, expiry deletes, MERGE staging
+cleanup) routes through this module so paths may be plain local
+paths, ``file://`` URIs, or — on a real deployment — any
+pyarrow-supported object store (``s3://``,
 ``gcs://``, ``hdfs://``): ``pyarrow.fs.FileSystem.from_uri`` dispatches
 on the scheme. The sandbox only exercises local + ``file://`` (tested
 end-to-end in tests/test_fs_layer.py); the object-storage deltas
@@ -102,6 +103,16 @@ def delete(path) -> None:
         if "No such file" in str(e) or "not found" in str(e).lower():
             return
         raise
+
+
+def delete_dir(path) -> None:
+    """Delete a directory and everything under it; a missing directory
+    is not an error."""
+    from pyarrow import fs as pafs
+
+    filesystem, p = resolve(path)
+    if filesystem.get_file_info(p).type != pafs.FileType.NotFound:
+        filesystem.delete_dir(p)
 
 
 def delete_files(

@@ -14,40 +14,45 @@ Semantics (SQL MERGE): source rows carry an optional ``_op`` column in
   ``duplicate_policy="last"`` dedupe via salted two-phase aggregation
   (skew.py) keyed on a ``_seq`` ordering column when present.
 
-Scale shape — ONE rewrite path: batches packed under the broadcast cap.
-The cap is the build-side memory budget (as in CAMEL's broadcast
-budget); it bounds both the planning rows the driver holds and every
-batch's broadcast.
+Scale shape — ONE rewrite path: every batch is an in-task pyarrow
+rewrite, and all batches share one shuffle-free Spark job (compaction's
+kernel and executor). The broadcast cap (as in CAMEL's build-side
+budget) bounds only what planning brings to the driver and broadcasts.
 
-1. PROFILE. One observed no-op pass over the prepared source (it also
-   fills the source's cache) gives the key range, the row and upsert
-   counts and the doc_ids' total bytes. Manifest min/max doc_id overlap
-   with the key range gives the candidate files (no data read).
-2. PROBE. A column-pruned scan of the candidates (doc_id + file path)
-   joins the source keys. If the planning collect fits the cap
+1. PROFILE + STAGE. One write of the prepared source to
+   ``<data dir of the job>/_staging/src`` (deletes shed their payload)
+   observes the key range, the row and upsert counts and the doc_ids'
+   total bytes. The staged parquet replaces a cache of the source and
+   is deleted when the merge returns or raises; a killed process leaves
+   it to orphan GC. Manifest min/max doc_id overlap with the key range
+   gives the candidate files (no data read).
+2. PLAN. A column-pruned scan of the candidates (doc_id + file path)
+   joins the staged keys. If the planning collect fits the cap
    (``_driver_bytes``), ONE collect brings back every source key and
    every match as (doc_id, size estimate, op flags, file id); the
    counts, the duplicate check and the null-``source`` insert check
    then run on the driver. A larger source is planned distributed: a
    countDistinct duplicate check, the probe join persisted once and
-   grouped per touched file in one collect. Either way every touched
-   file gets its exact matched bytes, and no write starts before the
+   grouped per touched file in one collect. Touched files are packed
+   first-fit-decreasing by manifest bytes plus matched bytes into
+   batches under ``spark.sql.files.maxPartitionBytes`` (one scan task,
+   the task size clustering uses too). No write starts before the
    checks pass.
-3. REWRITE. Touched files are packed first-fit-decreasing by matched
-   bytes into batches under the cap (plans/binpack). A batch is one
-   broadcast join of its files against its own slice of the source plus
-   one ``partitionBy`` write (``source`` is immutable under update, so
-   a row's own column routes it back to its partition). Files whose
-   matched rows alone exceed the cap share one shuffle-join batch.
-   Not-matched upserts are unioned into batch 0's write, with a fan-out
-   sized from the exact insert volume. Batches are deterministic for a
-   given parent snapshot and source, and each one is a lineage unit, so
-   a rerun under the same job_id skips the batches that finished.
+3. REWRITE. Each batch is one task: it reads its files and the source
+   rows keyed in them, drops deletes, takes upserted tokens/n_tok (the
+   target row keeps its ``source``), appends the inserts (batch 0),
+   writes one zstd file per ``source`` value sorted by doc_id and
+   returns in-task footer stats. A staged source within one task's
+   bytes is read whole by every task; a larger one (and every
+   distributed plan) is first cut into per-batch slices by one
+   partitioned write. Batches are deterministic for a given parent
+   snapshot and source, and each one is a lineage unit, so a rerun
+   under the same job_id skips the batches that finished.
 4. COMMIT: manifest − rewritten files + batch outputs, one atomic
    snapshot swap. Old snapshots are untouched (snapshot isolation).
 
 The summary records the seconds of each phase (``phases``), the number
-of batches and how many of them were shuffle joins.
+of batches, the planning side and whether the source was sliced.
 """
 
 from __future__ import annotations
@@ -56,27 +61,20 @@ import logging
 import os
 import time
 import zlib
-from concurrent.futures import ThreadPoolExecutor
-from urllib.parse import unquote
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans.binpack import pack_bins
+from . import fs as fslayer
+from .compaction import UNITS_PER_JOB, TaskUnit, crash_hook, run_task_units
 from .lineage import LineageLog
 from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
 from .skew import salted_latest_by_key
-from .stats import file_stats_rows
-
-# Target bytes per insert-path output task; sizes the insert fan-out
-# from the exact insert volume (overridable for tests / unusual
-# deployments).
-INSERT_TARGET_BYTES = int(
-    os.environ.get("FEPOC_MERGE_INSERT_TARGET", str(128 * 1024 * 1024))
-)
 
 # Size estimate of a source row: 4 bytes per token plus ROW_BYTES.
 ROW_BYTES = 64
@@ -85,6 +83,14 @@ ROW_BYTES = 64
 # the doc_id's offset and the size estimate (4 each), the file id (8)
 # and three flags with their validity bits (see _driver_bytes).
 DRIVER_ROW_BYTES = 20
+
+# The staged source: the table's columns plus the MERGE op.
+STAGED_SCHEMA = T.StructType(TOKEN_SCHEMA.fields + [T.StructField("_op", T.StringType())])
+_TOKEN_ARROW = pa.schema([
+    ("doc_id", pa.string()), ("tokens", pa.list_(pa.int32())),
+    ("n_tok", pa.int32()), ("source", pa.string()),
+])
+_STAGED_ARROW = _TOKEN_ARROW.append(pa.field("_op", pa.string()))
 
 
 def _upsert() -> F.Column:
@@ -116,14 +122,17 @@ def _parse_size(s: str) -> int:
 
 
 def _broadcast_cap(spark: SparkSession) -> int:
-    """Per-batch broadcast cap, derived from the LIVE JVM heap.
+    """Driver planning budget, derived from the LIVE JVM heap.
 
-    ``FEPOC_MERGE_BROADCAST_CAP`` overrides. Otherwise: heap/16 — up to
-    8 rewrite batches broadcast concurrently (ThreadPoolExecutor below),
-    and the in-heap hash relation costs ~2× the raw estimate, so worst
-    case ≈ heap/2 of broadcast residency. Clamped to 80% of
-    ``spark.driver.maxResultSize`` when one is set (broadcast relations
-    are built through driver collection) and floored at 64 MB.
+    It bounds the one planning collect (``_driver_bytes``) and the
+    source-key broadcast that feeds the probe join; batches broadcast
+    nothing. ``FEPOC_MERGE_BROADCAST_CAP`` overrides. Otherwise
+    heap/16: the key broadcast's in-heap hash relation costs ~2× its raw
+    estimate and the collect passes through the heap as Arrow batches,
+    so one planning pass holds a few times the budget at most, which
+    leaves room for several merges planning at once (a streaming sink
+    beside a backfill). Clamped to 80% of ``spark.driver.maxResultSize``
+    when one is set (both are driver collections) and floored at 64 MB.
     """
     env = os.environ.get("FEPOC_MERGE_BROADCAST_CAP")
     if env is not None:
@@ -171,28 +180,6 @@ def _prepare_source(
     return source_df
 
 
-def _apply_merge(target_df: DataFrame, src_side) -> DataFrame:
-    """LEFT-join the (aliased s_*) source side onto target rows and
-    apply MERGE semantics: deletes drop, upserts replace tokens/n_tok,
-    unmatched rows pass through."""
-    joined = target_df.alias("t").join(
-        src_side, F.col("t.doc_id") == F.col("s_doc_id"), "left"
-    )
-    return (
-        joined.filter((F.col("s_op").isNull()) | (F.col("s_op") != "delete"))
-        .select(
-            F.col("t.doc_id").alias("doc_id"),
-            F.coalesce(
-                F.when(F.col("s_op") == "upsert", F.col("s_tokens")), F.col("t.tokens")
-            ).alias("tokens"),
-            F.coalesce(
-                F.when(F.col("s_op") == "upsert", F.col("s_n_tok")), F.col("t.n_tok")
-            ).alias("n_tok"),
-            F.col("t.source").alias("source"),
-        )
-    )
-
-
 def _duplicate_keys(example) -> DuplicateSourceKeys:
     return DuplicateSourceKeys(
         f"source has duplicate doc_id (e.g. {example}); "
@@ -201,9 +188,7 @@ def _duplicate_keys(example) -> DuplicateSourceKeys:
 
 
 def _null_source_inserts() -> ValueError:
-    # a null `source` would be written under the dynamic-partition
-    # marker directory and read back as the literal marker string,
-    # silently diverging from the row's actual (null) column
+    # a row without a partition value has no partition to be written to
     return ValueError(
         "merge source contains rows with null `source` "
         "(partition column); inserts must carry a partition value"
@@ -213,7 +198,7 @@ def _null_source_inserts() -> ValueError:
 class _DriverPlan:
     """Planning from ONE collect of the source keys and their matches.
 
-    The collected rows are the prepared source's keys (``_f = -1``) plus
+    The collected rows are the staged source's keys (``_f = -1``) plus
     one row per probe match (``_f`` = the matched file's id, see
     ``_file_ids``): doc_id, the row's size estimate, the op flags, the
     null-``source`` flag. Paths never travel per row, so the collect
@@ -248,7 +233,6 @@ class _DriverPlan:
         self.updated = int((up & matched).sum())
         self.deleted = int((dl & matched).sum())
         self.inserted = int(inserts.sum())
-        self.insert_bytes = int(keys_t["_bytes"].to_numpy()[inserts].sum())
         ids, at = np.unique(self.hit_files, return_inverse=True)
         per_file = np.bincount(at, weights=hits_t["_bytes"].to_numpy(), minlength=len(ids))
         path_of = {i: p for p, i in file_ids.items()}
@@ -260,48 +244,30 @@ class _DriverPlan:
         dup = counts.filter(pc.greater(counts.field("counts"), 1))
         return dup[0]["values"].as_py() if len(dup) else None
 
-    def source_slice(self, i: int, files: list[str]):
-        """(source rows keyed in ``files``, insert rows or None).
-
-        Both come out of ONE join against a driver-built key table, so
-        batch 0's write, which fuses them, broadcasts that table once:
-        insert keys carry ``_k = 'insert'`` and are selected by
-        ``concat_ws(':', _k, _op) = 'insert:upsert'``. That predicate
-        spans both join sides, so it cannot be pushed into the key
-        table; a plain ``_k = 'insert'`` filter would be, which gives
-        two different key tables and one more broadcast job per merge
-        (the default-cap job budget in tests/test_merge.py fails then).
-        """
-        ids = [self.file_ids[_norm(p)] for p in files]
-        keys = pc.unique(self.hit_ids.filter(pa.array(np.isin(self.hit_files, ids))))
-        ins = self.insert_keys if i == 0 else self.insert_keys.slice(0, 0)
-        key_df = self.spark.createDataFrame(pa.table({
-            "doc_id": pa.concat_arrays([keys, ins.combine_chunks()]).cast(pa.string()),
-            "_k": pa.array([None] * len(keys) + ["insert"] * len(ins), pa.string()),
+    def tags(self, batches: list[list[str]]) -> DataFrame:
+        """(doc_id, _batch) of every matched key and, in batch 0, every
+        insert key (``_stage_slices``)."""
+        batch_of = {self.file_ids[_norm(f)]: i for i, files in enumerate(batches) for f in files}
+        at = [batch_of[f] for f in self.hit_files.tolist()]
+        ins = self.insert_keys.combine_chunks()
+        return self.spark.createDataFrame(pa.table({
+            "doc_id": pa.concat_arrays(
+                [self.hit_ids.combine_chunks().cast(pa.string()), ins.cast(pa.string())]),
+            "_batch": pa.array(at + [0] * len(ins), pa.int32()),
         }))
-        joined = self.src.join(F.broadcast(key_df), "doc_id")
-        inserts = joined.where(F.concat_ws(":", "_k", "_op") == "insert:upsert")
-        # insert keys ride in the rewrite side without payload (they
-        # match no target row)
-        side = joined.withColumn("_op", F.when(F.col("_k").isNull(), F.col("_op")))
-        return side, inserts if len(ins) else None
 
     def close(self) -> None:
         """Nothing persisted."""
 
 
 class _DistributedPlan:
-    """Planning for a source above the driver budget, shaped like the
-    per-partition plan it replaced: the probe join is persisted once and
-    grouped per touched file in one collect; after packing, the matched
-    source rows are tagged with their batch and persisted once, so each
-    batch takes its slice by a cache-local filter and the inserts
-    anti-join the persisted matches."""
+    """Planning for a source above the driver budget: the probe join is
+    persisted once and grouped per touched file in one collect; after
+    packing, its rows tag the source with their batches (``tags``)."""
 
     def __init__(self, spark, src, prof, probe_scan, max_touched_files):
         self.spark, self.src = spark, src
-        self.eff_src = None
-        totals = dict.fromkeys(("n_up", "n_del", "up_bytes", "n_null"), 0)
+        totals = dict.fromkeys(("n_up", "n_del", "n_null"), 0)
         src_keys = src.select(
             "doc_id", "_op", _est_bytes_col().alias("_bytes"),
             (_upsert() & F.col("source").isNull()).cast("long").alias("_null"),
@@ -316,7 +282,6 @@ class _DistributedPlan:
             F.sum(_upsert().cast("long")).alias("n_up"),
             F.sum((F.col("_op") == "delete").cast("long")).alias("n_del"),
             F.sum("_bytes").alias("bytes"),
-            F.sum(F.when(_upsert(), F.col("_bytes"))).alias("up_bytes"),
             F.sum("_null").alias("n_null"),
         )
         # at most cap+1 file rows ever reach the driver; over the cap the
@@ -336,43 +301,25 @@ class _DistributedPlan:
             raise _null_source_inserts()
         self.updated, self.deleted = totals["n_up"], totals["n_del"]
         self.inserted = int(prof["n_up"] - totals["n_up"])
-        self.insert_bytes = int((prof["up_bytes"] or 0) - totals["up_bytes"])
 
-    def source_slice(self, i: int, files: list[str]):
-        """(source rows keyed in ``files``, insert rows or None); needs
-        ``assign_batches`` first."""
-        side = self.eff_src.where(F.col("_batch") == i)
-        inserts = None
-        if i == 0 and self.inserted:
-            inserts = self.src.where(_upsert()).join(
-                self.matched.select("doc_id"), "doc_id", "left_anti")
-        return side, inserts
-
-    def assign_batches(self, batches) -> None:
-        """Tag every matched source row with its batch and persist the
-        tagged rows once (delete rows shed their payload). The
-        ``distinct`` guards against a key probed in more than one file
-        of a malformed table."""
+    def tags(self, batches: list[list[str]]) -> DataFrame:
+        """(doc_id, _batch) of every matched key and, in batch 0, every
+        insert key (the upserts no probe matched). The ``distinct``
+        guards against a key probed in more than one file of a malformed
+        table."""
         file_batch = self.spark.createDataFrame(
-            [(_norm(f), i) for i, (files, _) in enumerate(batches) for f in files],
+            [(_norm(f), i) for i, files in enumerate(batches) for f in files],
             "file_path string, _batch int",
         )
         tags = self.matched.join(F.broadcast(file_batch), "file_path").select("doc_id", "_batch")
-        self.eff_src = (
-            self.src.join(tags.distinct(), "doc_id")
-            .select(
-                "doc_id",
-                F.when(_upsert(), F.col("tokens")).alias("tokens"),
-                F.when(_upsert(), F.col("n_tok")).alias("n_tok"),
-                "_op", "_batch",
-            )
-            .persist()
-        )
+        if self.inserted:
+            inserts = self.src.where(_upsert()).join(
+                self.matched.select("doc_id"), "doc_id", "left_anti")
+            tags = tags.unionByName(inserts.select("doc_id", F.lit(0).alias("_batch")))
+        return tags.distinct()
 
     def close(self) -> None:
         self.matched.unpersist()
-        if self.eff_src is not None:
-            self.eff_src.unpersist()
 
 
 def _est_bytes_col() -> F.Column:
@@ -401,67 +348,74 @@ def _collect_arrow(df: DataFrame) -> pa.Table:
     return df.toArrow()
 
 
-def _profile(src: DataFrame) -> dict:
-    """ONE pass over the prepared source (which also fills its cache):
-    key range, row counts, upsert bytes, null-``source`` upserts and the
-    doc_ids' total UTF-8 bytes, gathered as observed metrics of a no-op
-    write — no shuffle, and no key leaves the executors."""
+def _stage(src: DataFrame, path) -> dict:
+    """ONE pass over the prepared source: write it as parquet to ``path``
+    (the staged source every later step reads; deletes shed their
+    payload) and observe the key range, the row and upsert counts, the
+    null-``source`` upserts and the doc_ids' total UTF-8 bytes — no key
+    leaves the executors."""
     obs = Observation()
-    src.observe(
+    observed = src.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.min("doc_id").alias("lo"),
         F.max("doc_id").alias("hi"),
         F.count(F.when(_upsert(), 1)).alias("n_up"),
-        F.sum(F.when(_upsert(), _est_bytes_col())).alias("up_bytes"),
         F.count(F.when(_upsert() & F.col("source").isNull(), 1)).alias("n_null"),
         F.sum(F.octet_length("doc_id")).alias("key_bytes"),
-    ).write.format("noop").mode("overwrite").save()
+    )
+    payload = {"tokens", "n_tok"}
+    observed.select(*[
+        (F.when(_upsert(), F.col(f.name)) if f.name in payload else F.col(f.name))
+        .cast(f.dataType).alias(f.name)
+        for f in STAGED_SCHEMA.fields
+    ]).write.mode("overwrite").parquet(str(path))
     return obs.get
 
 
-def _write_batch(
-    spark, files, side, broadcast, inserts, n_ins, out_dir, target_rows
-) -> list[tuple]:
-    """ONE job: rewrite ``files`` against ``side`` (broadcast or
-    shuffle-joined), union the insert rows, route every row to its
-    ``_part=<source>`` directory. Returns ``(file, partition)`` pairs."""
-    parts = []
-    if files:
-        side = side.select(
-            F.col("doc_id").alias("s_doc_id"),
-            F.when(_upsert(), F.col("tokens")).alias("s_tokens"),
-            F.when(_upsert(), F.col("n_tok")).alias("s_n_tok"),
-            F.col("_op").alias("s_op"),
-        )
-        rewritten = _apply_merge(
-            spark.read.schema(TOKEN_SCHEMA).parquet(*files),
-            F.broadcast(side) if broadcast else side,
-        )
-        if broadcast:
-            # ZERO shuffle: each scan split streams through the join, a
-            # small in-task sort and the parquet encoder. coalesce
-            # propagates upstream, so halve the task count only once it
-            # exceeds the core count.
-            rewritten = rewritten.coalesce(
-                max(min(len(files), spark.sparkContext.defaultParallelism), len(files) // 2)
-            )
-        parts.append(rewritten)
-    if inserts is not None:
-        parts.append(inserts.select("doc_id", "tokens", "n_tok", "source").coalesce(n_ins))
-    out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    writer = out.withColumn("_part", F.col("source")).sortWithinPartitions("_part", "doc_id").write
-    if files and not broadcast:
-        # keep the sort-merge join's AQE-sized partitions (coalescing
-        # would concentrate an over-cap batch on the fewest tasks); bound
-        # file sizes from the manifest row counts instead
-        n_out = max(1, len(files) // 2)
-        writer = writer.option("maxRecordsPerFile", target_rows // n_out + 1)
-    writer.mode("overwrite").partitionBy("_part").parquet(str(out_dir))
+def _stage_slices(staged: DataFrame, tags: DataFrame, path) -> dict[int, list[str]]:
+    """ONE partitioned write of the staged rows tagged with their batch
+    (``tags``); returns each batch's slice files."""
+    staged.join(tags, "doc_id").write.mode("overwrite").partitionBy("_batch").parquet(str(path))
+    return {int(d.name.split("=", 1)[1]): list_parquet_files(d)
+            for d in sorted(path.glob("_batch=*"))}
+
+
+def _merge_in_task(spec: dict, tables: list) -> list[tuple]:
+    """Copy-on-write of one batch inside its task (compaction's kernel
+    calls this for specs with ``apply``). ``tables`` are the batch's
+    files; ``spec["apply"]`` the parquet files of the source rows (the
+    whole staged source or the batch's slice); ``spec["insert"]`` batch 0's insert keys, or True
+    when every upsert of the slice that matches no row is an insert.
+    Returns ``(path, partition, rows)`` per ``source`` value, rows
+    sorted by doc_id."""
+    read = [fslayer.read_parquet(f, columns=_STAGED_ARROW.names).cast(_STAGED_ARROW)
+            for f in spec["apply"]]
+    src = pa.concat_tables(read) if read else _STAGED_ARROW.empty_table()
+    tbl = (pa.concat_tables([t.cast(_TOKEN_ARROW) for t in tables]) if tables
+           else _TOKEN_ARROW.empty_table())
+    # each target row's source row (null: unmatched, passes through)
+    pos = pc.index_in(tbl["doc_id"], value_set=src["doc_id"])
+    up = pc.fill_null(pc.equal(src["_op"].take(pos), "upsert"), False)
+    at = pos.filter(up)
+    parts = [
+        tbl.filter(pc.is_null(pos)),
+        pa.table([tbl["doc_id"].filter(up), src["tokens"].take(at),
+                  src["n_tok"].take(at), tbl["source"].filter(up)], schema=_TOKEN_ARROW),
+    ]
+    ins = spec.get("insert")
+    if ins is True:
+        new = pc.invert(pc.is_in(src["doc_id"], value_set=tbl["doc_id"]))
+        parts.append(src.filter(pc.and_(pc.equal(src["_op"], "upsert"), new)))
+    elif ins:
+        parts.append(src.filter(pc.is_in(src["doc_id"], value_set=pa.array(ins, pa.string()))))
+    out = pa.concat_tables([t.select(_TOKEN_ARROW.names) for t in parts])
+    out = out.take(pc.sort_indices(out["doc_id"]))
+    values = sorted(pc.unique(out["source"]).to_pylist(), key=lambda v: (v is None, v or ""))
     return [
-        (f, unquote(d.name.split("=", 1)[1]))
-        for d in sorted(out_dir.glob("_part=*"))
-        for f in list_parquet_files(d)
+        (f"{spec['out_dir']}/part-{k:05d}.parquet", v,
+         out.filter(pc.is_null(out["source"]) if v is None else pc.equal(out["source"], v)))
+        for k, v in enumerate(values)
     ]
 
 
@@ -485,36 +439,17 @@ def merge_into(
 
     ``max_touched_files`` caps the driver-side exactly-touched file
     list; a merge touching more files than that falls back to a
-    partition-granular rewrite set (all candidate files, one shuffle
-    batch) so pathological full-table merges can't blow up driver memory.
+    partition-granular rewrite set (all candidate files, packed into
+    batches by their manifest bytes alone) so pathological full-table
+    merges can't blow up driver memory.
+
+    The summary's ``units_broadcast`` keeps its name for its readers and
+    counts the in-task batches (it equals ``batches``); ``planning``
+    says where the plan ran (``driver``/``distributed``) and
+    ``source_sliced`` whether the tasks read per-batch slices of the
+    staged source instead of all of it.
     """
     parent = table.current_snapshot_id()
-    src = _prepare_source(source_df, duplicate_policy, salt)
-    # Persist the prepared source only when it adds real work over the
-    # caller's DataFrame: the "last"-policy dedupe is a shuffle worth
-    # caching, but under policy="error" the preparation is a trivial
-    # projection — if the caller already persisted the input (the
-    # common ingest shape), re-caching it here would burn a full
-    # serialize+spill pass of the token payload inside the merge.
-    own_persist = (
-        duplicate_policy == "last"
-        or source_df.storageLevel.useMemory is False
-        and source_df.storageLevel.useDisk is False
-    )
-    if own_persist:
-        src = src.persist()
-    try:
-        return _merge(
-            spark, table, src, parent, duplicate_policy, job_id,
-            max_touched_files, _fail_after_units,
-        )
-    finally:
-        if own_persist:
-            src.unpersist()
-
-
-def _merge(spark, table, src, parent, duplicate_policy, job_id,
-           max_touched_files, _fail_after_units):
     job_tag = job_id or f"merge-snap{parent}"
     log = LineageLog(table.root, job_tag)
     prior = log.committed()
@@ -538,6 +473,17 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         summary = dict(published["summary"])
         log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
         return {"snapshot_id": published["snapshot_id"], **summary}
+    src = _prepare_source(source_df, duplicate_policy, salt)
+    staging = table.new_data_dir(job_tag) / "_staging"
+    try:
+        return _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
+                      max_touched_files, _fail_after_units)
+    finally:
+        fslayer.delete_dir(staging)
+
+
+def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
+           max_touched_files, _fail_after_units):
     phases: dict[str, float] = {}
     clock = [time.perf_counter()]
 
@@ -546,13 +492,15 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         phases[name] = round(now - clock[0], 3)
         clock[0] = now
 
-    # 1. PROFILE — one observed pass; it decides driver vs distributed
-    # planning before any key is pulled.
+    # 1. PROFILE + STAGE — one observed write; it decides driver vs
+    # distributed planning before any key is pulled.
     broadcast_cap = _broadcast_cap(spark)
-    prof = _profile(src)
+    prof = _stage(src, staging / "src")
     lo, hi = prof["lo"], prof["hi"]
     if lo is None:  # empty source
         return {"snapshot_id": None, "rows_updated": 0, "rows_deleted": 0, "rows_inserted": 0}
+    # an explicit schema: inferring it would cost a job
+    staged = spark.read.schema(STAGED_SCHEMA).parquet(str(staging / "src"))
     on_driver = _driver_bytes(prof["n"], prof["key_bytes"] or 0) <= broadcast_cap
     # Candidate pruning over DRIVER-SIDE manifest records (pyarrow footer
     # path for small manifests — no Spark job; distributed collect above
@@ -565,10 +513,10 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
     cand_files = sorted(r["file_path"] for r in cand_rows)
     lap("profile")
 
-    # 2. PROBE — doc_id + file path of the candidates only; the source
-    # key range also pushes into the scan, reaching parquet row-group
-    # stats (a micro-batch with a narrow key range skips most row groups
-    # of a wide candidate file).
+    # 2. PLAN — the probe reads doc_id + file path of the candidates
+    # only; the source key range also pushes into the scan, reaching
+    # parquet row-group stats (a micro-batch with a narrow key range
+    # skips most row groups of a wide candidate file).
     probe_scan = None
     if cand_files:
         probe_scan = (
@@ -579,87 +527,79 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         )
     file_ids = _file_ids([_norm(f) for f in cand_files]) if on_driver else None
     if file_ids is not None:
-        plan = _DriverPlan(spark, src, probe_scan, file_ids)
+        plan = _DriverPlan(spark, staged, probe_scan, file_ids)
         if duplicate_policy == "error" and (dup := plan.duplicate()) is not None:
             raise _duplicate_keys(dup)
     else:
         if duplicate_policy == "error":
-            nd = src.agg(F.countDistinct("doc_id").alias("nd")).collect()[0].nd
+            nd = staged.agg(F.countDistinct("doc_id").alias("nd")).collect()[0].nd
             if nd != prof["n"]:
                 # rare failure path — only here do we spend a job finding an example
-                ex = src.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
+                ex = staged.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
                 raise _duplicate_keys(ex[0]["doc_id"])
-        plan = _DistributedPlan(spark, src, prof, probe_scan, max_touched_files)
+        plan = _DistributedPlan(spark, staged, prof, probe_scan, max_touched_files)
+    manifest_bytes = {r["file_path"]: r["file_bytes"] for r in cand_rows}
     touched = {}
     if plan.file_bytes is not None:
         by_norm = {_norm(f): f for f in cand_files}
         touched = {by_norm[p]: b for p, b in plan.file_bytes.items() if p in by_norm}
     if plan.file_bytes is None or len(touched) > max_touched_files:
         # partition-granular fallback: rewrite every candidate file in
-        # place of the (too large to plan file-exactly) touched set, in
-        # one shuffle batch — same results, bounded driver memory
+        # place of the (too large to plan file-exactly) touched set —
+        # same results, bounded driver memory
         logger.warning(
             "merge touches >%d files; falling back to partition-granular "
             "rewrite over %d candidate files", max_touched_files, len(cand_files)
         )
         touched_files = len(cand_files)
-        batches = [(cand_files, False)]
+        weights = {f: manifest_bytes[f] for f in cand_files}
     else:
         touched_files = len(touched)
-        fits = [(f, b, 0) for f, b in sorted(touched.items()) if b <= broadcast_cap]
-        over = sorted(f for f, b in touched.items() if b > broadcast_cap)
-        batches = [(b.files, True) for b in pack_bins(fits, "", broadcast_cap)]
-        if over:
-            batches.append((over, False))
+        weights = {f: manifest_bytes[f] + b for f, b in touched.items()}
+    # a batch is one task: first-fit-decreasing under the scan-task size
+    # (a file above it gets a batch of its own)
+    task_bytes = _parse_size(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    batches = [b.files for b in pack_bins(sorted((f, w, 0) for f, w in weights.items()),
+                                          "", task_bytes)]
     if not batches and plan.inserted:
-        batches = [([], True)]  # insert-only merge
-    if isinstance(plan, _DistributedPlan):
-        plan.assign_batches(batches)
+        batches = [[]]  # insert-only merge
     lap("probe")
 
-    # 3. REWRITE — one job per batch; inserts ride in batch 0's write,
-    # their fan-out sized from the exact insert volume. A unit record
-    # counts as done only if it is this plan's batch over the same files
-    # (a record left by another plan of the same job_id is ignored).
-    planned = {f"batch:{i}": files for i, (files, _) in enumerate(batches)}
+    # 3. REWRITE — every pending batch is one in-task rewrite, all of
+    # them in one shuffle-free job (one job per batch under the crash
+    # hook). A unit record counts as done only if it is this plan's
+    # batch over the same files (a record left by another plan of the
+    # same job_id is ignored).
+    planned = {f"batch:{i}": files for i, files in enumerate(batches)}
 
     def finished() -> dict:
         return {u: r for u, r in log.completed_units().items()
                 if planned.get(u) == r["files_in"]}
 
-    out_root = table.new_data_dir(job_tag)
-    file_rows = {r["file_path"]: r["record_count"] for r in cand_rows}
-    n_ins = max(1, min(
-        4 * spark.sparkContext.defaultParallelism,
-        -(-plan.insert_bytes // INSERT_TARGET_BYTES),
-    ))
-
-    def run_batch(i: int, files: list[str], broadcast: bool) -> None:
-        side, inserts = plan.source_slice(i, files)
-        pairs = _write_batch(spark, files, side, broadcast, inserts, n_ins,
-                             out_root / f"batch-{i}", sum(file_rows.get(f, 0) for f in files))
-        stats = file_stats_rows(spark, pairs)
-        log.mark_unit_done(
-            f"batch:{i}",
-            files_in=files,
-            new_manifest_rows=stats,
-            metrics={"files_rewritten": len(files), "files_written": len(stats),
-                     "rows_inserted": plan.inserted if i == 0 else 0},
-        )
-
     done = finished()
-    pending = [(i, fs, b) for i, (fs, b) in enumerate(batches) if f"batch:{i}" not in done]
-    if _fail_after_units is not None:
-        # sequential under the crash hook, so the failure point is exact
-        for n, args in enumerate(pending, 1):
-            run_batch(*args)
-            if n >= _fail_after_units:
-                raise RuntimeError(f"injected failure after {n} units (test hook)")
-    elif pending:
-        # Spark interleaves the batch jobs; lineage appends are thread-safe
-        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-            for fut in [ex.submit(run_batch, *args) for args in pending]:
-                fut.result()
+    pending = [i for i in range(len(batches)) if f"batch:{i}" not in done]
+    src_files = list_parquet_files(staging / "src")
+    # distributed plans hold no insert keys on the driver: their batch 0
+    # slice carries the inserts
+    sliced = (isinstance(plan, _DistributedPlan)
+              or sum(fslayer.file_size(f) for f in src_files) > task_bytes)
+    apply = {i: src_files for i in pending}
+    if sliced and pending:
+        apply = _stage_slices(staged, plan.tags(batches), staging / "batches")
+    insert = bool(plan.inserted) and (sliced or plan.insert_keys.to_pylist())
+    out_root = table.new_data_dir(job_tag)
+    units = [
+        TaskUnit(
+            f"batch:{i}",
+            [{"files": batches[i], "apply": apply.get(i, []), "insert": i == 0 and insert,
+              "out_dir": str(out_root / f"batch-{i}")}],
+            batches[i],
+            {"files_rewritten": len(batches[i]), "rows_inserted": plan.inserted if i == 0 else 0},
+        )
+        for i in pending
+    ]
+    tick = crash_hook(_fail_after_units)
+    run_task_units(spark, log, units, 1 if tick else UNITS_PER_JOB, tick)
     plan.close()
     lap("rewrite")
 
@@ -674,9 +614,10 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         "files_rewritten": len(removed), "files_written": len(new_rows),
         "candidate_files": len(cand_files), "touched_files": touched_files,
         "broadcast_cap": broadcast_cap,
-        "units_broadcast": sum(1 for _, b in batches if b),
+        "units_broadcast": len(batches),
         "batches": len(batches),
-        "batches_shuffled": sum(1 for _, b in batches if not b),
+        "planning": "distributed" if isinstance(plan, _DistributedPlan) else "driver",
+        "source_sliced": sliced,
         "job_tag": job_tag,
         # the snapshot summary gets the phases so far; the commit's own
         # seconds land in the same dict for the lineage event and result

@@ -52,8 +52,8 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # broadcast relations are built through driver collection; the
-        # 1g default would veto merge batch broadcasts that the
+        # broadcast relations and collects go through the driver; the
+        # 1g default would veto MERGE planning collects that the
         # heap-aware cap (merge._broadcast_cap) has already sized to fit
         .config(
             "spark.driver.maxResultSize",

@@ -43,8 +43,9 @@ def stream_merge_into(
     query_name: str = "stream-merge",
 ) -> dict:
     """Drain all files currently in ``source_dir`` (Trigger.AvailableNow)
-    into ``table``, one MERGE snapshot per micro-batch. Returns
-    {"batches": n, "last_snapshot_id": id}.
+    into ``table``, one MERGE snapshot per non-empty micro-batch. Returns
+    {"batches": n, "last_snapshot_id": id}, where n counts the
+    micro-batches that committed a snapshot.
 
     ``max_files_per_trigger`` bounds batch size (and therefore MERGE
     source size) — at scale this is the knob that keeps each snapshot's
@@ -58,9 +59,9 @@ def stream_merge_into(
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal n_batches
-        if not batch_df.take(1):
-            return
-        merge_into(
+        # an empty micro-batch commits nothing (snapshot_id None); it is
+        # not counted, and no Spark job is spent probing for emptiness
+        result = merge_into(
             spark,
             table,
             batch_df,
@@ -68,7 +69,8 @@ def stream_merge_into(
             salt=salt,
             job_id=f"{query_name}-batch{batch_id}",
         )
-        n_batches += 1
+        if result["snapshot_id"] is not None:
+            n_batches += 1
 
     q = (
         stream.writeStream.foreachBatch(_merge_batch)

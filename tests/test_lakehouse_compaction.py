@@ -156,22 +156,3 @@ def test_partition_scoped_compaction(spark, tmp_path):
     assert len(by_part["web"]) == 1  # compacted
     assert len(by_part["books"]) == 4  # untouched
     assert_scan_equivalent(t.scan(spark, 1), t.scan(spark))
-
-
-def test_sort_mode_compaction(spark, tmp_path):
-    from feature_engineering_poc_spark.lakehouse import write_token_table
-    t = write_token_table(spark, tmp_path / "sorted", n_rows=1000, files_per_source=4, max_tok=32)
-    result = compact(spark, t, target_file_bytes=64 * 1024 * 1024, mode="sort")
-    assert result["snapshot_id"] == 2
-    assert result["files_written"] < result["files_compacted"]
-    assert_scan_equivalent(t.scan(spark, 1), t.scan(spark))
-    # range-sorted output: doc_id ranges across files within a partition
-    # are disjoint (tight min/max for pruning)
-    rows = t.manifest_df(spark).collect()
-    by_part = {}
-    for r in rows:
-        by_part.setdefault(r.partition, []).append((r.min_doc_id, r.max_doc_id))
-    for part, ranges in by_part.items():
-        ranges.sort()
-        for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-            assert hi1 <= lo2, f"{part}: overlapping ranges {hi1} > {lo2}"

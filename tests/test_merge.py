@@ -4,7 +4,8 @@ budgets, resume."""
 
 from __future__ import annotations
 
-from collections import Counter
+import contextlib
+import os
 
 import duckdb
 import pyarrow.parquet as pq
@@ -227,8 +228,7 @@ def test_parse_size_two_letter_suffixes():
 
 # With 48-token updates the fixture source (~250 rows of 15-char
 # doc_ids) fits the driver planning budget at this cap (_driver_bytes
-# ≈ 250 × 2 × (15 + 20) B ≈ 17.5 KB) while its matched bytes (~29 KB)
-# need more than one broadcast batch.
+# ≈ 250 × 2 × (15 + 20) B ≈ 17.5 KB).
 MULTI_BATCH_CAP = 24 << 10
 
 
@@ -252,28 +252,53 @@ def _set_cap(monkeypatch, cap):
         monkeypatch.setenv("FEPOC_MERGE_BROADCAST_CAP", str(cap))
 
 
+@contextlib.contextmanager
+def _task_bytes(spark, n: int | None):
+    """Set ``spark.sql.files.maxPartitionBytes`` (the size of one batch
+    and the staged-source threshold) for a block, then restore it (the
+    session is shared). None leaves it as is."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    if n is not None:
+        spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _multi_batch_bytes(spark, table) -> int:
+    """A task size that splits the fixture's touched files over several
+    batches (a quarter of the table's bytes)."""
+    return sum(r["file_bytes"] for r in table.manifest_records(spark)) // 4
+
+
 @pytest.mark.parametrize(
-    "cap, driver_keys, shuffled",
-    [(None, True, 0), (MULTI_BATCH_CAP, True, 0), (0, False, 1)],
-    ids=["single_batch", "multi_batch", "shuffle_batch"],
+    "case, planning",
+    [("single_batch", "driver"), ("multi_batch", "driver"), ("distributed", "distributed")],
+    ids=["single_batch", "multi_batch", "distributed"],
 )
-def test_merge_batch_plans_agree(spark, table, monkeypatch, cap, driver_keys, shuffled):
-    """One rewrite path, three plans of it: a single broadcast batch;
-    several broadcast batches with the keys still planned on the driver;
-    distributed planning with one shuffle batch (cap 0). Each must give
-    the oracle's table and row counts."""
-    _set_cap(monkeypatch, cap)
+def test_merge_batch_plans_agree(spark, table, monkeypatch, case, planning):
+    """One rewrite path, three plans of it: a single in-task batch;
+    several batches (a lowered task size) with the keys still planned on
+    the driver; distributed planning (cap 0), whose tasks read per-batch
+    slices of the source. Each must give the oracle's table and row
+    counts."""
+    _set_cap(monkeypatch, 0 if case == "distributed" else None)
     collected = _spy_driver_collect(monkeypatch)
     src = _source(spark, table, upd_tok=48).persist()
     tgt_pd, src_pd = table.scan(spark).toPandas(), src.toPandas()
-    r = merge_into(spark, table, src)
+    task = _multi_batch_bytes(spark, table) if case == "multi_batch" else None
+    with _task_bytes(spark, task):
+        r = merge_into(spark, table, src)
     src.unpersist()
 
-    assert bool(collected) == driver_keys
-    n_batches = {None: 1, MULTI_BATCH_CAP: r["batches"], 0: 1}[cap]
-    assert r["batches"] == n_batches and (cap != MULTI_BATCH_CAP or n_batches >= 2)
-    assert r["batches_shuffled"] == shuffled
-    assert r["units_broadcast"] == r["batches"] - shuffled
+    assert bool(collected) == (planning == "driver")
+    assert r["planning"] == planning
+    assert (r["batches"] >= 2) if case == "multi_batch" else (r["batches"] == 1)
+    assert r["units_broadcast"] == r["batches"]
+    if case == "distributed":
+        assert r["source_sliced"]
     in_tgt = src_pd.doc_id.isin(tgt_pd.doc_id)
     assert r["rows_updated"] == ((src_pd._op == "upsert") & in_tgt).sum()
     assert r["rows_deleted"] == ((src_pd._op == "delete") & in_tgt).sum()
@@ -287,12 +312,12 @@ def test_merge_batch_plans_agree(spark, table, monkeypatch, cap, driver_keys, sh
     assert set(r["phases"]) == {"profile", "probe", "rewrite", "commit"}
 
 
-@pytest.mark.parametrize("cap, budget", [(None, 6), (0, 26)], ids=["default_cap", "cap0"])
+@pytest.mark.parametrize("cap, budget", [(None, 4), (0, 14)], ids=["default_cap", "cap0"])
 def test_merge_spark_job_budget(spark, table, monkeypatch, cap, budget):
-    """Under the default cap the fixture merge runs the profile pass, the
-    probe (source keys broadcast + one collect) and one batch (key
-    broadcast, source slice, write with the inserts fused in); cap 0
-    plans distributed and rewrites in one shuffle-join batch."""
+    """Under the default cap the fixture merge runs the staging write,
+    the probe (source keys broadcast + one collect) and one in-task
+    rewrite job; cap 0 plans distributed and cuts the staged source into
+    per-batch slices before the same one rewrite job."""
     _set_cap(monkeypatch, cap)
     src = _source(spark, table)
     before = last_job_id(spark)
@@ -300,18 +325,18 @@ def test_merge_spark_job_budget(spark, table, monkeypatch, cap, budget):
     assert last_job_id(spark) - before <= budget
 
 
-def test_merge_resume_skips_finished_batches(spark, table, monkeypatch):
+def test_merge_resume_skips_finished_batches(spark, table):
     """A crash after the first of several batches, then a rerun under the
     same job_id: the finished batch is not redone, the result is exact."""
-    _set_cap(monkeypatch, MULTI_BATCH_CAP)
     src = _source(spark, table, upd_tok=48).persist()
     expect = _oracle(table.scan(spark).toPandas(), src.toPandas())
-    with pytest.raises(RuntimeError, match="injected failure"):
-        merge_into(spark, table, src, job_id="mbatch", _fail_after_units=1)
-    log = LineageLog(table.root, "mbatch")
-    assert list(log.completed_units()) == ["batch:0"]
-    assert table.current_snapshot_id() == 1
-    r = merge_into(spark, table, src, job_id="mbatch")
+    with _task_bytes(spark, _multi_batch_bytes(spark, table)):
+        with pytest.raises(RuntimeError, match="injected failure"):
+            merge_into(spark, table, src, job_id="mbatch", _fail_after_units=1)
+        log = LineageLog(table.root, "mbatch")
+        assert list(log.completed_units()) == ["batch:0"]
+        assert table.current_snapshot_id() == 1
+        r = merge_into(spark, table, src, job_id="mbatch")
     src.unpersist()
     assert r["batches"] >= 2 and r["rows_inserted"] == 100
     units = [rec["unit"] for rec in log.records() if rec["event"] == "unit_done"]
@@ -319,29 +344,109 @@ def test_merge_resume_skips_finished_batches(spark, table, monkeypatch):
     _assert_table_is(spark, table, expect)
 
 
-def test_merge_insert_fanout_from_insert_volume(spark, table, monkeypatch):
-    """An update-heavy merge sizes its insert write from the insert rows,
-    not from the whole source: at most one insert file per partition."""
+def test_merge_crash_hook_keeps_batch_plan(spark, table, monkeypatch):
+    """The crash hook changes how batches are run (one job each), never
+    how they are cut: the units of a crashing run equal those of a plain
+    run of the same merge."""
+    seen: list[list] = []
+    real = merge_mod.run_task_units
+
+    def spy(spark_, log, units, *args):
+        seen.append([(u.name, u.files_in) for u in units])
+        return real(spark_, log, units, *args)
+
+    monkeypatch.setattr(merge_mod, "run_task_units", spy)
+    src = _source(spark, table, upd_tok=48).persist()
+    with _task_bytes(spark, _multi_batch_bytes(spark, table)):
+        with pytest.raises(RuntimeError, match="injected failure"):
+            merge_into(spark, table, src, job_id="hooked", _fail_after_units=1)
+        merge_into(spark, table, src, job_id="plain")
+    src.unpersist()
+    assert len(seen) == 2 and len(seen[0]) >= 2
+    assert seen[0] == seen[1]
+
+
+def test_merge_one_file_per_source_per_batch(spark, table):
+    """Each batch writes exactly one file per ``source`` value among its
+    rows (its files' rows plus, in batch 0, the inserts), each sorted by
+    doc_id."""
     updates = table.scan(spark).select(
         "doc_id", F.array_repeat(F.lit(7), 64).alias("tokens"),
         F.lit(64).alias("n_tok"), "source",
     )
     inserts = token_dataframe(spark, 20, seed=5, max_tok=8, id_offset=20_000_000)
-    # the source estimate (~320 KB) spans ten insert targets; the
-    # inserts (~2 KB) fit one
-    monkeypatch.setattr(merge_mod, "INSERT_TARGET_BYTES", 32 << 10)
-    pre = set(table.data_files(spark))
-    r = merge_into(spark, table, updates.unionByName(inserts))
-    assert (r["rows_updated"], r["rows_inserted"]) == (1000, 20)
-    ins_ids = {row.doc_id for row in inserts.select("doc_id").collect()}
-    per_part = Counter()
-    for rec in table.manifest_records(spark):
-        if rec["file_path"] in pre:
-            continue
-        ids = set(pq.read_table(rec["file_path"], columns=["doc_id"])["doc_id"].to_pylist())
-        if ids <= ins_ids:
-            per_part[rec["partition"]] += 1
-    assert per_part and max(per_part.values()) == 1
+    with _task_bytes(spark, _multi_batch_bytes(spark, table)):
+        r = merge_into(spark, table, updates.unionByName(inserts), job_id="perpart")
+    assert (r["rows_updated"], r["rows_inserted"]) == (1000, 20) and r["batches"] >= 2
+    ins_sources = {row.source for row in inserts.select("source").collect()}
+    for name, rec in LineageLog(table.root, "perpart").completed_units().items():
+        parts = [row["partition"] for row in rec["new_manifest_rows"]]
+        want = {pq.read_table(f, columns=["source"])["source"][0].as_py()
+                for f in rec["files_in"]}
+        if name == "batch:0":
+            want |= ins_sources
+        assert sorted(parts) == sorted(want), name
+        for row in rec["new_manifest_rows"]:
+            out = pq.read_table(row["file_path"], columns=["doc_id", "source"])
+            assert set(out["source"].to_pylist()) == {row["partition"]}
+            ids = out["doc_id"].to_pylist()
+            assert ids == sorted(ids)
+
+
+def test_merge_staged_source_threshold(spark, table, monkeypatch):
+    """Both sides of the staged-source threshold, each against the
+    oracle: a staged source of exactly the task size is read whole by
+    every task; one byte less cuts it into per-batch slices."""
+    staged_bytes: list[int] = []
+    real = merge_mod._stage
+
+    def spy(src, path):
+        prof = real(src, path)
+        staged_bytes.append(sum(os.path.getsize(f) for f in merge_mod.list_parquet_files(path)))
+        return prof
+
+    monkeypatch.setattr(merge_mod, "_stage", spy)
+    src = _source(spark, table).persist()
+    expect = _oracle(table.scan(spark).toPandas(), src.toPandas())
+    assert not merge_into(spark, table, src)["source_sliced"]
+    _assert_table_is(spark, table, expect)
+    size = staged_bytes[0]
+    for task, sliced in ((size, False), (size - 1, True)):
+        t = write_token_table(spark, table.root.parent / f"task{task}", n_rows=1000,
+                              files_per_source=4, max_tok=64)
+        with _task_bytes(spark, task):
+            r = merge_into(spark, t, src)
+        assert staged_bytes[-1] == size
+        assert (r["planning"], r["source_sliced"]) == ("driver", sliced)
+        assert r["rows_inserted"] == 100
+        _assert_table_is(spark, t, expect)
+    src.unpersist()
+
+
+def test_merge_file_over_cap_rewritten_in_task(spark, table, monkeypatch):
+    """A file whose matched bytes exceed the broadcast cap is rewritten in
+    one task like any other: driver planning, one batch, no shuffle
+    batch, the oracle's table."""
+    first = sorted(table.data_files(spark))[0]
+    tgt = table.scan(spark)
+    in_file = spark.read.parquet(first).select("doc_id")
+    src = tgt.join(in_file, "doc_id").select(
+        "doc_id", F.array_repeat(F.lit(3), 2000).alias("tokens"),
+        F.lit(2000).alias("n_tok"), "source",
+    ).persist()
+    src_pd = src.toPandas()
+    matched = sum(merge_mod.ROW_BYTES + 4 * 2000 for _ in range(len(src_pd)))
+    cap = 64 << 10
+    assert merge_mod._driver_bytes(len(src_pd), sum(len(d) for d in src_pd.doc_id)) <= cap < matched
+    expect = _oracle(tgt.toPandas(), src_pd.assign(_op="upsert"))
+    _set_cap(monkeypatch, cap)
+    before = last_job_id(spark)
+    r = merge_into(spark, table, src)
+    jobs = last_job_id(spark) - before
+    src.unpersist()
+    assert (r["planning"], r["batches"], r["touched_files"]) == ("driver", 1, 1)
+    assert r["files_rewritten"] == 1 and jobs <= 4
+    _assert_table_is(spark, table, expect)
 
 
 def test_merge_driver_budget_boundary(spark, table, monkeypatch):

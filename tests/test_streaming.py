@@ -119,6 +119,38 @@ def test_stream_merge_into_lakehouse(spark, tmp_path):
     assert t.current_snapshot_id() == sid0 + 2
 
 
+def test_stream_merge_counts_committed_batches_only(spark, tmp_path):
+    """An empty parquet file landed in the source directory is a
+    micro-batch that commits nothing: it is not counted and makes no
+    snapshot. A non-empty micro-batch runs at most 6 Spark jobs (the
+    salted dedupe, the staging write, the probe and one rewrite job)."""
+    from feature_engineering_poc_spark.lakehouse import write_token_table
+    from feature_engineering_poc_spark.streaming import stream_merge_into
+    from tests.conftest import last_job_id
+
+    t = write_token_table(spark, tmp_path / "tbl", n_rows=300, files_per_source=2,
+                          max_tok=16)
+    sid0 = t.current_snapshot_id()
+    schema = ("doc_id string, tokens array<int>, n_tok int, source string, "
+              "_op string, _seq long")
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    _single_parquet_file(spark.createDataFrame([], schema), incoming / "empty.parquet")
+    r = stream_merge_into(spark, t, str(incoming), str(tmp_path / "ckpt"))
+    assert r["batches"] == 0
+    assert t.current_snapshot_id() == sid0
+
+    one = t.scan(spark).orderBy("doc_id").first()
+    rows = [(one.doc_id, [5, 5], 2, one.source, "upsert", 1),
+            ("zz-new-00001", [6], 1, "web", "upsert", 2)]
+    _single_parquet_file(spark.createDataFrame(rows, schema), incoming / "f1.parquet")
+    before = last_job_id(spark)
+    r = stream_merge_into(spark, t, str(incoming), str(tmp_path / "ckpt"))
+    jobs = last_job_id(spark) - before
+    assert r["batches"] == 1 and t.current_snapshot_id() == sid0 + 1
+    assert jobs <= 6, jobs
+
+
 def test_windowed_late_data_dropped_by_watermark(spark, tmp_path):
     """Append-mode watermark semantics: an event arriving after the
     watermark passed its window is dropped, while the same data in one
