@@ -15,13 +15,13 @@ Scale shape:
 - A partition unit whose summed file bytes fit one scan task
   (``spark.sql.files.maxPartitionBytes``, the memory envelope of a
   compaction bin) is rewritten INSIDE one task: pyarrow read, curve
-  key, stable sort, ``n_out`` equal-row zstd slices, footer stats —
-  compaction's kernel and chunked executor, so all such units share
-  ONE shuffle-free Spark job (compaction.run_task_units).
+  key, sort by (key, doc_id), ``n_out`` equal-row zstd slices, footer
+  stats — compaction's kernel and chunked executor, so all such units
+  share ONE shuffle-free Spark job (compaction.run_task_units).
 - A larger unit takes the shuffle path: one range placement per unit
-  (quantile boundaries + a bucket hash exchange) + in-partition sort;
-  that is the minimum data movement a rewrite above one task's memory
-  can do. ``units_shuffled`` in the summary counts these units.
+  (quantile boundaries + a bucket hash exchange) + in-partition sort by
+  (key, doc_id); that is the minimum data movement a rewrite above one
+  task's memory can do. ``units_shuffled`` in the summary counts these units.
 - The zkey is PERSISTED as an extra column in the rewritten files, so
   parquet footers (and thus the manifest) carry zkey min/max for
   curve-range pruning; table scans use the fixed 4-column schema and
@@ -32,13 +32,14 @@ Scale shape:
 
 from __future__ import annotations
 
-from collections import defaultdict
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -155,12 +156,12 @@ def _run_threaded_units(
 
 
 def _partition_bounds(
-    spark: SparkSession, manifest_rows: list, columns: list[str], files: list[str]
+    spark: SparkSession, unit: dict, columns: list[str], files: list[str]
 ) -> list[_ColSpec]:
-    """Grid bounds per cluster column — computed from the ALREADY-
-    collected manifest rows for the stats columns (doc_id, n_tok):
-    zero extra Spark jobs on the default path. Columns without
-    manifest stats cost one column-pruned data agg."""
+    """Grid bounds per cluster column — from the unit's manifest
+    aggregates for the stats columns (doc_id, n_tok): zero extra Spark
+    jobs on the default path. Columns without manifest stats cost one
+    column-pruned data agg."""
     specs: list[_ColSpec] = []
     covered = {"doc_id", "n_tok"}
     agg_row = None
@@ -171,16 +172,14 @@ def _partition_bounds(
         for c in extra:
             aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
         agg_row = df.agg(*aggs).collect()[0]
-    lo_doc = min((r["min_doc_id"] for r in manifest_rows if r["min_doc_id"] is not None), default="")
-    hi_doc = max((r["max_doc_id"] for r in manifest_rows if r["max_doc_id"] is not None), default="")
-    lo_nt = min((r["min_n_tok"] for r in manifest_rows if r["min_n_tok"] is not None), default=0)
-    hi_nt = max((r["max_n_tok"] for r in manifest_rows if r["max_n_tok"] is not None), default=1)
     for c in columns:
         if c == "doc_id":
-            lo, hi = string_prefix_ordinal([lo_doc or "", hi_doc or ""])
+            lo, hi = string_prefix_ordinal([unit["min_doc_id_min"] or "",
+                                            unit["max_doc_id_max"] or ""])
             specs.append(_ColSpec(c, "string", float(lo), float(hi)))
         elif c == "n_tok":
-            specs.append(_ColSpec(c, "numeric", float(lo_nt or 0), float(hi_nt or 1)))
+            specs.append(_ColSpec(c, "numeric", float(unit["min_n_tok_min"] or 0),
+                                  float(unit["max_n_tok_max"] or 1)))
         else:
             lo, hi = agg_row[f"lo_{c}"], agg_row[f"hi_{c}"]
             if isinstance(lo, str):
@@ -205,48 +204,40 @@ def cluster(
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"unknown curve: {curve}")
     parent = table.current_snapshot_id()
-    # Driver-side manifest planning (pyarrow footer path when small —
-    # zero Spark jobs; see metadata.manifest_records).
-    entries = [
-        r for r in table.manifest_records(spark, parent)
-        if partitions is None or r["partition"] in partitions
-    ]
-    by_part: dict[str, list] = defaultdict(list)
-    for r in entries:
-        by_part[r["partition"]].append(r)
-    if not entries:
+    # Driver-side planning: the manifest is filtered to the wanted
+    # partitions and reduced to one row per unit (its files, sizes and
+    # stats envelope) in Arrow.
+    m = table.manifest_table(parent)
+    if partitions is not None:
+        m = m.filter(pc.is_in(m["partition"], value_set=pa.array(partitions, pa.string())))
+    if m.num_rows == 0:
         return {"snapshot_id": None, "units": 0}
+    units = m.group_by("partition", use_threads=False).aggregate([
+        ("file_path", "list"), ("file_bytes", "sum"), ("record_count", "sum"),
+        ("min_doc_id", "min"), ("max_doc_id", "max"),
+        ("min_n_tok", "min"), ("max_n_tok", "max"),
+    ])
+    by_part = {u["partition"]: u for u in units.to_pylist()}
 
     job_tag = job_id or f"{curve}-snap{parent}"
     log = LineageLog(table.root, job_tag)
-    prior = log.committed()
-    if prior is not None:  # replayed job: already committed, no-op
-        return {k: v for k, v in prior.items()
-                if k not in ("event", "job_id", "timestamp_ms")}
-    published = table.snapshot_for_job(job_tag)
-    if published is not None:
-        # crash between VERSION swap and the 'committed' lineage append:
-        # snapshot is live — repair the log instead of re-committing the
-        # same manifest rows (see metadata.snapshot_for_job)
-        summary = dict(published["summary"])
-        log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
-        return {"snapshot_id": published["snapshot_id"], **summary}
+    if (prior := log.replayed(table)) is not None:
+        return prior
     done = log.completed_units()
     # A unit whose input fits one scan task is rewritten inside one
     # task (the memory envelope of a compaction bin); larger units
     # take the shuffle path.
     task_bytes = _parse_size(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    shuffled = {p for p, rows_p in by_part.items()
-                if sum(r["file_bytes"] for r in rows_p) > task_bytes}
+    shuffled = {p for p, u in by_part.items() if u["file_bytes_sum"] > task_bytes}
 
     def plan_unit(part: str):
-        rows_p = by_part[part]
-        files = [r["file_path"] for r in rows_p]
-        total_bytes = sum(r["file_bytes"] for r in rows_p)
+        unit = by_part[part]
+        files = unit["file_path_list"]
+        total_bytes = unit["file_bytes_sum"]
         metrics = {"files_rewritten": len(files), "bytes": total_bytes,
-                   "rows": sum(r["record_count"] for r in rows_p)}
+                   "rows": unit["record_count_sum"]}
         n_out = max(1, round(total_bytes / target_file_bytes))
-        specs = _partition_bounds(spark, rows_p, list(columns), files)
+        specs = _partition_bounds(spark, unit, list(columns), files)
         out_dir = table.new_data_dir(job_tag) / part
         return files, metrics, n_out, specs, out_dir
 
@@ -306,7 +297,7 @@ def cluster(
         else:
             placed = keyed.repartitionByRange(n_out, "zkey")
         (
-            placed.sortWithinPartitions("zkey")
+            placed.sortWithinPartitions("zkey", "doc_id")
             .write.mode("overwrite")
             .option("maxRecordsPerFile", max(1, (metrics["rows"] + n_out - 1) // n_out + 1))
             .parquet(str(out_dir))
@@ -343,7 +334,7 @@ def cluster(
         "job_tag": job_tag,
     }
     sid = table.commit_delta(
-        spark, removed, new_rows, operation=f"cluster-{curve}", summary=summary, parent_id=parent
+        removed, new_rows, operation=f"cluster-{curve}", summary=summary, parent_id=parent
     )
     log.log_event("committed", snapshot_id=sid, **summary)
     return {"snapshot_id": sid, **summary}

@@ -33,6 +33,8 @@ from collections import defaultdict
 from collections.abc import Callable
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
@@ -60,11 +62,13 @@ def _rewrite_bins_distributed(
     Without a ``key`` (compaction) the bin is sorted by doc_id and
     written to its one output. With a curve ``key`` (clustering.py)
     the rows get their curve key (``clustering._table_keys``), are
-    stably sorted on it and cut into ``len(outs)`` equal-row slices,
-    each written with the ``zkey`` column so its footer carries zkey
-    min/max. A MERGE batch spec carries ``apply`` (the source rows'
-    parquet files) instead, and merge.py's ``_merge_in_task`` applies
-    them and names one output per ``source`` value.
+    sorted on it with ties broken by doc_id (the bytes written do not
+    depend on the order of the files) and cut into ``len(outs)``
+    equal-row slices, each written with the ``zkey`` column so its
+    footer carries zkey min/max. A MERGE batch spec carries ``apply``
+    (the source rows' parquet files) instead, and merge.py's
+    ``_merge_in_task`` applies them and names one output per ``source``
+    value.
 
     Rewrites are embarrassingly parallel across bins: no shuffle, no
     range-sampling pass, parallelism = number of bins (at 100 TB:
@@ -105,7 +109,12 @@ def _rewrite_bins_distributed(
                     tbl = pa.concat_tables(tables)
                     outs = spec["outs"]
                     zkey = _table_keys(spec["key"], tbl)
-                    order = np.argsort(zkey, kind="stable")
+                    # ties broken by the unique doc_id: the output does
+                    # not depend on the order of the unit's files
+                    order = pc.sort_indices(
+                        pa.table({"z": zkey, "d": tbl.column("doc_id")}),
+                        sort_keys=[("z", "ascending"), ("d", "ascending")],
+                    ).to_numpy()
                     # drop the inputs' Spark row schema (it omits zkey and
                     # would hide the column from Spark schema inference)
                     tbl = (tbl.take(order).replace_schema_metadata(None)
@@ -249,31 +258,23 @@ def compact(
     threshold = small_file_threshold or int(target_file_bytes * 0.75)
     job_tag = job_id or f"compact-snap{parent}"
     log = LineageLog(table.root, job_tag)
-    prior = log.committed()
-    if prior is not None:  # replayed job: already committed, no-op
-        return {k: v for k, v in prior.items()
-                if k not in ("event", "job_id", "timestamp_ms")}
-    published = table.snapshot_for_job(job_tag)
-    if published is not None:
-        # crash between VERSION swap and the 'committed' lineage append:
-        # snapshot is live — repair the log instead of re-committing the
-        # same manifest rows (see metadata.snapshot_for_job)
-        summary = dict(published["summary"])
-        log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
-        return {"snapshot_id": published["snapshot_id"], **summary}
+    if (prior := log.replayed(table)) is not None:
+        return prior
 
-    # PLAN — metadata only, DRIVER-SIDE for small manifests (pyarrow
-    # footer reads, zero Spark jobs; distributed collect above
-    # SMALL_MANIFEST_ROWS) — same driver planning Iceberg's
+    # PLAN — metadata only, on the driver: the manifest is filtered to
+    # the small files of the wanted partitions in Arrow before any row
+    # becomes a Python object — same driver planning Iceberg's
     # rewriteDataFiles does.
+    m = table.manifest_table(parent)
+    wanted = pc.less(m["file_bytes"], threshold)
+    if partitions is not None:
+        in_parts = pc.is_in(m["partition"], value_set=pa.array(partitions, pa.string()))
+        wanted = pc.and_(wanted, in_parts)
+    small = m.filter(wanted).to_pydict()
     by_part: dict[str, list] = defaultdict(list)
-    for r in table.manifest_records(spark, parent):
-        if r["file_bytes"] < threshold and (
-            partitions is None or r["partition"] in partitions
-        ):
-            by_part[r["partition"]].append(
-                (r["file_path"], r["file_bytes"], r["record_count"])
-            )
+    for part, path, size, rows in zip(small["partition"], small["file_path"],
+                                      small["file_bytes"], small["record_count"]):
+        by_part[part].append((path, size, rows))
 
     units = []  # (partition, bins)
     for part in sorted(by_part):
@@ -308,8 +309,7 @@ def compact(
     run_task_units(spark, log, task_units, 1 if tick else units_per_job, tick)
 
     # COMMIT — manifest delta assembled from lineage (covers resumed
-    # units too); driver-side pyarrow write for small manifests,
-    # distributed above SMALL_MANIFEST_ROWS (metadata.commit_delta).
+    # units too).
     done = log.completed_units()
     removed_files = [f for rec in done.values() for f in rec["files_in"]]
     new_rows = [row for rec in done.values() for row in rec["new_manifest_rows"]]
@@ -323,7 +323,7 @@ def compact(
         "job_tag": job_tag,
     }
     sid = table.commit_delta(
-        spark, removed_files, new_rows, operation="compact", summary=summary, parent_id=parent
+        removed_files, new_rows, operation="compact", summary=summary, parent_id=parent
     )
     log.log_event("committed", snapshot_id=sid, **summary)
     return {"snapshot_id": sid, **summary}

@@ -2,12 +2,12 @@
 
 All three are METADATA-dominant operations, planned and committed on
 the driver like every other op's manifest work (Iceberg's planning
-model): reachability reads only the ``file_path`` column of each
-snapshot manifest with pyarrow (``TokenTable.manifest_paths``) and does
-the set algebra in Python; the rewrite is ``manifest_records`` →
-``file_stats_rows`` → ``commit_delta``, which read, stat and write the
-manifest with pyarrow up to ``SMALL_MANIFEST_ROWS`` / ``SMALL_STATS_FILES``
-and switch to Spark above. On small tables no op runs a Spark job.
+model): reachability takes the ``file_path`` set of each snapshot
+manifest (``TokenTable.manifest_paths``) and does the set algebra in
+Python; the rewrite is ``manifest_table`` → ``file_stats_rows`` →
+``commit_delta``. The manifest is read and written in Arrow at any
+size; footers are read on the driver up to ``SMALL_STATS_FILES`` files
+and by one Spark job above. On small tables no op runs a Spark job.
 
 Paths are compared scheme-normalized (``file:///x`` and ``/x`` are the
 same file), as ``commit_delta`` compares them.
@@ -110,7 +110,7 @@ def remove_orphans(
 
     orphans = [f for f in unreferenced if _old_enough(f)]
     # Manifest dirs from commit attempts that crashed before publishing
-    # (commit() writes manifests to unique paths before the CAS): any
+    # (commit_delta writes manifests to unique paths before the CAS): any
     # metadata/manifest-* dir no snapshot references is debris.
     live_manifests = {s["manifest"] for s in snaps if s.get("manifest")}
     orphan_manifests = [
@@ -134,9 +134,9 @@ def rewrite_manifests(spark: SparkSession, table: TokenTable) -> dict:
     """Recompute per-file stats from parquet footers; new snapshot,
     same data files."""
     parent = table.current_snapshot_id()
-    pairs = [(r["file_path"], r["partition"]) for r in table.manifest_records(spark, parent)]
+    m = table.manifest_table(parent)
+    pairs = list(zip(m["file_path"].to_pylist(), m["partition"].to_pylist()))
     sid = table.commit_delta(
-        spark,
         removed_files=[f for f, _ in pairs],
         new_rows=file_stats_rows(spark, pairs),
         operation="rewrite-manifests",

@@ -60,6 +60,27 @@ class LineageLog:
                 return r
         return None
 
+    def replayed(self, table) -> dict | None:
+        """The result of this job when it already committed, or None.
+
+        A job whose log records a commit returns that record (a replay
+        is a no-op). A job whose snapshot was published but whose log
+        lacks the 'committed' event (a crash between the VERSION swap
+        and the fsync'd append, see ``TokenTable.snapshot_for_job``)
+        repairs the log and returns the published summary instead of
+        committing the same manifest rows a second time.
+        """
+        prior = self.committed()
+        if prior is not None:
+            return {k: v for k, v in prior.items()
+                    if k not in ("event", "job_id", "timestamp_ms")}
+        published = table.snapshot_for_job(self.job_id)
+        if published is None:
+            return None
+        summary = dict(published["summary"])
+        self.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
+        return {"snapshot_id": published["snapshot_id"], **summary}
+
     def mark_unit_done(
         self,
         unit: str,

@@ -73,7 +73,7 @@ from ..plans.binpack import pack_bins
 from . import fs as fslayer
 from .compaction import UNITS_PER_JOB, TaskUnit, crash_hook, run_task_units
 from .lineage import LineageLog
-from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
+from .metadata import TOKEN_SCHEMA, TokenTable, _strip_scheme, list_parquet_files
 from .skew import salted_latest_by_key
 
 # Size estimate of a source row: 4 bytes per token plus ROW_BYTES.
@@ -247,7 +247,8 @@ class _DriverPlan:
     def tags(self, batches: list[list[str]]) -> DataFrame:
         """(doc_id, _batch) of every matched key and, in batch 0, every
         insert key (``_stage_slices``)."""
-        batch_of = {self.file_ids[_norm(f)]: i for i, files in enumerate(batches) for f in files}
+        batch_of = {self.file_ids[_strip_scheme(f)]: i
+                    for i, files in enumerate(batches) for f in files}
         at = [batch_of[f] for f in self.hit_files.tolist()]
         ins = self.insert_keys.combine_chunks()
         return self.spark.createDataFrame(pa.table({
@@ -308,7 +309,7 @@ class _DistributedPlan:
         guards against a key probed in more than one file of a malformed
         table."""
         file_batch = self.spark.createDataFrame(
-            [(_norm(f), i) for i, files in enumerate(batches) for f in files],
+            [(_strip_scheme(f), i) for i, files in enumerate(batches) for f in files],
             "file_path string, _batch int",
         )
         tags = self.matched.join(F.broadcast(file_batch), "file_path").select("doc_id", "_batch")
@@ -452,27 +453,8 @@ def merge_into(
     parent = table.current_snapshot_id()
     job_tag = job_id or f"merge-snap{parent}"
     log = LineageLog(table.root, job_tag)
-    prior = log.committed()
-    if prior is not None:
-        # Replayed job (e.g. a foreachBatch batch rerun after a crash in
-        # the window between table commit and the stream checkpoint
-        # write): this job's manifest rows are already committed.
-        # Re-committing would union them a second time. Idempotent return.
-        logger.info("merge job %s already committed snapshot %s; replay is a no-op",
-                    job_tag, prior.get("snapshot_id"))
-        return {k: v for k, v in prior.items()
-                if k not in ("event", "job_id", "timestamp_ms")}
-    published = table.snapshot_for_job(job_tag)
-    if published is not None:
-        # Crash landed between the VERSION swap and the 'committed'
-        # lineage append: the snapshot is live but the log doesn't say
-        # so. Repair the log and return — re-committing would union the
-        # same manifest rows a second time (duplicate files on scan).
-        logger.info("merge job %s found published snapshot %s; repairing lineage",
-                    job_tag, published["snapshot_id"])
-        summary = dict(published["summary"])
-        log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
-        return {"snapshot_id": published["snapshot_id"], **summary}
+    if (prior := log.replayed(table)) is not None:
+        return prior
     src = _prepare_source(source_df, duplicate_policy, salt)
     staging = table.new_data_dir(job_tag) / "_staging"
     try:
@@ -502,15 +484,13 @@ def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
     # an explicit schema: inferring it would cost a job
     staged = spark.read.schema(STAGED_SCHEMA).parquet(str(staging / "src"))
     on_driver = _driver_bytes(prof["n"], prof["key_bytes"] or 0) <= broadcast_cap
-    # Candidate pruning over DRIVER-SIDE manifest records (pyarrow footer
-    # path for small manifests — no Spark job; distributed collect above
-    # SMALL_MANIFEST_ROWS, see metadata.manifest_records).
-    cand_rows = [
-        r for r in table.manifest_records(spark, parent)
-        if r["max_doc_id"] is not None and r["min_doc_id"] is not None
-        and r["max_doc_id"] >= lo and r["min_doc_id"] <= hi
-    ]
-    cand_files = sorted(r["file_path"] for r in cand_rows)
+    # Candidate pruning: the manifest's doc_id envelopes that overlap the
+    # key range, filtered in Arrow on the driver (no data read).
+    m = table.manifest_table(parent)
+    cand = m.filter(pc.and_(pc.greater_equal(m["max_doc_id"], lo),
+                            pc.less_equal(m["min_doc_id"], hi)))
+    manifest_bytes = dict(zip(cand["file_path"].to_pylist(), cand["file_bytes"].to_pylist()))
+    cand_files = sorted(manifest_bytes)
     lap("profile")
 
     # 2. PLAN — the probe reads doc_id + file path of the candidates
@@ -525,7 +505,7 @@ def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
             .where((F.col("doc_id") >= lo) & (F.col("doc_id") <= hi))
             .select("doc_id", _probe_file_path().alias("file_path"))
         )
-    file_ids = _file_ids([_norm(f) for f in cand_files]) if on_driver else None
+    file_ids = _file_ids([_strip_scheme(f) for f in cand_files]) if on_driver else None
     if file_ids is not None:
         plan = _DriverPlan(spark, staged, probe_scan, file_ids)
         if duplicate_policy == "error" and (dup := plan.duplicate()) is not None:
@@ -538,10 +518,9 @@ def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
                 ex = staged.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
                 raise _duplicate_keys(ex[0]["doc_id"])
         plan = _DistributedPlan(spark, staged, prof, probe_scan, max_touched_files)
-    manifest_bytes = {r["file_path"]: r["file_bytes"] for r in cand_rows}
     touched = {}
     if plan.file_bytes is not None:
-        by_norm = {_norm(f): f for f in cand_files}
+        by_norm = {_strip_scheme(f): f for f in cand_files}
         touched = {by_norm[p]: b for p, b in plan.file_bytes.items() if p in by_norm}
     if plan.file_bytes is None or len(touched) > max_touched_files:
         # partition-granular fallback: rewrite every candidate file in
@@ -623,19 +602,12 @@ def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
         # seconds land in the same dict for the lineage event and result
         "phases": phases,
     }
-    # manifest-delta commit: driver-side pyarrow for small manifests
-    # (zero Spark jobs), distributed anti-join + union above the
-    # SMALL_MANIFEST_ROWS threshold (metadata.commit_delta)
     sid = table.commit_delta(
-        spark, removed, new_rows, operation="merge", summary=summary, parent_id=parent
+        removed, new_rows, operation="merge", summary=summary, parent_id=parent
     )
     lap("commit")
     log.log_event("committed", snapshot_id=sid, **summary)
     return {"snapshot_id": sid, **summary}
-
-
-def _norm(p: str) -> str:
-    return p.removeprefix("file://").removeprefix("file:")
 
 
 def _probe_file_path() -> F.Column:

@@ -19,6 +19,10 @@ compare-and-swap on the parent snapshot id, then an atomic
 ``os.rename`` of the VERSION pointer — single-writer semantics with
 conflict detection, the same contract Iceberg gets from its catalog CAS.
 
+Manifests are read, planned over and written on the driver in Arrow at
+every size (``manifest_table``, ``commit_delta``), as Iceberg plans
+normal tables: the rows a plan uses land on the driver in any case.
+
 Semantics precedent in the reference: Delta snapshot/retention knobs at
 spark/SparkSessionManager.scala:59-74 (retentionDurationCheck,
 optimizeWrite/autoCompact, dynamic partition overwrite).
@@ -28,13 +32,17 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # The target table schema (BASELINE.json input_hint).
 TOKEN_SCHEMA = T.StructType(
@@ -64,24 +72,13 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
-def _manifest_arrow_schema():
-    """MANIFEST_SCHEMA as a pyarrow schema (driver-side manifest IO)."""
-    import pyarrow as pa
+# The same schema for driver-side manifest IO: every manifest part is
+# read and written with it.
+MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
-    return pa.schema(
-        [
-            pa.field("file_path", pa.string(), nullable=False),
-            pa.field("partition", pa.string()),
-            pa.field("record_count", pa.int64()),
-            pa.field("file_bytes", pa.int64()),
-            pa.field("min_doc_id", pa.string()),
-            pa.field("max_doc_id", pa.string()),
-            pa.field("min_n_tok", pa.int32()),
-            pa.field("max_n_tok", pa.int32()),
-            pa.field("min_zkey", pa.int64()),
-            pa.field("max_zkey", pa.int64()),
-        ]
-    )
+# A scheme-prefixed local path (file:///x, file:/x) names the same file
+# as the plain path (/x); manifest paths are compared without it.
+_SCHEME = r"^file:(//)?"
 
 
 class SnapshotConflict(RuntimeError):
@@ -91,13 +88,6 @@ class SnapshotConflict(RuntimeError):
 # A commit's critical section is two metadata writes (~ms); a lock this
 # old belongs to a crashed process and is safe to break.
 LOCK_STALE_S = 30.0
-
-# Manifests at or below this row count (≈ file count) are planned and
-# committed DRIVER-SIDE with pyarrow — zero Spark jobs. ~100k rows is a
-# few MB of footer metadata; above it the distributed path takes over.
-# Iceberg makes the same split: driver-side manifest planning for
-# normal tables, distributed planning only for metadata at data scale.
-SMALL_MANIFEST_ROWS = 100_000
 
 
 def _read_lock(lock: "Path") -> str:
@@ -194,7 +184,7 @@ class TokenTable:
 
     def data_files(self, spark: SparkSession, snapshot_id: int | None = None) -> list[str]:
         """File list of a snapshot. Driver-side planning, like Iceberg's."""
-        return [r["file_path"] for r in self.manifest_records(spark, snapshot_id)]
+        return self.manifest_table(snapshot_id)["file_path"].to_pylist()
 
     def _manifest_files(self, snapshot_id: int | None = None) -> list[str]:
         snap = self.snapshot(snapshot_id)
@@ -205,46 +195,33 @@ class TokenTable:
     def manifest_row_count(self, snapshot_id: int | None = None) -> int:
         """Snapshot file count from the manifest parquet FOOTERS only —
         driver-side metadata reads, no Spark job, no data pages."""
-        import pyarrow.parquet as pq
-
         return sum(pq.ParquetFile(f).metadata.num_rows for f in self._manifest_files(snapshot_id))
 
-    def manifest_paths(self, snapshot_id: int | None = None) -> set[str]:
-        """Scheme-normalized ``file_path`` set of a snapshot's manifest,
-        read driver-side with pyarrow (that one column only) — the
-        reachability input of expiry and orphan GC. The set lands on the
-        driver at any manifest size, as ``manifest_records`` rows do."""
-        import pyarrow.parquet as pq
+    def manifest_table(self, snapshot_id: int | None = None) -> pa.Table:
+        """The manifest of a snapshot as one Arrow table (``MANIFEST_ARROW``;
+        empty when the snapshot has no manifest).
 
-        out: set[str] = set()
-        for f in self._manifest_files(snapshot_id):
-            paths = pq.read_table(f, columns=["file_path"]).column(0).to_pylist()
-            out.update(map(_strip_scheme, paths))
-        return out
+        The one manifest read: every planner filters it with
+        ``pyarrow.compute`` on the driver and turns only the rows and
+        columns its plan uses into Python objects — no Spark job, and
+        no per-row Python over the whole manifest.
+        """
+        files = self._manifest_files(snapshot_id)
+        if not files:
+            return MANIFEST_ARROW.empty_table()
+        return pa.concat_tables(pq.read_table(f, schema=MANIFEST_ARROW) for f in files)
+
+    def manifest_paths(self, snapshot_id: int | None = None) -> set[str]:
+        """Scheme-normalized ``file_path`` set of a snapshot's manifest —
+        the reachability input of expiry and orphan GC."""
+        return set(_strip_scheme_arrow(self.manifest_table(snapshot_id)["file_path"]).to_pylist())
 
     def manifest_records(
         self, spark: SparkSession, snapshot_id: int | None = None
     ) -> list[dict]:
-        """Manifest rows for driver planning, as dicts.
-
-        Small manifests (≤ SMALL_MANIFEST_ROWS, known from footers) are
-        read driver-side with pyarrow — zero Spark jobs on the planning
-        path, which is a constant serial term in every maintenance op.
-        Big manifests fall back to a distributed read + collect (the
-        caller is planning, so the rows land on the driver either way —
-        exactly Iceberg's planning model).
-        """
-        files = self._manifest_files(snapshot_id)
-        if not files:
-            return []
-        if self.manifest_row_count(snapshot_id) <= SMALL_MANIFEST_ROWS:
-            import pyarrow.parquet as pq
-
-            out: list[dict] = []
-            for f in files:
-                out.extend(pq.read_table(f).to_pylist())
-            return out
-        return [r.asDict() for r in self.manifest_df(spark, snapshot_id).collect()]
+        """Every manifest row as a dict (``manifest_table`` as Python
+        objects; planners filter the table before converting instead)."""
+        return self.manifest_table(snapshot_id).to_pylist()
 
     def scan(
         self,
@@ -269,50 +246,8 @@ class TokenTable:
         return spark.read.schema(TOKEN_SCHEMA).parquet(*files)
 
     # ------------------------------------------------------ committing
-    def write_manifest(self, manifest_df: DataFrame, tag: str) -> str:
-        """Persist a manifest DataFrame for a snapshot-to-be.
-
-        Written BY SPARK (distributed, multi-file) — the manifest of a
-        10^12-sequence table is itself big data; nothing is collected
-        to the driver here. ``tag`` must be UNIQUE per commit attempt
-        (id + uuid): manifests are written before the commit lock, so a
-        deterministic path would let the CAS loser clobber the winner's
-        published manifest.
-        """
-        rel = f"metadata/manifest-{tag}"
-        (
-            manifest_df.select([f.name for f in MANIFEST_SCHEMA.fields])
-            .write.mode("overwrite")
-            .parquet(str(self.root / rel))
-        )
-        return rel
-
-    def commit(
-        self,
-        manifest_df: DataFrame,
-        operation: str,
-        summary: dict | None = None,
-        parent_id: int | None = None,
-    ) -> int:
-        """Atomically publish a new snapshot whose file set is ``manifest_df``.
-
-        CAS on ``parent_id``: if another writer advanced VERSION since
-        the caller planned against ``parent_id``, raise
-        SnapshotConflict (caller replans, like Iceberg optimistic
-        concurrency).
-        """
-        expected_parent = self.current_snapshot_id() if parent_id is None else parent_id
-        new_id = expected_parent + 1
-        # Write the heavyweight pieces before taking the lock, to a path
-        # UNIQUE to this attempt: racing writers from the same parent
-        # must not share manifest paths (the CAS loser would clobber the
-        # winner's committed manifest).
-        manifest_rel = self.write_manifest(manifest_df, f"{new_id}-{uuid.uuid4().hex[:8]}")
-        return self._publish(manifest_rel, expected_parent, new_id, operation, summary)
-
     def commit_delta(
         self,
-        spark: SparkSession,
         removed_files: list[str],
         new_rows: list[dict],
         operation: str,
@@ -321,65 +256,30 @@ class TokenTable:
     ) -> int:
         """Commit ``parent manifest − removed_files + new_rows`` atomically.
 
-        The manifest-delta shape every maintenance op produces. When the
-        parent manifest is small (footer row count ≤ SMALL_MANIFEST_ROWS),
-        the new manifest is assembled and written DRIVER-SIDE with
-        pyarrow — zero Spark jobs on the commit path, which together with
-        ``manifest_records`` removes the constant per-commit serial term
-        that capped scaling efficiency. Big manifests keep the
-        distributed anti-join + union + write.
+        The manifest-delta shape every maintenance op produces, assembled
+        and written on the driver in Arrow: the parent manifest minus the
+        removed paths (compared scheme-normalized, so ``file:///x``
+        removes ``/x``), plus the new rows, as one parquet part. CAS on
+        ``parent_id``: if another writer advanced VERSION since the
+        caller planned against it, raise SnapshotConflict (the caller
+        replans, like Iceberg optimistic concurrency).
         """
         expected_parent = self.current_snapshot_id() if parent_id is None else parent_id
         new_id = expected_parent + 1
+        parent = self.manifest_table(expected_parent)
+        removed = pa.array({_strip_scheme(f) for f in removed_files}, pa.string())
+        keep = parent.filter(
+            pc.invert(pc.is_in(_strip_scheme_arrow(parent["file_path"]), value_set=removed))
+        )
+        tbl = pa.concat_tables([keep, pa.Table.from_pylist(new_rows, schema=MANIFEST_ARROW)])
+        # Written before the commit lock, to a path UNIQUE to this
+        # attempt: racing writers from the same parent must not share
+        # manifest paths (the CAS loser would clobber the winner's
+        # committed manifest).
         rel = f"metadata/manifest-{new_id}-{uuid.uuid4().hex[:8]}"
-        parent_files = self._manifest_files(expected_parent)
-        if self.manifest_row_count(expected_parent) + len(new_rows) <= SMALL_MANIFEST_ROWS:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            schema = _manifest_arrow_schema()
-            removed = {_strip_scheme(f) for f in removed_files}
-            keep: list[dict] = []
-            for f in parent_files:
-                keep.extend(
-                    r
-                    for r in pq.read_table(f).to_pylist()
-                    if _strip_scheme(r["file_path"]) not in removed
-                )
-            cols = [f.name for f in MANIFEST_SCHEMA.fields]
-            rows = keep + [{c: r.get(c) for c in cols} for r in new_rows]
-            tbl = pa.Table.from_pylist(rows, schema=schema)
-            out_dir = self.root / rel
-            out_dir.mkdir(parents=True, exist_ok=True)
-            pq.write_table(tbl, out_dir / "part-00000.parquet")
-        else:
-            # Anti-join on scheme-normalized paths — byte-identical
-            # semantics with the pyarrow small-manifest branch above
-            # (which strips file:// on both sides): a scheme-prefixed
-            # removed path must drop its manifest row on either path.
-            manifest = self.manifest_df(spark, expected_parent)
-            removed_df = spark.createDataFrame(
-                [(_strip_scheme(f),) for f in removed_files] or [], "_rm_path string"
-            )
-            norm = F.regexp_replace(F.col("file_path"), "^file:(//)?", "")
-            new_manifest = (
-                manifest.withColumn("_norm_path", norm)
-                .join(
-                    F.broadcast(removed_df),
-                    F.col("_norm_path") == F.col("_rm_path"),
-                    "left_anti",
-                )
-                .drop("_norm_path")
-            )
-            if new_rows:
-                new_manifest = new_manifest.unionByName(
-                    spark.createDataFrame(new_rows, MANIFEST_SCHEMA)
-                )
-            (
-                new_manifest.select([f.name for f in MANIFEST_SCHEMA.fields])
-                .write.mode("overwrite")
-                .parquet(str(self.root / rel))
-            )
+        out_dir = self.root / rel
+        out_dir.mkdir(parents=True, exist_ok=True)
+        pq.write_table(tbl, out_dir / "part-00000.parquet")
         return self._publish(rel, expected_parent, new_id, operation, summary)
 
     def _publish(
@@ -390,7 +290,7 @@ class TokenTable:
         operation: str,
         summary: dict | None,
     ) -> int:
-        """The locked CAS critical section shared by both commit paths.
+        """The locked CAS critical section of a commit.
 
         Locking protocol (single-writer with crash recovery):
         - acquire: O_EXCL create of COMMIT.lock carrying a UNIQUE token;
@@ -491,7 +391,11 @@ class TokenTable:
 
 
 def _strip_scheme(p: str) -> str:
-    return p.removeprefix("file://").removeprefix("file:")
+    return re.sub(_SCHEME, "", p)
+
+
+def _strip_scheme_arrow(paths: pa.ChunkedArray) -> pa.ChunkedArray:
+    return pc.replace_substring_regex(paths, _SCHEME, "")
 
 
 def _atomic_write(path: Path, content: str) -> None:

@@ -106,8 +106,7 @@ def file_stats_df(
 # (one ~KB footer read per file, sub-ms each) than as a Spark job —
 # createDataFrame + repartition + mapInPandas + collect costs a fixed
 # few hundred ms per call, which dominates maintenance ops on small
-# tables (and every streaming microbatch). Same small/large split as
-# metadata.SMALL_MANIFEST_ROWS.
+# tables (and every streaming microbatch).
 SMALL_STATS_FILES = 256
 
 

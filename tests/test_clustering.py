@@ -4,14 +4,18 @@ scan equivalence, resume."""
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import itertools
+import shutil
 from collections import defaultdict
+from pathlib import Path
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from feature_engineering_poc_spark.lakehouse import (
+    TokenTable,
     assert_scan_equivalent,
     write_token_table,
 )
@@ -246,3 +250,27 @@ def test_cluster_paths_agree_on_keys(spark, tmp_path):
             for r in spark.read.parquet(*files).select("doc_id", "zkey").collect()
         )
     assert keyed["task"] == keyed["shuffle"]
+
+
+def test_cluster_task_path_output_independent_of_file_order(spark, tmp_path):
+    """Rows with equal curve keys are ordered by doc_id, so the in-task
+    outputs are byte-identical whatever the order of the manifest rows
+    (the unit's file order). ``max_tok=16`` leaves nine n_tok values, so
+    most keys are shared."""
+    a = write_token_table(spark, tmp_path / "a", n_rows=3000, files_per_source=6, max_tok=16)
+    shutil.copytree(a.root, tmp_path / "b")  # the copy's manifest names a's files
+    b = TokenTable(tmp_path / "b")
+    rows = b.manifest_records(spark)
+    b.commit_delta([r["file_path"] for r in rows], rows[::-1], operation="reorder")
+    a.commit_delta([], [], operation="touch")  # same snapshot id, so same output names
+    outputs = []
+    for t in (a, b):
+        result = cluster(spark, t, curve="zorder", target_file_bytes=16 * 1024)
+        _assert_path(t, result, "task")
+        outputs.append(sorted(
+            (r["partition"], Path(r["file_path"]).name,
+             hashlib.sha256(Path(r["file_path"]).read_bytes()).hexdigest())
+            for r in t.manifest_records(spark)
+        ))
+    assert len(outputs[0]) > 4  # several slices per unit
+    assert outputs[0] == outputs[1]

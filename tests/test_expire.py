@@ -13,7 +13,6 @@ from feature_engineering_poc_spark.lakehouse import (
     scan_fingerprint,
     write_token_table,
 )
-from feature_engineering_poc_spark.lakehouse import metadata as md
 from feature_engineering_poc_spark.lakehouse import stats
 from feature_engineering_poc_spark.lakehouse.compaction import compact
 from feature_engineering_poc_spark.lakehouse.expire import (
@@ -106,11 +105,9 @@ def test_rewrite_manifests_same_files_fresh_stats(spark, table):
 
 
 def test_rewrite_manifests_above_small_thresholds(spark, table, monkeypatch):
-    """With both small thresholds at 0 the rewrite's callees read the
-    manifest, stat the footers and write the new manifest through
-    Spark; the published rows are the same."""
+    """With ``SMALL_STATS_FILES`` at 0 the rewrite stats the footers in
+    a Spark job; the published rows are the same."""
     pre_rows = sorted(table.manifest_records(spark), key=lambda r: r["file_path"])
-    monkeypatch.setattr(md, "SMALL_MANIFEST_ROWS", 0)
     monkeypatch.setattr(stats, "SMALL_STATS_FILES", 0)
     before = last_job_id(spark)
     r = rewrite_manifests(spark, table)

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import functions as F
-
 from feature_engineering_poc_spark.lakehouse import (
     assert_scan_equivalent,
     scan_fingerprint,
@@ -20,10 +18,12 @@ from feature_engineering_poc_spark.lakehouse.expire import expire_snapshots
 def _to_uri_manifest(spark, table):
     """Commit a snapshot whose manifest references every data file by
     file:// URI instead of a plain path (object-store stand-in)."""
-    m = table.manifest_df(spark).withColumn(
-        "file_path", F.concat(F.lit("file://"), F.col("file_path"))
+    rows = table.manifest_records(spark)
+    return table.commit_delta(
+        [r["file_path"] for r in rows],
+        [{**r, "file_path": "file://" + r["file_path"]} for r in rows],
+        operation="uri-rewrite",
     )
-    return table.commit(m, operation="uri-rewrite")
 
 
 def test_compact_reads_uri_manifest_end_to_end(spark, tmp_path):
@@ -42,7 +42,7 @@ def test_compact_reads_uri_manifest_end_to_end(spark, tmp_path):
     after = scan_fingerprint(t.scan(spark))
     assert (after.row_count, after.xor_hash) == (before.row_count, before.xor_hash)
     # every URI-referenced original dropped from the manifest (the
-    # distributed/pyarrow scheme normalization under test)
+    # scheme normalization of commit_delta under test)
     live = {r_["file_path"] for r_ in t.manifest_records(spark)}
     assert not (live & set(uri_files))
 

@@ -141,7 +141,7 @@ def test_stale_lock_break_leaves_no_debris(spark, tmp_path, monkeypatch):
     lock = t.meta_dir / "COMMIT.lock"
     lock.write_text("pid=999999 token=deadbeef")  # abandoned by a dead process
     monkeypatch.setattr(md, "LOCK_STALE_S", 0.0)
-    sid = t.commit(t.manifest_df(spark), operation="touch")
+    sid = t.commit_delta([], [], operation="touch")
     assert sid == t.current_snapshot_id()
     assert not lock.exists()
     assert not list(t.meta_dir.glob("COMMIT.lock.stale-*"))
@@ -176,29 +176,6 @@ def test_binpack_units_group_into_shared_jobs(spark, tmp_path, monkeypatch):
     t2 = write_token_table(spark, tmp_path / "t2", n_rows=1200, files_per_source=4, max_tok=32)
     compact(spark, t2, target_file_bytes=64 * 1024 * 1024, units_per_job=64)
     assert len(calls) == 1
-
-
-def test_commit_delta_driver_side_matches_distributed(spark, tmp_path, monkeypatch):
-    """The pyarrow small-manifest commit path and the distributed path
-    produce identical manifests for the same delta."""
-    from feature_engineering_poc_spark.lakehouse import metadata as md
-
-    t1 = write_token_table(spark, tmp_path / "a", n_rows=600, files_per_source=3, max_tok=32)
-    t2 = write_token_table(spark, tmp_path / "b", n_rows=600, files_per_source=3, max_tok=32)
-    # force t2 down the distributed path
-    monkeypatch.setattr(md, "SMALL_MANIFEST_ROWS", 0)
-    compact(spark, t2, target_file_bytes=64 * 1024 * 1024)
-    monkeypatch.undo()
-    compact(spark, t1, target_file_bytes=64 * 1024 * 1024)
-
-    def canon(table):
-        return sorted(
-            (r["partition"], r["record_count"], r["min_doc_id"], r["max_doc_id"])
-            for r in table.manifest_records(spark)
-        )
-
-    assert canon(t1) == canon(t2)
-    assert_scan_equivalent(t1.scan(spark), t2.scan(spark))
 
 
 def _drop_committed_event(table, job_id):
@@ -258,21 +235,11 @@ def test_cluster_replay_after_publish_before_lineage_event(spark, tmp_path):
     _assert_manifest_unique_files(spark, t)
 
 
-def test_commit_delta_scheme_normalization_both_paths(spark, tmp_path, monkeypatch):
-    """A file://-prefixed removed path drops its manifest row on BOTH
-    the pyarrow small-manifest path and the distributed anti-join path
-    (previously only the former normalized schemes)."""
-    from feature_engineering_poc_spark.lakehouse import metadata as md
-
-    for name, small_rows in (("small", None), ("dist", 0)):
-        t = write_token_table(
-            spark, tmp_path / name, n_rows=300, files_per_source=2, max_tok=32
-        )
-        if small_rows is not None:
-            monkeypatch.setattr(md, "SMALL_MANIFEST_ROWS", small_rows)
-        victim = t.manifest_records(spark)[0]["file_path"]
-        n_before = len(t.manifest_records(spark))
-        t.commit_delta(spark, ["file://" + victim], [], operation="test-remove")
-        assert len(t.manifest_records(spark)) == n_before - 1
-        assert victim not in {r["file_path"] for r in t.manifest_records(spark)}
-        monkeypatch.undo()
+def test_commit_delta_scheme_normalization(spark, tmp_path):
+    """A file://-prefixed removed path drops its plain-path manifest row."""
+    t = write_token_table(spark, tmp_path / "t", n_rows=300, files_per_source=2, max_tok=32)
+    victim = t.manifest_records(spark)[0]["file_path"]
+    n_before = len(t.manifest_records(spark))
+    t.commit_delta(["file://" + victim], [], operation="test-remove")
+    assert len(t.manifest_records(spark)) == n_before - 1
+    assert victim not in {r["file_path"] for r in t.manifest_records(spark)}

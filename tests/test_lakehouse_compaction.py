@@ -92,11 +92,10 @@ def test_compaction_resume_from_checkpoint(spark, tmp_path):
 
 def test_commit_cas_conflict(spark, tmp_path):
     t = write_token_table(spark, tmp_path / "t2", n_rows=200, files_per_source=2, max_tok=32)
-    m = t.manifest_df(spark)
     stale_parent = t.current_snapshot_id()
-    t.commit(m, operation="touch", parent_id=stale_parent)
+    t.commit_delta([], [], operation="touch", parent_id=stale_parent)
     with pytest.raises(SnapshotConflict):
-        t.commit(m, operation="touch", parent_id=stale_parent)
+        t.commit_delta([], [], operation="touch", parent_id=stale_parent)
 
 
 def test_cas_loser_does_not_clobber_winner_manifest(spark, tmp_path):
@@ -106,11 +105,12 @@ def test_cas_loser_does_not_clobber_winner_manifest(spark, tmp_path):
     t = write_token_table(spark, tmp_path / "t3", n_rows=200, files_per_source=2, max_tok=32)
     m = t.manifest_df(spark)
     parent = t.current_snapshot_id()
-    win_id = t.commit(m, operation="touch", parent_id=parent)
+    win_id = t.commit_delta([], [], operation="touch", parent_id=parent)
     winner_manifest = t.root / t.snapshot(win_id)["manifest"]
     winner_files = sorted(p.name for p in winner_manifest.rglob("*.parquet"))
     with pytest.raises(SnapshotConflict):
-        t.commit(m.limit(1), operation="touch", parent_id=parent)
+        # the loser keeps one row: every path but one removed
+        t.commit_delta(t.data_files(spark, parent)[1:], [], operation="touch", parent_id=parent)
     # winner's manifest untouched, still readable, scan unchanged
     assert sorted(p.name for p in winner_manifest.rglob("*.parquet")) == winner_files
     assert t.manifest_df(spark).count() == m.count()
@@ -128,7 +128,7 @@ def test_commit_breaks_stale_lock(spark, tmp_path, monkeypatch):
     lock = t.meta_dir / "COMMIT.lock"
     lock.write_text("pid=999999 ts=0")  # abandoned by a dead process
     monkeypatch.setattr(md, "LOCK_STALE_S", 0.0)
-    sid = t.commit(t.manifest_df(spark), operation="touch")
+    sid = t.commit_delta([], [], operation="touch")
     assert sid == t.current_snapshot_id()
     assert not lock.exists()
 
