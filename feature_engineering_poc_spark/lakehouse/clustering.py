@@ -17,7 +17,7 @@ Scale shape:
   compaction bin) is rewritten INSIDE one task: pyarrow read, curve
   key, sort by (key, doc_id), ``n_out`` equal-row zstd slices, footer
   stats — compaction's kernel and chunked executor, so all such units
-  share ONE shuffle-free Spark job (compaction.run_task_units).
+  share ONE shuffle-free Spark job (``MaintenanceJob.run``, job.py).
 - A larger unit takes the shuffle path: one range placement per unit
   (quantile boundaries + a bucket hash exchange) + in-partition sort by
   (key, doc_id); that is the minimum data movement a rewrite above one
@@ -27,13 +27,11 @@ Scale shape:
   curve-range pruning; table scans use the fixed 4-column schema and
   never see it.
 - Per-partition resumable units with lineage checkpoints, atomic
-  snapshot commit — same protocol as compaction.
+  snapshot commit — job.py's skeleton, as in compaction and MERGE.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 
 import numpy as np
@@ -49,9 +47,7 @@ from ..plans.sfc import (
     normalize_to_grid,
     string_prefix_ordinal,
 )
-from .compaction import UNITS_PER_JOB, TaskUnit, crash_hook, run_task_units
-from .lineage import LineageLog
-from .merge import _parse_size
+from .job import MaintenanceJob, TaskUnit
 from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
 from .stats import file_stats_rows
 
@@ -139,22 +135,6 @@ def _table_keys(key: dict, tbl) -> np.ndarray:
     return _keys(specs, key["curve"], key["bits"], cols)
 
 
-def _run_threaded_units(
-    fn: Callable, pending: list, after_unit: Callable[[], None] | None = None
-) -> None:
-    """Run ``fn(unit)`` for each pending shuffle unit (each needs its own
-    Spark jobs): concurrently from up to 8 threads, or one at a time with
-    ``after_unit`` after each (the crash hook's exact crash point)."""
-    if after_unit is not None:
-        for unit in pending:
-            fn(unit)
-            after_unit()
-    elif pending:
-        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-            for f in [ex.submit(fn, unit) for unit in pending]:
-                f.result()
-
-
 def _partition_bounds(
     spark: SparkSession, unit: dict, columns: list[str], files: list[str]
 ) -> list[_ColSpec]:
@@ -203,11 +183,13 @@ def cluster(
 ) -> dict:
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"unknown curve: {curve}")
-    parent = table.current_snapshot_id()
+    job = MaintenanceJob(spark, table, curve, job_id, _fail_after_units)
+    if (prior := job.replayed()) is not None:
+        return prior
     # Driver-side planning: the manifest is filtered to the wanted
     # partitions and reduced to one row per unit (its files, sizes and
     # stats envelope) in Arrow.
-    m = table.manifest_table(parent)
+    m = table.manifest_table(job.parent)
     if partitions is not None:
         m = m.filter(pc.is_in(m["partition"], value_set=pa.array(partitions, pa.string())))
     if m.num_rows == 0:
@@ -219,15 +201,11 @@ def cluster(
     ])
     by_part = {u["partition"]: u for u in units.to_pylist()}
 
-    job_tag = job_id or f"{curve}-snap{parent}"
-    log = LineageLog(table.root, job_tag)
-    if (prior := log.replayed(table)) is not None:
-        return prior
-    done = log.completed_units()
+    done = job.done()
     # A unit whose input fits one scan task is rewritten inside one
     # task (the memory envelope of a compaction bin); larger units
     # take the shuffle path.
-    task_bytes = _parse_size(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    task_bytes = job.task_bytes()
     shuffled = {p for p, u in by_part.items() if u["file_bytes_sum"] > task_bytes}
 
     def plan_unit(part: str):
@@ -238,7 +216,7 @@ def cluster(
                    "rows": unit["record_count_sum"]}
         n_out = max(1, round(total_bytes / target_file_bytes))
         specs = _partition_bounds(spark, unit, list(columns), files)
-        out_dir = table.new_data_dir(job_tag) / part
+        out_dir = table.new_data_dir(job.tag) / part
         return files, metrics, n_out, specs, out_dir
 
     def task_unit(part: str) -> TaskUnit:
@@ -304,40 +282,31 @@ def cluster(
         )
         new_files = list_parquet_files(out_dir)
         stats = file_stats_rows(spark, [(f, part) for f in new_files])
-        log.mark_unit_done(
+        job.log.mark_unit_done(
             part,
             files_in=files,
             new_manifest_rows=stats,
             metrics={**metrics, "files_written": len(new_files)},
         )
 
-    # In-task units share compaction's chunked executor; shuffle units
-    # run concurrently, one unit's jobs per thread. The crash hook runs
-    # every unit in its own job(s), sequentially.
-    tick = crash_hook(_fail_after_units)
+    # In-task units share one chunked executor; shuffle units run
+    # concurrently, one unit's jobs per thread.
     pending = [p for p in sorted(by_part) if p not in done]
     in_task = [task_unit(p) for p in pending if p not in shuffled]
-    run_task_units(spark, log, in_task, 1 if tick else UNITS_PER_JOB, tick)
-    _run_threaded_units(run_shuffle_unit, [p for p in pending if p in shuffled], tick)
+    job.lap("plan")
+    job.run(in_task)
+    job.run_each(run_shuffle_unit, [p for p in pending if p in shuffled])
+    job.lap("rewrite")
 
-    done = log.completed_units()
-    removed = [f for rec in done.values() for f in rec["files_in"]]
-    new_rows = [row for rec in done.values() for row in rec["new_manifest_rows"]]
-    summary = {
+    done = job.done()
+    return job.commit(f"cluster-{curve}", {
         "curve": curve,
         "columns": list(columns),
-        "files_rewritten": len(removed),
-        "files_written": len(new_rows),
+        "files_rewritten": sum(len(rec["files_in"]) for rec in done.values()),
         "rows": sum(rec["metrics"]["rows"] for rec in done.values()),
         "units": len(by_part),
         "units_shuffled": len(shuffled),
-        "job_tag": job_tag,
-    }
-    sid = table.commit_delta(
-        removed, new_rows, operation=f"cluster-{curve}", summary=summary, parent_id=parent
-    )
-    log.log_event("committed", snapshot_id=sid, **summary)
-    return {"snapshot_id": sid, **summary}
+    }, done)
 
 
 def prune_files(

@@ -6,20 +6,18 @@ Shape of the job, scale-first:
    smaller-than-threshold files, FFD-bin-pack per partition
    (plans/binpack.py). No data rows are read for planning.
 2. EXECUTE (cluster, one shuffle-free Spark job per chunk of
-   ``UNITS_PER_JOB`` partition units): each FFD bin is one in-task
+   ``job.UNITS_PER_JOB`` partition units): each FFD bin is one in-task
    pyarrow rewrite that reads exactly the binned files, sorts them by
    doc_id, writes one zstd file to a DETERMINISTICALLY-NAMED path
    (idempotent rerun) and returns its footer stats. Nothing crosses
    partitions. clustering.py runs its single-task units and merge.py
-   its copy-on-write batches through the same kernel and executor
-   (``run_task_units``).
-3. CHECKPOINT: a lineage record per completed partition carries the
-   unit's new manifest rows + metrics; a resumed job skips completed
-   units entirely (lineage.py).
-4. COMMIT (atomic): new manifest = old manifest − compacted files +
-   new files; CAS snapshot swap. Readers pinned to the old snapshot
-   still resolve the old files (they are not deleted until
-   snapshot expiry — expire.py).
+   its copy-on-write batches through the same kernel
+   (``_rewrite_bins_distributed``).
+3. CHECKPOINT + COMMIT: job.py's skeleton — a lineage record per
+   completed partition unit (a resumed job skips it), then one atomic
+   snapshot swap: old manifest − compacted files + new files. Readers
+   pinned to the old snapshot still resolve the old files (they are
+   not deleted until snapshot expiry — expire.py).
 
 Reference precedent: Delta ``optimizeWrite``/``autoCompact`` knobs the
 reference enables but delegates (SparkSessionManager.scala:73-74); here
@@ -28,10 +26,7 @@ the mechanism is explicit and from scratch.
 
 from __future__ import annotations
 
-import itertools
 from collections import defaultdict
-from collections.abc import Callable
-from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -39,12 +34,10 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..plans.binpack import pack_bins
-from .lineage import LineageLog
+from .job import MaintenanceJob, TaskUnit
 from .metadata import MANIFEST_SCHEMA, TokenTable
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
-# Partition units per in-task rewrite job (``run_task_units``).
-UNITS_PER_JOB = 64
 
 
 def _rewrite_bins_distributed(
@@ -167,106 +160,39 @@ def _rewrite_bins_distributed(
     return per_spec
 
 
-@dataclass
-class TaskUnit:
-    """One resumable unit (its lineage ``name``) whose specs run as
-    in-task rewrites."""
-
-    name: str
-    specs: list[dict]
-    files_in: list[str]
-    metrics: dict
-
-
-def crash_hook(fail_after_units: int | None) -> Callable[[], None] | None:
-    """Test hook: a callable to run after each finished unit that raises
-    after the ``fail_after_units``-th one (None: no hook)."""
-    if fail_after_units is None:
-        return None
-    finished = itertools.count(1)
-
-    def tick() -> None:
-        i = next(finished)
-        if i >= fail_after_units:
-            raise RuntimeError(f"injected failure after {i} units (test hook)")
-
-    return tick
-
-
-def run_task_units(
-    spark: SparkSession,
-    log: LineageLog,
-    units: list[TaskUnit],
-    units_per_job: int = UNITS_PER_JOB,
-    after_unit: Callable[[], None] | None = None,
-) -> None:
-    """Run units GROUPED into chunks of ``units_per_job``: all of a
-    chunk's specs ride one Spark job (specs are independent tasks, so
-    grouping loses no parallelism and slashes per-job driver overhead).
-    Lineage checkpoints stay per-unit, written after each job; a crash
-    mid-chunk redoes at most one chunk of deterministic outputs.
-    ``after_unit`` runs after each checkpoint (the crash hook, which
-    also wants ``units_per_job=1`` for an exact crash point)."""
-    for start in range(0, len(units), units_per_job):
-        chunk = units[start : start + units_per_job]
-        per_spec = iter(_rewrite_bins_distributed(spark, [s for u in chunk for s in u.specs]))
-        for u in chunk:
-            new_rows = [r for _ in u.specs for r in next(per_spec)]
-            log.mark_unit_done(
-                u.name,
-                files_in=u.files_in,
-                new_manifest_rows=new_rows,
-                metrics={**u.metrics, "files_written": len(new_rows)},
-            )
-            if after_unit is not None:
-                after_unit()
-
-
 def compact(
     spark: SparkSession,
     table: TokenTable,
     target_file_bytes: int = DEFAULT_TARGET_BYTES,
-    small_file_threshold: int | None = None,
     job_id: str | None = None,
     partitions: list[str] | None = None,
-    units_per_job: int = UNITS_PER_JOB,
     _fail_after_units: int | None = None,
 ) -> dict:
     """Compact small files; returns a summary dict (snapshot_id=None if no-op).
 
-    Iceberg-binpack semantics with zero shuffle: each FFD bin becomes
-    one task that rewrites its files into one doc_id-sorted output file
-    (clustering.py is the re-sort op).
+    Iceberg-binpack semantics with zero shuffle: each file below
+    0.75 × ``target_file_bytes`` is a candidate, and each FFD bin
+    becomes one task that rewrites its files into one doc_id-sorted
+    output file (clustering.py is the re-sort op).
 
-    Execution GROUPS partition units: up to ``units_per_job``
-    partitions' bins ride in ONE Spark job (bins are independent tasks,
-    so grouping loses no parallelism). This bounds the per-job driver
-    submission overhead — the constant serial term — at 1/64th of a
-    job per partition, while lineage checkpoints stay per-partition
-    (a crash mid-chunk redoes at most one chunk of deterministic,
-    mode=overwrite outputs). A table with 10^5 small partitions
-    compacts in ~1.5k jobs instead of 10^5.
+    Up to ``job.UNITS_PER_JOB`` (64) partitions' bins ride ONE Spark
+    job, so a table with 10^5 small partitions compacts in ~1.5k jobs
+    instead of 10^5; lineage checkpoints stay per partition.
 
     A ``job_id`` that already committed returns its recorded result —
     replays are no-ops (idempotent under foreachBatch-style reruns).
-
-    ``_fail_after_units`` is a test hook that injects a crash after N
-    completed units to exercise checkpoint resume (forces the
-    sequential one-unit-per-job path so the crash point is exact).
+    ``_fail_after_units`` is the crash test hook (``MaintenanceJob``).
     """
-    parent = table.current_snapshot_id()
-    threshold = small_file_threshold or int(target_file_bytes * 0.75)
-    job_tag = job_id or f"compact-snap{parent}"
-    log = LineageLog(table.root, job_tag)
-    if (prior := log.replayed(table)) is not None:
+    job = MaintenanceJob(spark, table, "compact", job_id, _fail_after_units)
+    if (prior := job.replayed()) is not None:
         return prior
 
     # PLAN — metadata only, on the driver: the manifest is filtered to
     # the small files of the wanted partitions in Arrow before any row
     # becomes a Python object — same driver planning Iceberg's
     # rewriteDataFiles does.
-    m = table.manifest_table(parent)
-    wanted = pc.less(m["file_bytes"], threshold)
+    m = table.manifest_table(job.parent)
+    wanted = pc.less(m["file_bytes"], int(target_file_bytes * 0.75))
     if partitions is not None:
         in_parts = pc.is_in(m["partition"], value_set=pa.array(partitions, pa.string()))
         wanted = pc.and_(wanted, in_parts)
@@ -284,17 +210,13 @@ def compact(
     if not units:
         return {"snapshot_id": None, "units": 0, "files_in": 0, "files_out": 0, "rows": 0}
 
-    done = log.completed_units()
+    done = job.done()
     resumed = sum(1 for part, _ in units if part in done)
-    pending = [(part, bins) for part, bins in units if part not in done]
-
-    # EXECUTE: every bin is one in-task rewrite; pending units ride
-    # shared jobs of ``units_per_job`` units (run_task_units). The crash
-    # hook runs one unit per job for an exact crash point.
-    tick = crash_hook(_fail_after_units)
     task_units = []
-    for part, bins in pending:
-        out_dir = table.new_data_dir(job_tag) / part
+    for part, bins in units:
+        if part in done:
+            continue
+        out_dir = table.new_data_dir(job.tag) / part
         specs = [
             {"files": b.files, "partition": part,
              "outs": [str(out_dir / f"bin-{i:05d}.parquet")]}
@@ -306,24 +228,17 @@ def compact(
             "rows": sum(b.rows for b in bins),
         }
         task_units.append(TaskUnit(part, specs, [f for b in bins for f in b.files], metrics))
-    run_task_units(spark, log, task_units, 1 if tick else units_per_job, tick)
+    job.lap("plan")
 
-    # COMMIT — manifest delta assembled from lineage (covers resumed
-    # units too).
-    done = log.completed_units()
-    removed_files = [f for rec in done.values() for f in rec["files_in"]]
-    new_rows = [row for rec in done.values() for row in rec["new_manifest_rows"]]
-    summary = {
-        "files_compacted": len(removed_files),
-        "files_written": len(new_rows),
+    # EXECUTE: every bin is one in-task rewrite.
+    job.run(task_units)
+    job.lap("rewrite")
+
+    done = job.done()
+    return job.commit("compact", {
+        "files_compacted": sum(len(rec["files_in"]) for rec in done.values()),
         "rows_rewritten": sum(rec["metrics"]["rows"] for rec in done.values()),
         "bytes_compacted": sum(rec["metrics"]["bytes_compacted"] for rec in done.values()),
         "units": len(units),
         "units_resumed": resumed,
-        "job_tag": job_tag,
-    }
-    sid = table.commit_delta(
-        removed_files, new_rows, operation="compact", summary=summary, parent_id=parent
-    )
-    log.log_event("committed", snapshot_id=sid, **summary)
-    return {"snapshot_id": sid, **summary}
+    }, done)

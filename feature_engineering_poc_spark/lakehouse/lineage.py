@@ -1,12 +1,13 @@
-"""Checkpointed per-partition lineage log — resumable maintenance jobs.
+"""Checkpointed per-unit lineage log — resumable maintenance jobs.
 
 Every maintenance job (compaction, clustering, merge) logs one JSON
-record per completed work unit (a table partition, a file group, or a
-MERGE rewrite batch)
-to ``metadata/lineage/<job_id>.jsonl``. Records carry file-level
-metrics (files rewritten, bytes compacted, rows merged) AND the new
-manifest entries the unit produced, so a resumed job can skip the unit
-entirely and still assemble the final manifest.
+record per completed work unit (a table partition or a MERGE rewrite
+batch) to ``metadata/lineage/<job_tag>.jsonl``. Records carry
+file-level metrics (files rewritten, bytes compacted, rows merged) AND
+the new manifest entries the unit produced, so a resumed job can skip
+the unit entirely and still assemble the final manifest. job.py's
+``MaintenanceJob`` owns the protocol (replay, units, commit); this
+module is its durable log.
 
 Write protocol: a unit's record is appended with ``fsync`` only AFTER
 its data files are fully written — so a crash mid-unit leaves no
@@ -59,27 +60,6 @@ class LineageLog:
             if r.get("event") == "committed":
                 return r
         return None
-
-    def replayed(self, table) -> dict | None:
-        """The result of this job when it already committed, or None.
-
-        A job whose log records a commit returns that record (a replay
-        is a no-op). A job whose snapshot was published but whose log
-        lacks the 'committed' event (a crash between the VERSION swap
-        and the fsync'd append, see ``TokenTable.snapshot_for_job``)
-        repairs the log and returns the published summary instead of
-        committing the same manifest rows a second time.
-        """
-        prior = self.committed()
-        if prior is not None:
-            return {k: v for k, v in prior.items()
-                    if k not in ("event", "job_id", "timestamp_ms")}
-        published = table.snapshot_for_job(self.job_id)
-        if published is None:
-            return None
-        summary = dict(published["summary"])
-        self.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
-        return {"snapshot_id": published["snapshot_id"], **summary}
 
     def mark_unit_done(
         self,

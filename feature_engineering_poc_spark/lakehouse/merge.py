@@ -16,7 +16,7 @@ Semantics (SQL MERGE): source rows carry an optional ``_op`` column in
 
 Scale shape — ONE rewrite path: every batch is an in-task pyarrow
 rewrite, and all batches share one shuffle-free Spark job (compaction's
-kernel and executor). The broadcast cap (as in CAMEL's build-side
+kernel, job.py's executor). The broadcast cap (as in CAMEL's build-side
 budget) bounds only what planning brings to the driver and broadcasts.
 
 1. PROFILE + STAGE. One write of the prepared source to
@@ -49,18 +49,19 @@ budget) bounds only what planning brings to the driver and broadcasts.
    snapshot and source, and each one is a lineage unit, so a rerun
    under the same job_id skips the batches that finished.
 4. COMMIT: manifest − rewritten files + batch outputs, one atomic
-   snapshot swap. Old snapshots are untouched (snapshot isolation).
+   snapshot swap (job.py's skeleton, as in compaction and clustering).
+   Old snapshots are untouched (snapshot isolation).
 
-The summary records the seconds of each phase (``phases``), the number
-of batches, the planning side and whether the source was sliced.
+The summary records the seconds of each phase (``phases``: profile,
+probe, rewrite, commit), the number of batches, the planning side and
+whether the source was sliced.
 """
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import os
-import time
-import zlib
 
 import numpy as np
 import pyarrow as pa
@@ -71,8 +72,7 @@ from pyspark.sql import types as T
 
 from ..plans.binpack import pack_bins
 from . import fs as fslayer
-from .compaction import UNITS_PER_JOB, TaskUnit, crash_hook, run_task_units
-from .lineage import LineageLog
+from .job import MaintenanceJob, TaskUnit, _parse_size
 from .metadata import TOKEN_SCHEMA, TokenTable, _strip_scheme, list_parquet_files
 from .skew import salted_latest_by_key
 
@@ -102,23 +102,6 @@ class DuplicateSourceKeys(ValueError):
 
 
 logger = logging.getLogger(__name__)
-
-
-def _parse_size(s: str) -> int:
-    """'48g'/'2gb'/'512m'/'1024k'/bytes → bytes (Spark size-string set).
-
-    Two-letter suffixes must match before single-letter ones: '2gb'
-    previously fell into the trailing-'b' branch and raised on
-    float('2g'), silently dropping the maxResultSize clamp in
-    ``_broadcast_cap``."""
-    s = s.strip().lower()
-    for suffix, mult in (
-        ("gb", 1 << 30), ("mb", 1 << 20), ("kb", 1 << 10),
-        ("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10), ("b", 1),
-    ):
-        if s.endswith(suffix):
-            return int(float(s[: -len(suffix)]) * mult)
-    return int(s)
 
 
 def _broadcast_cap(spark: SparkSession) -> int:
@@ -217,7 +200,7 @@ class _DriverPlan:
         )
         rows = keys.withColumn("_f", F.lit(-1).cast("long"))
         if probe_scan is not None:
-            hits = probe_scan.join(F.broadcast(keys), "doc_id").withColumn("_f", F.crc32("file_path"))
+            hits = probe_scan.join(F.broadcast(keys), "doc_id").withColumn("_f", _file_id_col())
             rows = rows.unionByName(hits.select(*rows.columns))
         t = _collect_arrow(rows)
         f = t["_f"].to_numpy()
@@ -266,9 +249,8 @@ class _DistributedPlan:
     persisted once and grouped per touched file in one collect; after
     packing, its rows tag the source with their batches (``tags``)."""
 
-    def __init__(self, spark, src, prof, probe_scan, max_touched_files):
+    def __init__(self, spark, src, prof, probe_scan):
         self.spark, self.src = spark, src
-        totals = dict.fromkeys(("n_up", "n_del", "n_null"), 0)
         src_keys = src.select(
             "doc_id", "_op", _est_bytes_col().alias("_bytes"),
             (_upsert() & F.col("source").isNull()).cast("long").alias("_null"),
@@ -285,23 +267,15 @@ class _DistributedPlan:
             F.sum("_bytes").alias("bytes"),
             F.sum("_null").alias("n_null"),
         )
-        # at most cap+1 file rows ever reach the driver; over the cap the
-        # caller rewrites every candidate, so only the totals are needed
-        # (one more aggregation, rare path)
-        rows = per_file.limit(max_touched_files + 1).collect()
-        if len(rows) > max_touched_files:
-            self.file_bytes = None
-            rows = per_file.agg(*[F.sum(c).alias(c) for c in totals]).collect()
-        else:
-            self.file_bytes = {r.file_path: int(r.bytes) for r in rows}
-        for r in rows:
-            for c in totals:
-                totals[c] += int(r[c] or 0)
-        if prof["n_null"] > totals["n_null"]:
+        rows = per_file.collect()
+        self.file_bytes = {r.file_path: int(r.bytes) for r in rows}
+        n_up, n_del, n_null = (sum(int(r[c] or 0) for r in rows)
+                               for c in ("n_up", "n_del", "n_null"))
+        if prof["n_null"] > n_null:
             self.close()
             raise _null_source_inserts()
-        self.updated, self.deleted = totals["n_up"], totals["n_del"]
-        self.inserted = int(prof["n_up"] - totals["n_up"])
+        self.updated, self.deleted = n_up, n_del
+        self.inserted = int(prof["n_up"] - n_up)
 
     def tags(self, batches: list[list[str]]) -> DataFrame:
         """(doc_id, _batch) of every matched key and, in batch 0, every
@@ -336,12 +310,17 @@ def _driver_bytes(n: int, key_bytes: int) -> int:
 
 
 def _file_ids(paths: list[str]) -> dict[str, int] | None:
-    """Each path's CRC-32 — Spark's ``crc32`` of the probe's decoded path
-    gives the same value, so a probe match carries 8 bytes instead of its
-    path — or None when two candidates collide (the merge then plans
-    distributed)."""
-    ids = {p: zlib.crc32(p.encode()) for p in paths}
+    """Each path's 60-bit id, the first 15 hex digits of its MD5 —
+    ``_file_id_col`` of the probe's decoded path gives the same value,
+    so a probe match carries 8 bytes instead of its path — or None when
+    two candidates collide (the merge then plans distributed)."""
+    ids = {p: int(hashlib.md5(p.encode()).hexdigest()[:15], 16) for p in paths}
     return ids if len(set(ids.values())) == len(ids) else None
+
+
+def _file_id_col() -> F.Column:
+    """``_file_ids`` in Spark, of the probe's ``file_path``."""
+    return F.conv(F.substring(F.md5("file_path"), 1, 15), 16, 10).cast("long")
 
 
 def _collect_arrow(df: DataFrame) -> pa.Table:
@@ -427,7 +406,6 @@ def merge_into(
     duplicate_policy: str = "error",
     salt: int = 16,
     job_id: str | None = None,
-    max_touched_files: int = 100_000,
     _fail_after_units: int | None = None,
 ) -> dict:
     """``salt`` controls the fan-out of the two-phase dedupe when
@@ -438,42 +416,25 @@ def merge_into(
     log already records a commit returns that commit's result without
     touching the table (exactly-once under foreachBatch replay).
 
-    ``max_touched_files`` caps the driver-side exactly-touched file
-    list; a merge touching more files than that falls back to a
-    partition-granular rewrite set (all candidate files, packed into
-    batches by their manifest bytes alone) so pathological full-table
-    merges can't blow up driver memory.
-
     The summary's ``units_broadcast`` keeps its name for its readers and
     counts the in-task batches (it equals ``batches``); ``planning``
     says where the plan ran (``driver``/``distributed``) and
     ``source_sliced`` whether the tasks read per-batch slices of the
     staged source instead of all of it.
     """
-    parent = table.current_snapshot_id()
-    job_tag = job_id or f"merge-snap{parent}"
-    log = LineageLog(table.root, job_tag)
-    if (prior := log.replayed(table)) is not None:
+    job = MaintenanceJob(spark, table, "merge", job_id, _fail_after_units)
+    if (prior := job.replayed()) is not None:
         return prior
     src = _prepare_source(source_df, duplicate_policy, salt)
-    staging = table.new_data_dir(job_tag) / "_staging"
+    staging = table.new_data_dir(job.tag) / "_staging"
     try:
-        return _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
-                      max_touched_files, _fail_after_units)
+        return _merge(job, src, duplicate_policy, staging)
     finally:
         fslayer.delete_dir(staging)
 
 
-def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
-           max_touched_files, _fail_after_units):
-    phases: dict[str, float] = {}
-    clock = [time.perf_counter()]
-
-    def lap(name: str) -> None:
-        now = time.perf_counter()
-        phases[name] = round(now - clock[0], 3)
-        clock[0] = now
-
+def _merge(job: MaintenanceJob, src: DataFrame, duplicate_policy: str, staging) -> dict:
+    spark, table = job.spark, job.table
     # 1. PROFILE + STAGE — one observed write; it decides driver vs
     # distributed planning before any key is pulled.
     broadcast_cap = _broadcast_cap(spark)
@@ -486,12 +447,12 @@ def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
     on_driver = _driver_bytes(prof["n"], prof["key_bytes"] or 0) <= broadcast_cap
     # Candidate pruning: the manifest's doc_id envelopes that overlap the
     # key range, filtered in Arrow on the driver (no data read).
-    m = table.manifest_table(parent)
+    m = table.manifest_table(job.parent)
     cand = m.filter(pc.and_(pc.greater_equal(m["max_doc_id"], lo),
                             pc.less_equal(m["min_doc_id"], hi)))
     manifest_bytes = dict(zip(cand["file_path"].to_pylist(), cand["file_bytes"].to_pylist()))
     cand_files = sorted(manifest_bytes)
-    lap("profile")
+    job.lap("profile")
 
     # 2. PLAN — the probe reads doc_id + file path of the candidates
     # only; the source key range also pushes into the scan, reaching
@@ -517,45 +478,24 @@ def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
                 # rare failure path — only here do we spend a job finding an example
                 ex = staged.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
                 raise _duplicate_keys(ex[0]["doc_id"])
-        plan = _DistributedPlan(spark, staged, prof, probe_scan, max_touched_files)
-    touched = {}
-    if plan.file_bytes is not None:
-        by_norm = {_strip_scheme(f): f for f in cand_files}
-        touched = {by_norm[p]: b for p, b in plan.file_bytes.items() if p in by_norm}
-    if plan.file_bytes is None or len(touched) > max_touched_files:
-        # partition-granular fallback: rewrite every candidate file in
-        # place of the (too large to plan file-exactly) touched set —
-        # same results, bounded driver memory
-        logger.warning(
-            "merge touches >%d files; falling back to partition-granular "
-            "rewrite over %d candidate files", max_touched_files, len(cand_files)
-        )
-        touched_files = len(cand_files)
-        weights = {f: manifest_bytes[f] for f in cand_files}
-    else:
-        touched_files = len(touched)
-        weights = {f: manifest_bytes[f] + b for f, b in touched.items()}
-    # a batch is one task: first-fit-decreasing under the scan-task size
-    # (a file above it gets a batch of its own)
-    task_bytes = _parse_size(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    batches = [b.files for b in pack_bins(sorted((f, w, 0) for f, w in weights.items()),
-                                          "", task_bytes)]
+        plan = _DistributedPlan(spark, staged, prof, probe_scan)
+    by_norm = {_strip_scheme(f): f for f in cand_files}
+    touched = {by_norm[p]: b for p, b in plan.file_bytes.items() if p in by_norm}
+    # a batch is one task: first-fit-decreasing by manifest plus matched
+    # bytes under the scan-task size (a file above it gets a batch of
+    # its own)
+    task_bytes = job.task_bytes()
+    batches = [b.files for b in pack_bins(
+        sorted((f, manifest_bytes[f] + b, 0) for f, b in touched.items()), "", task_bytes)]
     if not batches and plan.inserted:
         batches = [[]]  # insert-only merge
-    lap("probe")
+    job.lap("probe")
 
     # 3. REWRITE — every pending batch is one in-task rewrite, all of
-    # them in one shuffle-free job (one job per batch under the crash
-    # hook). A unit record counts as done only if it is this plan's
-    # batch over the same files (a record left by another plan of the
-    # same job_id is ignored).
+    # them in one shuffle-free job. Only this plan's batches over the
+    # same files count as done (``MaintenanceJob.done``).
     planned = {f"batch:{i}": files for i, files in enumerate(batches)}
-
-    def finished() -> dict:
-        return {u: r for u, r in log.completed_units().items()
-                if planned.get(u) == r["files_in"]}
-
-    done = finished()
+    done = job.done(planned)
     pending = [i for i in range(len(batches)) if f"batch:{i}" not in done]
     src_files = list_parquet_files(staging / "src")
     # distributed plans hold no insert keys on the driver: their batch 0
@@ -566,8 +506,8 @@ def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
     if sliced and pending:
         apply = _stage_slices(staged, plan.tags(batches), staging / "batches")
     insert = bool(plan.inserted) and (sliced or plan.insert_keys.to_pylist())
-    out_root = table.new_data_dir(job_tag)
-    units = [
+    out_root = table.new_data_dir(job.tag)
+    job.run([
         TaskUnit(
             f"batch:{i}",
             [{"files": batches[i], "apply": apply.get(i, []), "insert": i == 0 and insert,
@@ -576,38 +516,24 @@ def _merge(spark, table, src, parent, duplicate_policy, job_tag, log, staging,
             {"files_rewritten": len(batches[i]), "rows_inserted": plan.inserted if i == 0 else 0},
         )
         for i in pending
-    ]
-    tick = crash_hook(_fail_after_units)
-    run_task_units(spark, log, units, 1 if tick else UNITS_PER_JOB, tick)
+    ])
     plan.close()
-    lap("rewrite")
+    job.lap("rewrite")
 
-    # 4. COMMIT — assemble from lineage (covers resumed batches).
-    done = finished()
-    removed = [f for rec in done.values() for f in rec["files_in"]]
-    new_rows = [row for rec in done.values() for row in rec["new_manifest_rows"]]
-    summary = {
+    # 4. COMMIT
+    done = job.done(planned)
+    return job.commit("merge", {
         "rows_updated": plan.updated,
         "rows_deleted": plan.deleted,
         "rows_inserted": sum(rec["metrics"].get("rows_inserted", 0) for rec in done.values()),
-        "files_rewritten": len(removed), "files_written": len(new_rows),
-        "candidate_files": len(cand_files), "touched_files": touched_files,
+        "files_rewritten": sum(len(rec["files_in"]) for rec in done.values()),
+        "candidate_files": len(cand_files), "touched_files": len(touched),
         "broadcast_cap": broadcast_cap,
         "units_broadcast": len(batches),
         "batches": len(batches),
         "planning": "distributed" if isinstance(plan, _DistributedPlan) else "driver",
         "source_sliced": sliced,
-        "job_tag": job_tag,
-        # the snapshot summary gets the phases so far; the commit's own
-        # seconds land in the same dict for the lineage event and result
-        "phases": phases,
-    }
-    sid = table.commit_delta(
-        removed, new_rows, operation="merge", summary=summary, parent_id=parent
-    )
-    lap("commit")
-    log.log_event("committed", snapshot_id=sid, **summary)
-    return {"snapshot_id": sid, **summary}
+    }, done)
 
 
 def _probe_file_path() -> F.Column:

@@ -57,11 +57,15 @@ def _rewrite_path(spark, table, path: str):
 
 def _assert_path(table, result: dict, path: str) -> None:
     """Which path ran, as the summary, the snapshot summary and the
-    ``committed`` lineage event report it."""
+    ``committed`` lineage event report it; the phases of the job (the
+    snapshot summary is written before the commit's own lap)."""
     want = result["units"] if path == "shuffle" else 0
+    snap = table.snapshots()[-1]["summary"]
     assert result["units_shuffled"] == want
-    assert table.snapshots()[-1]["summary"]["units_shuffled"] == want
+    assert snap["units_shuffled"] == want
     assert LineageLog(table.root, result["job_tag"]).committed()["units_shuffled"] == want
+    assert set(result["phases"]) == {"plan", "rewrite", "commit"}
+    assert set(snap["phases"]) == {"plan", "rewrite"}
 
 
 def test_zorder_matches_slow_reference():

@@ -1,5 +1,5 @@
-"""Commit idempotence under job replay, lock-steal safety, and grouped
-binpack execution.
+"""Commit idempotence under job replay, lock-steal safety, grouped
+binpack execution and the one job skeleton that owns the protocol.
 
 The replay tests model the foreachBatch crash window: Structured
 Streaming re-runs a batch whose MERGE already committed (the crash hit
@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_engineering_poc_spark.lakehouse import (
+    TokenTable,
     assert_scan_equivalent,
     scan_fingerprint,
     write_token_table,
@@ -33,6 +34,10 @@ def _upsert_source(spark, table, frac_mod=10):
         "source",
         F.lit("upsert").alias("_op"),
     )
+
+
+def _no_manifest_read(*_args, **_kw):
+    raise AssertionError("manifest read")
 
 
 def _assert_manifest_unique_files(spark, table):
@@ -67,10 +72,13 @@ def test_compact_replay_is_noop(spark, tmp_path):
     _assert_manifest_unique_files(spark, t)
 
 
-def test_cluster_replay_is_noop(spark, tmp_path):
+def test_cluster_replay_is_noop(spark, tmp_path, monkeypatch):
     t = write_token_table(spark, tmp_path / "t", n_rows=1000, files_per_source=3, max_tok=32)
     r1 = cluster(spark, t, curve="zorder", job_id="z-1")
-    r2 = cluster(spark, t, curve="zorder", job_id="z-1")
+    # the replay returns before planning reads any manifest
+    with monkeypatch.context() as mp:
+        mp.setattr(TokenTable, "manifest_table", _no_manifest_read)
+        r2 = cluster(spark, t, curve="zorder", job_id="z-1")
     assert r2["snapshot_id"] == r1["snapshot_id"]
     assert t.current_snapshot_id() == r1["snapshot_id"]
     _assert_manifest_unique_files(spark, t)
@@ -89,28 +97,6 @@ def test_merge_resume_after_commit_crash_window(spark, tmp_path):
     merge_into(spark, t, src, duplicate_policy="last", job_id="stream-q-batch0")
     assert t.current_snapshot_id() == sid
     assert_scan_equivalent(expect, t.scan(spark))
-
-
-def test_merge_touched_file_cap_fallback(spark, tmp_path, caplog, monkeypatch):
-    """Over-cap merges fall back to rewriting all candidate files —
-    bounded driver memory, identical results — under driver-side and
-    (broadcast cap 0) distributed planning alike."""
-    import logging
-
-    t1 = write_token_table(spark, tmp_path / "a", n_rows=1000, files_per_source=3, max_tok=32)
-    r_exact = merge_into(spark, t1, _upsert_source(spark, t1))
-    for name, cap in (("b", None), ("c", "0")):
-        if cap is not None:
-            monkeypatch.setenv("FEPOC_MERGE_BROADCAST_CAP", cap)
-        t2 = write_token_table(spark, tmp_path / name, n_rows=1000, files_per_source=3, max_tok=32)
-        caplog.clear()
-        with caplog.at_level(logging.WARNING):
-            r_capped = merge_into(spark, t2, _upsert_source(spark, t2), max_touched_files=1)
-        assert any("partition-granular" in rec.message for rec in caplog.records)
-        assert r_capped["touched_files"] >= r_exact["touched_files"]
-        for k in ("rows_updated", "rows_deleted", "rows_inserted"):
-            assert r_capped[k] == r_exact[k]
-        assert_scan_equivalent(t1.scan(spark), t2.scan(spark))
 
 
 def test_merge_null_source_insert_fails_fast(spark, tmp_path, monkeypatch):
@@ -148,10 +134,11 @@ def test_stale_lock_break_leaves_no_debris(spark, tmp_path, monkeypatch):
 
 
 def test_binpack_units_group_into_shared_jobs(spark, tmp_path, monkeypatch):
-    """N pending partition units run in ceil(N / units_per_job) Spark
+    """N pending partition units run in ceil(N / UNITS_PER_JOB) Spark
     jobs — the metadata-level grouping that keeps a 10^5-partition
     table from submitting 10^5 jobs."""
     from feature_engineering_poc_spark.lakehouse import compaction as comp
+    from feature_engineering_poc_spark.lakehouse import job as job_mod
 
     calls = []
     real = comp._rewrite_bins_distributed
@@ -164,17 +151,19 @@ def test_binpack_units_group_into_shared_jobs(spark, tmp_path, monkeypatch):
 
     t = write_token_table(spark, tmp_path / "t", n_rows=1200, files_per_source=4, max_tok=32)
     before = scan_fingerprint(t.scan(spark))
-    # 4 source partitions, units_per_job=2 → exactly ceil(4/2)=2 jobs
-    r = compact(spark, t, target_file_bytes=64 * 1024 * 1024, units_per_job=2)
+    # 4 source partitions, UNITS_PER_JOB=2 → exactly ceil(4/2)=2 jobs
+    with monkeypatch.context() as mp:
+        mp.setattr(job_mod, "UNITS_PER_JOB", 2)
+        r = compact(spark, t, target_file_bytes=64 * 1024 * 1024)
     assert r["units"] == 4
     assert len(calls) == 2
     after = scan_fingerprint(t.scan(spark))
     assert (after.row_count, after.xor_hash) == (before.row_count, before.xor_hash)
 
-    # one big chunk: all units in ONE job
+    # one big chunk (the default 64): all units in ONE job
     calls.clear()
     t2 = write_token_table(spark, tmp_path / "t2", n_rows=1200, files_per_source=4, max_tok=32)
-    compact(spark, t2, target_file_bytes=64 * 1024 * 1024, units_per_job=64)
+    compact(spark, t2, target_file_bytes=64 * 1024 * 1024)
     assert len(calls) == 1
 
 
@@ -243,3 +232,24 @@ def test_commit_delta_scheme_normalization(spark, tmp_path):
     t.commit_delta(["file://" + victim], [], operation="test-remove")
     assert len(t.manifest_records(spark)) == n_before - 1
     assert victim not in {r["file_path"] for r in t.manifest_records(spark)}
+
+
+def test_one_job_skeleton_commits():
+    """The exactly-once protocol lives in one module: among the lakehouse
+    modules only job.py opens a lineage log, and table commits come from
+    job.py plus the ops that run no units (expiry and manifest rewrite,
+    the generator's initial commit)."""
+    import ast
+    from pathlib import Path
+
+    from feature_engineering_poc_spark import lakehouse
+
+    callers: dict[str, set[str]] = {"commit_delta": set(), "LineageLog": set()}
+    for path in Path(lakehouse.__file__).parent.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "attr", getattr(node.func, "id", None))
+                if name in callers:
+                    callers[name].add(path.name)
+    assert callers == {"commit_delta": {"job.py", "expire.py", "generator.py"},
+                       "LineageLog": {"job.py"}}

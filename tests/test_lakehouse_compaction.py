@@ -50,6 +50,9 @@ def test_compaction_scan_equivalence_and_isolation(spark, table):
     result = compact(spark, table, target_file_bytes=64 * 1024 * 1024)
     assert result["snapshot_id"] == pre_sid + 1
     assert result["files_written"] < result["files_compacted"]
+    # phases: the snapshot summary is written before the commit's own lap
+    assert set(result["phases"]) == {"plan", "rewrite", "commit"}
+    assert set(table.snapshot()["summary"]["phases"]) == {"plan", "rewrite"}
 
     # post-maintenance scan equivalence (token-array equality per row)
     assert_scan_equivalent(table.scan(spark, pre_sid), table.scan(spark))

@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from feature_engineering_poc_spark.lakehouse import job as job_mod
 from feature_engineering_poc_spark.lakehouse import merge as merge_mod
 from feature_engineering_poc_spark.lakehouse import write_token_table
 from feature_engineering_poc_spark.lakehouse.generator import token_dataframe
@@ -174,10 +175,8 @@ def test_merge_empty_source_noop(spark, table):
 
 
 def test_broadcast_cap_heap_aware(spark, monkeypatch):
-    from feature_engineering_poc_spark.lakehouse.merge import (
-        _broadcast_cap,
-        _parse_size,
-    )
+    from feature_engineering_poc_spark.lakehouse.job import _parse_size
+    from feature_engineering_poc_spark.lakehouse.merge import _broadcast_cap
 
     assert _parse_size("48g") == 48 << 30
     assert _parse_size("512m") == 512 << 20
@@ -217,7 +216,7 @@ def test_merge_special_chars_in_table_root(spark, tmp_path):
 
 
 def test_parse_size_two_letter_suffixes():
-    from feature_engineering_poc_spark.lakehouse.merge import _parse_size
+    from feature_engineering_poc_spark.lakehouse.job import _parse_size
 
     assert _parse_size("2gb") == 2 << 30
     assert _parse_size("512mb") == 512 << 20
@@ -349,13 +348,13 @@ def test_merge_crash_hook_keeps_batch_plan(spark, table, monkeypatch):
     how they are cut: the units of a crashing run equal those of a plain
     run of the same merge."""
     seen: list[list] = []
-    real = merge_mod.run_task_units
+    real = job_mod.run_task_units
 
     def spy(spark_, log, units, *args):
         seen.append([(u.name, u.files_in) for u in units])
         return real(spark_, log, units, *args)
 
-    monkeypatch.setattr(merge_mod, "run_task_units", spy)
+    monkeypatch.setattr(job_mod, "run_task_units", spy)
     src = _source(spark, table, upd_tok=48).persist()
     with _task_bytes(spark, _multi_batch_bytes(spark, table)):
         with pytest.raises(RuntimeError, match="injected failure"):
@@ -483,6 +482,20 @@ def test_merge_file_id_collision_plans_distributed(spark, table, monkeypatch):
     src.unpersist()
     assert not collected and r["rows_inserted"] == 100
     _assert_table_is(spark, table, expect)
+
+
+def test_file_ids_distinct_at_scale():
+    """200k distinct part-file paths get distinct ids, so driver planning
+    is not lost to an id collision at production file counts (CRC-32
+    ids of these paths collide)."""
+    import random
+    import uuid
+
+    rng = random.Random(0)
+    paths = [f"/lake/t/data/source=s{i % 7}/part-{i:05d}-"
+             f"{uuid.UUID(int=rng.getrandbits(128))}.c000.zstd.parquet"
+             for i in range(200_000)]
+    assert merge_mod._file_ids(paths) is not None
 
 
 def test_merge_ignores_unit_records_of_another_plan(spark, table, monkeypatch):
