@@ -31,11 +31,10 @@ from collections import defaultdict
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from ..plans.binpack import pack_bins
 from .job import MaintenanceJob, TaskUnit
-from .metadata import MANIFEST_SCHEMA, TokenTable
+from .metadata import TokenTable
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -65,97 +64,96 @@ def _rewrite_bins_distributed(
 
     Rewrites are embarrassingly parallel across bins: no shuffle, no
     range-sampling pass, parallelism = number of bins (at 100 TB:
-    hundreds of thousands).
+    hundreds of thousands). Inside a task, a spec's outputs are built
+    and written on a thread pool of ``min(outputs, cores)`` threads
+    (pyarrow's take and parquet write release the GIL), so the cores
+    that finish the small specs early help write a skewed unit's slices;
+    each thread holds one slice, never a sorted copy of the whole unit.
     """
     import json as _json
 
-    import pandas as pd
+    def kernel(rows):
+        import os
+        from concurrent.futures import ThreadPoolExecutor
 
-    def kernel(batches):
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         from feature_engineering_poc_spark.lakehouse import fs as fslayer
 
+        def write(idx: int, path: str, partition: str, make) -> dict:
+            part = make()
+            # zstd: rewritten files are cold data — trade CPU (which
+            # scales with executors) for bytes (which cost forever)
+            n_bytes = fslayer.write_parquet(part, path, compression="zstd")
+            doc = part.column("doc_id")
+            ntk = part.column("n_tok")
+            zk = part.column("zkey") if "zkey" in part.column_names else None
+            return {
+                "file_path": path,
+                "partition": partition,
+                "record_count": part.num_rows,
+                "file_bytes": n_bytes,
+                "min_doc_id": pc.min(doc).as_py(),
+                "max_doc_id": pc.max(doc).as_py(),
+                "min_n_tok": pc.min(ntk).as_py(),
+                "max_n_tok": pc.max(ntk).as_py(),
+                "min_zkey": None if zk is None else pc.min(zk).as_py(),
+                "max_zkey": None if zk is None else pc.max(zk).as_py(),
+                "_spec": idx,
+            }
+
         cols = ["doc_id", "tokens", "n_tok", "source"]
-        for pdf in batches:
-            out = []
-            for idx, spec_json in zip(pdf["idx"], pdf["spec"]):
-                spec = _json.loads(spec_json)
-                # fs layer: inputs/outputs may be local paths or
-                # file://-or-object-store URIs (fs.py)
-                tables = [fslayer.read_parquet(f, columns=cols) for f in spec["files"]]
-                if "apply" in spec:
-                    from feature_engineering_poc_spark.lakehouse.merge import _merge_in_task
+        for idx, spec_json in rows:
+            spec = _json.loads(spec_json)
+            # fs layer: inputs/outputs may be local paths or
+            # file://-or-object-store URIs (fs.py). Reads stay sequential.
+            tables = [fslayer.read_parquet(f, columns=cols) for f in spec["files"]]
+            if "apply" in spec:
+                from feature_engineering_poc_spark.lakehouse.merge import _merge_in_task
 
-                    slices = _merge_in_task(spec, tables)
-                elif spec.get("key") is None:
-                    tbl = pa.concat_tables(tables)
-                    tbl = tbl.take(pc.sort_indices(tbl.column("doc_id")))
-                    slices = [(spec["outs"][0], spec["partition"], tbl)]
-                else:
-                    from feature_engineering_poc_spark.lakehouse.clustering import (
-                        _table_keys,
-                    )
+                slices = [(path, partition, lambda t=t: t)
+                          for path, partition, t in _merge_in_task(spec, tables)]
+            elif spec.get("key") is None:
+                tbl = pa.concat_tables(tables)
+                slices = [(spec["outs"][0], spec["partition"],
+                           lambda: tbl.take(pc.sort_indices(tbl.column("doc_id"))))]
+            else:
+                from feature_engineering_poc_spark.lakehouse.clustering import _table_keys
 
-                    tbl = pa.concat_tables(tables)
-                    outs = spec["outs"]
-                    zkey = _table_keys(spec["key"], tbl)
-                    # ties broken by the unique doc_id: the output does
-                    # not depend on the order of the unit's files
-                    order = pc.sort_indices(
-                        pa.table({"z": zkey, "d": tbl.column("doc_id")}),
-                        sort_keys=[("z", "ascending"), ("d", "ascending")],
-                    ).to_numpy()
-                    # drop the inputs' Spark row schema (it omits zkey and
-                    # would hide the column from Spark schema inference)
-                    tbl = (tbl.take(order).replace_schema_metadata(None)
-                           .append_column("zkey", pa.array(zkey[order])))
-                    n, k = tbl.num_rows, max(1, min(len(outs), tbl.num_rows))
-                    cuts = [i * n // k for i in range(k + 1)]
-                    slices = [(outs[i], spec["partition"],
-                               tbl.slice(cuts[i], cuts[i + 1] - cuts[i]))
-                              for i in range(k)]
-                for path, partition, part in slices:
-                    # zstd: rewritten files are cold data — trade CPU (which
-                    # scales with executors) for bytes (which cost forever)
-                    n_bytes = fslayer.write_parquet(part, path, compression="zstd")
-                    doc = part.column("doc_id")
-                    ntk = part.column("n_tok")
-                    zk = part.column("zkey") if "zkey" in part.column_names else None
-                    out.append(
-                        {
-                            "file_path": path,
-                            "partition": partition,
-                            "record_count": part.num_rows,
-                            "file_bytes": n_bytes,
-                            "min_doc_id": pc.min(doc).as_py(),
-                            "max_doc_id": pc.max(doc).as_py(),
-                            "min_n_tok": pc.min(ntk).as_py(),
-                            "max_n_tok": pc.max(ntk).as_py(),
-                            "min_zkey": None if zk is None else pc.min(zk).as_py(),
-                            "max_zkey": None if zk is None else pc.max(zk).as_py(),
-                            "_spec": idx,
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+                # drop the inputs' Spark row schema (it omits zkey and
+                # would hide the column from Spark schema inference)
+                tbl = pa.concat_tables(tables).replace_schema_metadata(None)
+                outs = spec["outs"]
+                zkey = _table_keys(spec["key"], tbl)
+                # ties broken by the unique doc_id: the output does
+                # not depend on the order of the unit's files
+                order = pc.sort_indices(
+                    pa.table({"z": zkey, "d": tbl.column("doc_id")}),
+                    sort_keys=[("z", "ascending"), ("d", "ascending")],
+                ).to_numpy()
+                n, k = tbl.num_rows, max(1, min(len(outs), tbl.num_rows))
+                cuts = [i * n // k for i in range(k + 1)]
 
-    out_schema = T.StructType(
-        MANIFEST_SCHEMA.fields + [T.StructField("_spec", T.IntegerType())]
-    )
-    # Slices = 4×parallelism (capped by bin count): several bins ride
-    # one task, cutting per-task launch/Arrow overhead ~an order of
-    # magnitude vs task-per-bin while keeping 4 waves for balance.
-    # parallelize (not repartition): no round-robin shuffle, no barrier.
+                def cut(i: int):
+                    at = order[cuts[i]:cuts[i + 1]]
+                    return tbl.take(at).append_column("zkey", pa.array(zkey[at]))
+
+                slices = [(outs[i], spec["partition"], lambda i=i: cut(i)) for i in range(k)]
+            # a MERGE batch whose rows are all deleted has no outputs
+            with ThreadPoolExecutor(max(1, min(len(slices), os.cpu_count() or 1))) as pool:
+                yield from pool.map(lambda s: write(idx, *s), slices)
+
+    # Several specs ride one task (up to 4 waves of tasks, capped by the
+    # spec count): fewer task launches than task-per-spec, and the waves
+    # keep the cores busy when spec sizes differ. parallelize + mapPartitions:
+    # no shuffle, and each task runs one Python worker.
     n_slices = max(1, min(len(bin_specs), spark.sparkContext.defaultParallelism * 4))
     rdd = spark.sparkContext.parallelize(
         [(i, _json.dumps(s)) for i, s in enumerate(bin_specs)], n_slices
     )
-    specs_df = spark.createDataFrame(rdd, "idx int, spec string")
     per_spec: list[list[dict]] = [[] for _ in bin_specs]
-    for r in specs_df.mapInPandas(kernel, out_schema).collect():
-        row = r.asDict()
+    for row in rdd.mapPartitions(kernel).collect():
         per_spec[row.pop("_spec")].append(row)
     return per_spec
 

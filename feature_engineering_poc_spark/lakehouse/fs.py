@@ -121,22 +121,19 @@ def delete_files(
     distributed_threshold: int = DELETE_DISTRIBUTED_THRESHOLD,
 ) -> None:
     """Delete many files: driver loop for planning-sized lists, a
-    ``foreachPartition`` fan-out beyond the threshold (each executor
-    task resolves its own filesystem handle — no driver serialization
-    of fs state)."""
+    ``foreachPartition`` fan-out beyond the threshold — one Spark job of
+    one stage, no shuffle (each executor task resolves its own
+    filesystem handle — no driver serialization of fs state)."""
     if spark is None or len(paths) <= distributed_threshold:
         for f in paths:
             delete(f)
         return
 
-    def _delete_iter(rows) -> None:
+    def _delete_iter(part) -> None:
         from feature_engineering_poc_spark.lakehouse import fs as _fs
 
-        for row in rows:
-            _fs.delete(row.file_path)
+        for path in part:
+            _fs.delete(path)
 
-    (
-        spark.createDataFrame([(p,) for p in paths], "file_path string")
-        .repartition(max(1, min(len(paths) // 2000, 256)))
-        .foreachPartition(_delete_iter)
-    )
+    n = max(1, min(len(paths) // 2000, 256))
+    spark.sparkContext.parallelize(paths, n).foreachPartition(_delete_iter)

@@ -176,11 +176,13 @@ class TokenTable:
         return None
 
     def manifest_df(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        """The manifest of a snapshot as a DataFrame (metadata-level plan input)."""
-        snap = self.snapshot(snapshot_id)
-        if snap["manifest"] is None:
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(str(self.root / snap["manifest"]))
+        """The manifest of a snapshot as a DataFrame (metadata-level plan
+        input): ``manifest_table`` handed to Spark as a local relation, so
+        filters and projections over it (``clustering.prune_files``) fold
+        into it on the driver and collecting them runs no Spark job.
+        Above ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB
+        of Arrow batches) Spark distributes the table as an RDD instead."""
+        return spark.createDataFrame(self.manifest_table(snapshot_id), MANIFEST_SCHEMA)
 
     def data_files(self, spark: SparkSession, snapshot_id: int | None = None) -> list[str]:
         """File list of a snapshot. Driver-side planning, like Iceberg's."""
@@ -232,10 +234,11 @@ class TokenTable:
         """Snapshot-pinned table scan.
 
         File-level min/max pruning happens BEFORE Catalyst sees the
-        scan: callers filter ``manifest_df`` and pass the surviving
-        ``files`` (see plans in compaction/merge/clustering). Catalyst
-        still gets row-group pruning + column pruning on the parquet
-        scan itself.
+        scan: callers filter the manifest on the driver (``manifest_table``
+        in the maintenance planners, ``prune_files`` over ``manifest_df``
+        for reads; neither runs a Spark job) and pass the surviving
+        ``files``. Catalyst still gets row-group pruning + column pruning
+        on the parquet scan itself.
         """
         if files is None:
             files = self.data_files(spark, snapshot_id)

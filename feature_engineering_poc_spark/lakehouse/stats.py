@@ -104,9 +104,10 @@ def file_stats_df(
 
 # Below this many files a footer-stats pass is cheaper on the driver
 # (one ~KB footer read per file, sub-ms each) than as a Spark job —
-# createDataFrame + repartition + mapInPandas + collect costs a fixed
-# few hundred ms per call, which dominates maintenance ops on small
-# tables (and every streaming microbatch).
+# createDataFrame + repartition + mapInPandas + collect is two stages
+# (a round-robin shuffle, then a Python worker per task) and costs a
+# fixed few hundred ms per call, which would dominate the small-table
+# calls of rewrite_manifests and of the shuffle-path clustering units.
 SMALL_STATS_FILES = 256
 
 

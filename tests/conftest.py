@@ -9,6 +9,9 @@ exercised.
 
 from __future__ import annotations
 
+import hashlib
+from pathlib import Path
+
 import pytest
 
 from feature_engineering_poc_spark.session import get_session
@@ -29,3 +32,33 @@ def last_job_id(spark) -> int:
     sc.listenerBus().waitUntilEmpty()
     jobs = sc.statusStore().jobsList(None)
     return max((jobs.apply(i).jobId() for i in range(jobs.length())), default=-1)
+
+
+def stages_per_job(spark, after: int) -> list[int]:
+    """Stage count of every Spark job newer than job id ``after``."""
+    tracker = spark.sparkContext.statusTracker()
+    return [len(tracker.getJobInfo(j).stageIds) for j in range(after + 1, last_job_id(spark) + 1)]
+
+
+def spy_rewrites(monkeypatch, check=None) -> list[tuple[list[dict], list[list[dict]]]]:
+    """Record every in-task rewrite job's specs and returned manifest
+    rows; ``check(specs, rows)`` runs right after each job, while the
+    op's staged inputs still exist."""
+    from feature_engineering_poc_spark.lakehouse import compaction
+
+    calls = []
+    real = compaction._rewrite_bins_distributed
+
+    def spy(spark, specs):
+        rows = real(spark, specs)
+        if check is not None:
+            check(specs, rows)
+        calls.append((specs, rows))
+        return rows
+
+    monkeypatch.setattr(compaction, "_rewrite_bins_distributed", spy)
+    return calls
+
+
+def sha256(path) -> str:
+    return hashlib.sha256(Path(path).read_bytes()).hexdigest()

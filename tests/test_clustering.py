@@ -11,6 +11,9 @@ from collections import defaultdict
 from pathlib import Path
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,7 +22,7 @@ from feature_engineering_poc_spark.lakehouse import (
     assert_scan_equivalent,
     write_token_table,
 )
-from feature_engineering_poc_spark.lakehouse.clustering import cluster, prune_files
+from feature_engineering_poc_spark.lakehouse.clustering import _table_keys, cluster, prune_files
 from feature_engineering_poc_spark.lakehouse.lineage import LineageLog
 from feature_engineering_poc_spark.plans.sfc import (
     hilbert_index,
@@ -27,7 +30,7 @@ from feature_engineering_poc_spark.plans.sfc import (
     string_prefix_ordinal,
 )
 
-from tests.conftest import last_job_id
+from tests.conftest import last_job_id, sha256, spy_rewrites
 
 PATHS = ["task", "shuffle"]
 
@@ -236,6 +239,32 @@ def test_cluster_task_path_one_job_equal_slices(spark, tmp_path):
     assert {p: len(c) for p, c in rows.items()} == n_out
     for part, counts in rows.items():
         assert max(counts) - min(counts) <= 1, (part, counts)
+
+
+def test_cluster_slices_match_serial_reference(spark, tmp_path, monkeypatch):
+    """Each in-task slice takes and writes its own rows on the task's
+    thread pool; the files are byte-identical to a serial pyarrow
+    rewrite: one take of the whole sorted unit, ``slice``, zstd."""
+    t = write_token_table(spark, tmp_path / "t", n_rows=4000, files_per_source=6, max_tok=128)
+    calls = spy_rewrites(monkeypatch)
+    result = cluster(spark, t, curve="hilbert", target_file_bytes=16 * 1024)
+    _assert_path(t, result, "task")
+    specs = [s for job_specs, _ in calls for s in job_specs]
+    assert max(len(s["outs"]) for s in specs) > 1
+    ref_path = tmp_path / "ref.parquet"
+    for spec in specs:
+        tbl = pa.concat_tables([pq.read_table(f, columns=["doc_id", "tokens", "n_tok", "source"])
+                                for f in spec["files"]])
+        zkey = _table_keys(spec["key"], tbl)
+        order = pc.sort_indices(pa.table({"z": zkey, "d": tbl["doc_id"]}),
+                                sort_keys=[("z", "ascending"), ("d", "ascending")]).to_numpy()
+        ref = (tbl.take(order).replace_schema_metadata(None)
+               .append_column("zkey", pa.array(zkey[order])))
+        n, k = ref.num_rows, len(spec["outs"])
+        for i, out in enumerate(spec["outs"]):
+            lo, hi = i * n // k, (i + 1) * n // k
+            pq.write_table(ref.slice(lo, hi - lo), ref_path, compression="zstd")
+            assert sha256(out) == sha256(ref_path), out
 
 
 def test_cluster_paths_agree_on_keys(spark, tmp_path):

@@ -13,6 +13,7 @@ from feature_engineering_poc_spark.lakehouse import (
 from feature_engineering_poc_spark.lakehouse import fs as fslayer
 from feature_engineering_poc_spark.lakehouse.compaction import compact
 from feature_engineering_poc_spark.lakehouse.expire import expire_snapshots
+from tests.conftest import last_job_id, stages_per_job
 
 
 def _to_uri_manifest(spark, table):
@@ -64,7 +65,9 @@ def test_delete_files_distributed_path(spark, tmp_path):
         p = tmp_path / f"f{i}.bin"
         p.write_bytes(b"x")
         paths.append(("file://" + str(p)) if i % 2 else str(p))
+    before = last_job_id(spark)
     fslayer.delete_files(paths, spark=spark, distributed_threshold=5)
+    assert stages_per_job(spark, before) == [1]  # one job, one stage: no shuffle
     assert not list(tmp_path.glob("f*.bin"))
     # idempotent: re-deleting missing files is a no-op on both paths
     fslayer.delete_files(paths, spark=spark, distributed_threshold=5)

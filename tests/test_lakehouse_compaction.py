@@ -11,9 +11,11 @@ from feature_engineering_poc_spark.lakehouse import (
     scan_fingerprint,
     write_token_table,
 )
+from feature_engineering_poc_spark.lakehouse.clustering import prune_files
 from feature_engineering_poc_spark.lakehouse.compaction import compact
 from feature_engineering_poc_spark.lakehouse.lineage import LineageLog
-from feature_engineering_poc_spark.lakehouse.metadata import SnapshotConflict
+from feature_engineering_poc_spark.lakehouse.metadata import MANIFEST_SCHEMA, SnapshotConflict
+from tests.conftest import last_job_id, stages_per_job
 
 
 @pytest.fixture(scope="module")
@@ -34,6 +36,39 @@ def test_generator_creates_small_files_and_manifest(spark, table):
         assert r.min_doc_id <= r.max_doc_id
         assert r.min_n_tok <= r.max_n_tok
         assert r.file_bytes > 0
+
+
+def test_manifest_df_is_manifest_table(spark, table):
+    """``manifest_df`` is ``manifest_table`` row for row; a snapshot
+    without a manifest (0) gives an empty frame of ``MANIFEST_SCHEMA``."""
+    m = table.manifest_df(spark)
+    assert m.schema == MANIFEST_SCHEMA
+    assert [r.asDict() for r in m.collect()] == table.manifest_table().to_pylist()
+    empty = table.manifest_df(spark, 0)
+    assert empty.schema == MANIFEST_SCHEMA and empty.collect() == []
+
+
+def test_prune_files_runs_no_spark_job(spark, table):
+    """Read planning filters the manifest on the driver: collecting the
+    pruned manifest launches no Spark job."""
+    m = table.manifest_df(spark)
+    before = last_job_id(spark)
+    kept = prune_files(m, n_tok_range=(8, 16), doc_id_range=("doc0", "doc9")).collect()
+    assert last_job_id(spark) == before
+    want = [r["file_path"] for r in table.manifest_table().to_pylist()
+            if r["max_n_tok"] >= 8 and r["min_n_tok"] <= 16
+            and r["max_doc_id"] >= "doc0" and r["min_doc_id"] <= "doc9"]
+    assert 0 < len(kept) and [r.file_path for r in kept] == want
+
+
+def test_in_task_chunk_one_job_one_stage(spark, tmp_path):
+    """Every unit of a compaction rides one in-task chunk: one Spark job
+    of one stage, no shuffle."""
+    t = write_token_table(spark, tmp_path / "t", n_rows=1200, files_per_source=4, max_tok=32)
+    before = last_job_id(spark)
+    r = compact(spark, t, target_file_bytes=64 * 1024 * 1024)
+    assert r["units"] == 4
+    assert stages_per_job(spark, before) == [1]
 
 
 def test_scan_matches_rowcount(spark, table):

@@ -22,7 +22,7 @@ from feature_engineering_poc_spark.lakehouse.merge import (
     merge_into,
 )
 from feature_engineering_poc_spark.lakehouse.skew import hot_keys, salted_latest_by_key
-from tests.conftest import last_job_id
+from tests.conftest import last_job_id, sha256, spy_rewrites
 
 
 @pytest.fixture()
@@ -515,3 +515,35 @@ def test_merge_ignores_unit_records_of_another_plan(spark, table, monkeypatch):
     src.unpersist()
     assert r["rows_inserted"] == 100
     _assert_table_is(spark, table, expect)
+
+
+def test_merge_outputs_match_serial_reference(spark, table, monkeypatch, tmp_path):
+    """A batch's per-``source`` outputs are written on the task's thread
+    pool; each file is byte-identical to the same rows
+    (``_merge_in_task``) written serially with zstd."""
+    ref_path = tmp_path / "ref.parquet"
+    outputs = []
+
+    def check(specs, rows):  # runs while the staged source exists
+        for spec, spec_rows in zip(specs, rows):
+            tables = [pq.read_table(f, columns=["doc_id", "tokens", "n_tok", "source"])
+                      for f in spec["files"]]
+            ref = merge_mod._merge_in_task(spec, tables)
+            assert [r["file_path"] for r in spec_rows] == [p for p, _, _ in ref]
+            outputs.append(len(ref))
+            for row, (_, _, part) in zip(spec_rows, ref):
+                pq.write_table(part, ref_path, compression="zstd")
+                assert sha256(row["file_path"]) == sha256(ref_path), row["file_path"]
+
+    spy_rewrites(monkeypatch, check)
+    r = merge_into(spark, table, _source(spark, table))
+    assert r["rows_updated"] > 0 and max(outputs) > 1
+
+
+def test_merge_deleting_every_row_writes_nothing(spark, table):
+    """A batch whose rows are all deleted has no outputs: its files
+    leave the manifest and nothing is written."""
+    src = table.scan(spark).withColumn("_op", F.lit("delete"))
+    r = merge_into(spark, table, src)
+    assert (r["rows_deleted"], r["files_written"]) == (1000, 0)
+    assert table.manifest_table().num_rows == 0 and table.scan(spark).count() == 0

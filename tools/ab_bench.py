@@ -15,8 +15,12 @@ each side's median and quartiles, the ratio of the medians, the pairs
 the head side won (ties count for neither side), and whether the
 medians differ by more than the base side's interquartile range. Runs
 that are not ``correct`` or report failed operations are counted and
-listed. ``--out`` keeps every run's result with its benchmark record.
-Nothing under ``perfbench/`` is changed.
+listed. Below the metrics, each side's median seconds per op kind
+(``compaction``, ``clustering``, ``read``, ``merge``, ``merge_skewed``,
+``sink``, ``expire``: a run's calls of the kind summed, from the run's
+record) show which op a difference comes from. ``--out`` keeps every
+run's result with its benchmark record. Nothing under ``perfbench/`` is
+changed.
 """
 
 from __future__ import annotations
@@ -87,6 +91,17 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def op_seconds(result: dict) -> dict[str, float]:
+    """Seconds per op kind in one run: the record's timed ops summed by
+    the part of their name before the first dot (``read``,
+    ``compaction.compact`` → ``compaction``, ``merge_skewed``)."""
+    out: dict[str, float] = {}
+    for name, wall_s in result.get("record", {}).get("ops", []):
+        kind = name.split(".")[0]
+        out[kind] = out.get(kind, 0.0) + wall_s
+    return out
+
+
 def report(workload: str, pairs: list[dict], metrics: list[dict]) -> list[str]:
     """Summary lines of one workload's pairs."""
     ok = [p for p in pairs
@@ -115,6 +130,17 @@ def report(workload: str, pairs: list[dict], metrics: list[dict]) -> list[str]:
         out.append(f"   {name:18s} {'%.4g/%.4g/%.4g' % bq:>28s} {'%.4g/%.4g/%.4g' % hq:>28s} "
                    f"{hq[1] / bq[1] if bq[1] else float('nan'):7.3f} "
                    f"{wins:>3d}/{len(vals):<2d} {'yes' if gap else 'no'}")
+    per_op = {side: [op_seconds(p[side]) for p in ok] for side in ("base", "head")}
+    kinds = list(dict.fromkeys(k for runs in per_op.values() for run in runs for k in run))
+    if kinds:
+        out.append(f"   {'op (s per run)':18s} {'base median':>12s} {'head median':>12s} {'ratio':>7s}")
+    for kind in kinds:
+        base, head = ([run[kind] for run in per_op[side] if kind in run] for side in ("base", "head"))
+        if not base or not head:
+            out.append(f"   {kind:18s} only on one side")
+            continue
+        bm, hm = statistics.median(base), statistics.median(head)
+        out.append(f"   {kind:18s} {bm:12.3f} {hm:12.3f} {hm / bm if bm else float('nan'):7.3f}")
     return out
 
 
